@@ -392,7 +392,6 @@ def _pair_counts_broadcast(
                 cuts.append(max(nxt, cuts[-1] + 1))
             for s, e in zip(cuts[:-1], cuts[1:]):
                 blk = blk_all[s:e]
-                nb = len(blk)
                 cnt_s = scnt[s:e]
                 fs_idx = _concat_ranges(doc_offsets[blk], cnt_s)
                 if len(fs_idx) == 0:

@@ -25,6 +25,7 @@ E5-E7 are global graph passes that run once after all buckets land.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -40,6 +41,9 @@ from .operators.extract import citing_edges, extract_text
 from .operators.linking import link_mentions, link_triples, mention_edges
 from .operators.mentions import detect_mentions, keyword_matches
 from .operators.triples import extract_triples
+from .plans import kg_fused
+
+log = logging.getLogger(__name__)
 
 _KEYWORDS_DEFAULT = ["therapy", "biomarker", "clinical trial", "prognosis"]
 
@@ -147,9 +151,10 @@ class KGPipeline:
         )
         self.rank_iterations = rank_iterations
         self.lineage = Lineage(os.path.join(work_dir, "lineage.jsonl"))
-        self._alias_list = [
-            r["alias"] for r in self.alias_dict.select("alias").distinct().collect()
-        ]
+        alias_counts = self.alias_dict.groupBy("alias").count().collect()
+        self._alias_list = [r["alias"] for r in alias_counts]
+        # the page-local plan dispatch reads the row count off this collect
+        self._alias_rows = sum(r["count"] for r in alias_counts)
 
     # ---------------- storage helpers ----------------
 
@@ -278,39 +283,37 @@ class KGPipeline:
     def run_fused_stage_edges(
         self, pages: DataFrame, fail_after_chunks: int | None = None
     ) -> None:
-        """Fused alternative to run_mentions + run_link_and_stage_edges:
-        the single-Arrow-pass plan (plans/kg_fused.py) emits the staged
-        edge table straight from pages, bucketed for resume. The
-        extract stage still runs separately — its checkpointed text is
-        the byte-identity oracle and the corpus-url set."""
-        from .plans.kg_fused import construct_triples_fused
-
+        """E2-E4 as the single-Arrow-pass plan (plans/kg_fused.py): the
+        staged edge table straight from pages, bucketed for resume — the
+        same table run_mentions + run_link_and_stage_edges build.
+        run_all and run_incremental take this path while the alias
+        dictionary fits the fused plan's broadcast ceiling. The
+        dictionary is broadcast once per stage run, on its first pending
+        chunk, and released when the stage ends. The extract stage still
+        runs separately — its checkpointed text is the byte-identity
+        oracle and the corpus-url set; canonicalization and corpus
+        filtering happen in run_global."""
         src = pages.withColumn("bucket", bucket_expr("url", self.n_buckets))
+        dictionary = None
 
         def build(chunk: list[int]) -> DataFrame:
+            nonlocal dictionary
+            if dictionary is None:
+                dictionary = kg_fused.dictionary_broadcast(
+                    self.spark, self.alias_dict, self.keywords
+                )
             subset = src.where(F.col("bucket").isin(chunk)).drop("bucket")
-            staged = construct_triples_fused(
-                self.spark,
-                subset,
-                alias_dict=self.alias_dict,
-                curation_rules=self.curation_rules,
-                keywords=self.keywords,
-                # canonicalization + corpus filtering happen globally
-                drop_dangling_citations=False,
-                canonicalize=False,
-                with_origin=True,
-            ).select(
-                F.col("subj").alias("src"),
-                F.col("pred").alias("rel"),
-                F.col("obj").alias("dst"),
-                "origin_url",
-            )
+            staged = kg_fused.fused_page_edges(subset, dictionary, with_origin=True)
             # bucket by originating page (see run_link_and_stage_edges)
             return staged.withColumn(
                 "bucket", bucket_expr("origin_url", self.n_buckets)
             )
 
-        self._run_bucketed_stage("edges_staging", build, fail_after_chunks)
+        try:
+            self._run_bucketed_stage("edges_staging", build, fail_after_chunks)
+        finally:
+            if dictionary is not None:
+                dictionary.destroy()
 
     def run_global(self) -> dict[str, DataFrame]:
         """E5-E7: canonicalize, materialize nodes/edges, rank. Global
@@ -361,23 +364,45 @@ class KGPipeline:
         )
         return {"edges": edges, "nodes": self._read("nodes")}
 
-    def run_all(self, pages: DataFrame, fused: bool = False) -> dict[str, DataFrame]:
-        """``fused=True`` runs the page-local work as the single-Arrow-
-        pass plan (2 bucketed stages instead of 3); the modular path
-        keeps per-stage mention/link tables inspectable."""
-        self.run_extract(pages)
-        if fused:
+    def _page_local_plan(self) -> str:
+        """Pick the E2-E4 plan from the alias dictionary's row count:
+        ``"fused"`` (run_fused_stage_edges) while the dictionary fits
+        the fused plan's driver broadcast (``FUSED_ALIAS_CEILING``),
+        else ``"modular"`` (run_mentions + run_link_and_stage_edges),
+        which joins the dictionary as a DataFrame. Logs the choice as
+        one JSON record."""
+        ceiling = kg_fused.FUSED_ALIAS_CEILING
+        plan = "fused" if self._alias_rows <= ceiling else "modular"
+        log.info(
+            json.dumps(
+                {
+                    "dispatcher": "KGPipeline.page_local_plan",
+                    "alias_rows": self._alias_rows,
+                    "ceiling": ceiling,
+                    "plan": plan,
+                }
+            )
+        )
+        return plan
+
+    def _run_page_local(self, pages: DataFrame, plan: str) -> None:
+        if plan == "fused":
             self.run_fused_stage_edges(pages)
         else:
             self.run_mentions()
             self.run_link_and_stage_edges()
+
+    def run_all(self, pages: DataFrame) -> dict[str, DataFrame]:
+        """E1-E7 over ``pages``. The page-local stages run as the fused
+        single-Arrow pass (2 bucketed stages) while the alias dictionary
+        fits its broadcast ceiling, and as the modular mentions ->
+        link/stage chain (3 bucketed stages) above it."""
+        self.run_extract(pages)
+        self._run_page_local(pages, self._page_local_plan())
         return self.run_global()
 
     def run_incremental(
-        self,
-        pages: DataFrame,
-        changed_urls: DataFrame,
-        fused: bool = False,
+        self, pages: DataFrame, changed_urls: DataFrame
     ) -> dict[str, DataFrame]:
         """Apply a page-level changelog to an already-built KG.
 
@@ -388,12 +413,12 @@ class KGPipeline:
         containing changed pages are recomputed: their lineage marks
         are tombstoned, their partitions dropped (deleted pages simply
         aren't in the rebuilt partition — so deletions need no special
-        path), and the normal bucketed stage runners re-run, which
-        skip every untouched bucket. The global pass (canonicalize ->
-        corpus filter -> rank) then re-runs over the stitched staging
-        tables. The result is byte-identical to ``run_all`` on the new
-        corpus (asserted in tests), and a crash mid-update resumes like
-        any other run.
+        path), and the bucketed stage runners of the page-local plan
+        ``run_all`` picks re-run, which skip every untouched bucket.
+        The global pass (canonicalize -> corpus filter -> rank) then
+        re-runs over the stitched staging tables. The result is
+        byte-identical to ``run_all`` on the new corpus (asserted in
+        tests), and a crash mid-update resumes like any other run.
 
         This is the 10^12-document maintenance story (north rule:
         resumable, per-partition lineage): a crawl delta touches a
@@ -420,9 +445,10 @@ class KGPipeline:
         )
         if not affected:
             return {"edges": self._read("edges"), "nodes": self._read("nodes")}
+        plan = self._page_local_plan()
         stages = (
             ["extract", "edges_staging"]
-            if fused
+            if plan == "fused"
             else ["extract", "mentions", "edges_staging"]
         )
         for stage in stages:
@@ -432,11 +458,7 @@ class KGPipeline:
                 if os.path.isdir(pdir):
                     shutil.rmtree(pdir)
         self.run_extract(pages)
-        if fused:
-            self.run_fused_stage_edges(pages)
-        else:
-            self.run_mentions()
-            self.run_link_and_stage_edges()
+        self._run_page_local(pages, plan)
         return self.run_global()
 
     # ---------------- outputs ----------------

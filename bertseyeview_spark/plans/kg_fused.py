@@ -31,6 +31,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -138,75 +139,76 @@ def _page_edges(
     return out
 
 
-def construct_triples_fused(
+# CEILING: the fused plan ships the alias dictionary to every Python
+# worker as one broadcast built from a driver collect. Peak driver Python
+# memory is ~4.8 KB per dictionary row (measured with tracemalloc on
+# CPython 3.11: the collected Row with its 64-float embedding list
+# ~2.6 KB, the numpy map entry ~0.8 KB, the pickled broadcast ~0.6 KB),
+# so the ceiling bounds the driver at ~1.2 GB and each worker's copy at
+# ~0.2 GB. Above it ``dictionary_broadcast`` raises, and KGPipeline runs
+# the modular plan (plans/kg.py) instead: its linking joins the
+# dictionary as a DataFrame, which scales to any dictionary size. Parity
+# between the two plans is pinned by tests/test_kg_fused.py.
+FUSED_ALIAS_CEILING = 250_000
+
+
+def dictionary_broadcast(
     spark: SparkSession,
-    pages: DataFrame,
-    alias_dict: DataFrame | None = None,
-    curation_rules: DataFrame | None = None,
+    alias_df: DataFrame,
     keywords: list[str] | None = None,
     patterns: dict[str, str] | None = None,
-    drop_dangling_citations: bool = True,
     ner_scorer_layers: int = 0,
-    canonicalize: bool = True,
-    with_origin: bool = False,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (subj, pred, obj).
+) -> Broadcast:
+    """Collect the alias dictionary and broadcast it, with the per-page
+    config, as plain python (model-broadcast pattern, like shipping
+    tokenizer/model weights to workers).
 
-    ``canonicalize=False`` skips the canonical-map build/apply — used
-    when a caller (e.g. the checkpointed pipeline) canonicalizes once
-    globally instead of per chunk.
-
-    ``with_origin=True`` adds ``origin_url`` (the page each edge was
-    extracted from — every fused edge is page-local, so the origin is
-    exact) and dedups per (edge, origin): the pipeline partitions its
-    staging table by origin bucket so chunk commits are idempotent.
-    Requires ``canonicalize=False`` and ``drop_dangling_citations=False``
-    (the pipeline's global pass does both once)."""
-    if with_origin and (canonicalize or drop_dangling_citations):
+    Raises ``ValueError`` above ``FUSED_ALIAS_CEILING`` rows; the collect
+    reads at most one row past the ceiling, so the guard itself stays
+    inside the driver-memory bound."""
+    ceiling = FUSED_ALIAS_CEILING
+    alias_rows = (
+        alias_df.select("alias", "entity_id", "embedding")
+        .limit(ceiling + 1)
+        .collect()
+    )
+    if len(alias_rows) > ceiling:
         raise ValueError(
-            "with_origin=True requires canonicalize=False and "
-            "drop_dangling_citations=False"
+            f"alias dictionary has more than {ceiling} rows, the fused "
+            "plan's broadcast ceiling (FUSED_ALIAS_CEILING); use the "
+            "modular plan (plans/kg.py construct_triples, or KGPipeline, "
+            "which falls back to it above the ceiling)"
         )
-    alias_df = (
-        alias_dict
-        if alias_dict is not None
-        else alias_dict_to_spark(spark, build_alias_dict())
-    )
-    curation_rules = (
-        curation_rules
-        if curation_rules is not None
-        else spark.createDataFrame(build_curation_rules())
-    )
-    keywords = keywords or _KEYWORDS_DEFAULT
-    patterns = normalize_patterns(patterns or DEFAULT_PATTERNS)
-
-    # broadcast the dictionary as plain python (model-broadcast pattern,
-    # like shipping tokenizer/model weights to workers). CEILING: the
-    # dict must fit the driver + one broadcast block — ~10^7 aliases x
-    # (surface + id + 64-dim embedding) ~ 6 GB, the practical cap. Past
-    # that, use the modular plan (plans/kg.py): its linking is a
-    # broadcast/shuffle JOIN against the dictionary as a DataFrame,
-    # which scales to arbitrary dictionary sizes; parity between the
-    # two plans is pinned by tests/test_kg_fused.py.
-    alias_rows = alias_df.select("alias", "entity_id", "embedding").collect()
     alias_map: dict[str, list[tuple[str, np.ndarray]]] = {}
     for r in alias_rows:
         emb = np.asarray(r["embedding"] or [0.0] * EMBED_DIM, dtype=np.float64)
         alias_map.setdefault(r["alias"], []).append((r["entity_id"], emb))
     for cands in alias_map.values():
         cands.sort(key=lambda c: c[0])
-    bc = spark.sparkContext.broadcast(
+    return spark.sparkContext.broadcast(
         {
             "alias_map": alias_map,
-            "keywords": list(keywords),
-            "patterns": dict(patterns),
+            "keywords": list(keywords or _KEYWORDS_DEFAULT),
+            "patterns": dict(normalize_patterns(patterns or DEFAULT_PATTERNS)),
             "aliases": sorted(alias_map),
             "ner_layers": ner_scorer_layers,
         }
     )
 
+
+def fused_page_edges(
+    pages: DataFrame, dictionary: Broadcast, with_origin: bool = False
+) -> DataFrame:
+    """pages(url, html) -> page-local edges (src, rel, dst), null nodes
+    dropped and deduped, in one ``mapInPandas`` pass against a
+    ``dictionary_broadcast``.
+
+    ``with_origin=True`` adds ``origin_url`` (the page each edge was
+    extracted from — every fused edge is page-local, so the origin is
+    exact) and dedups per (edge, origin)."""
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg = bc.value
+        cfg = dictionary.value
         matcher = _compile_matcher(cfg["aliases"])
         scorer = (
             get_scorer(cfg["ner_layers"]) if cfg["ner_layers"] else None
@@ -254,7 +256,56 @@ def construct_triples_fused(
     dedup_cols = ["src", "rel", "dst"] + (
         ["origin_url"] if with_origin else []
     )
-    staged = G.cleanup_null_nodes(staged).dropDuplicates(dedup_cols)
+    return G.cleanup_null_nodes(staged).dropDuplicates(dedup_cols)
+
+
+def construct_triples_fused(
+    spark: SparkSession,
+    pages: DataFrame,
+    alias_dict: DataFrame | None = None,
+    curation_rules: DataFrame | None = None,
+    keywords: list[str] | None = None,
+    patterns: dict[str, str] | None = None,
+    drop_dangling_citations: bool = True,
+    ner_scorer_layers: int = 0,
+    canonicalize: bool = True,
+    with_origin: bool = False,
+) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) -> (subj, pred, obj).
+
+    Raises ``ValueError`` when the alias dictionary is above
+    ``FUSED_ALIAS_CEILING`` rows (see ``dictionary_broadcast``).
+
+    ``canonicalize=False`` skips the canonical-map build/apply — used
+    when a caller (e.g. a sharded run) canonicalizes once globally
+    instead of per shard.
+
+    ``with_origin=True`` adds ``origin_url`` and dedups per (edge,
+    origin) (see ``fused_page_edges``). Requires ``canonicalize=False``
+    and ``drop_dangling_citations=False`` (the caller's global pass does
+    both once)."""
+    if with_origin and (canonicalize or drop_dangling_citations):
+        raise ValueError(
+            "with_origin=True requires canonicalize=False and "
+            "drop_dangling_citations=False"
+        )
+    alias_df = (
+        alias_dict
+        if alias_dict is not None
+        else alias_dict_to_spark(spark, build_alias_dict())
+    )
+    curation_rules = (
+        curation_rules
+        if curation_rules is not None
+        else spark.createDataFrame(build_curation_rules())
+    )
+    staged = fused_page_edges(
+        pages,
+        dictionary_broadcast(
+            spark, alias_df, keywords, patterns, ner_scorer_layers
+        ),
+        with_origin,
+    )
 
     if canonicalize:
         cmap = canon.build_canonical_map_auto(

@@ -157,9 +157,7 @@ def stream_kg_maintenance(
         )
         corpus_catalog.merge_into(batch, corpus_table, keys=["url"])
         pipeline.run_incremental(
-            corpus_catalog.read_table(corpus_table),
-            batch.select("url"),
-            fused=True,
+            corpus_catalog.read_table(corpus_table), batch.select("url")
         )
 
     q = (

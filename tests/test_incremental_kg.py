@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from bertseyeview_spark.datagen import generate_corpus, pages_to_spark
 from bertseyeview_spark.pipeline import KGPipeline, bucket_expr
+from bertseyeview_spark.plans import kg_fused
 from bertseyeview_spark.sources.catalog import TableCatalog
 
 
@@ -26,7 +27,11 @@ def _extract_rows(pipe):
 
 
 @pytest.mark.parametrize("fused", [False, True])
-def test_incremental_equals_full_rebuild(spark, tmp_path, fused):
+def test_incremental_equals_full_rebuild(spark, tmp_path, monkeypatch, fused):
+    if not fused:
+        # a ceiling below the default dictionary's 27 rows makes the
+        # pipeline dispatch to the modular plan
+        monkeypatch.setattr(kg_fused, "FUSED_ALIAS_CEILING", 0)
     corpus = generate_corpus(120, seed=5)
     pages_v1 = pages_to_spark(spark, corpus).cache()
 
@@ -62,13 +67,13 @@ def test_incremental_equals_full_rebuild(spark, tmp_path, fused):
 
     wd_inc = str(tmp_path / "inc")
     pipe = KGPipeline(spark, wd_inc, n_buckets=8, chunk_size=4)
-    pipe.run_all(pages_v1, fused=fused)
+    pipe.run_all(pages_v1)
     t1 = _triples(pipe)
-    pipe.run_incremental(pages_v2, changed, fused=fused)
+    pipe.run_incremental(pages_v2, changed)
 
     wd_full = str(tmp_path / "full")
     pipe_full = KGPipeline(spark, wd_full, n_buckets=8, chunk_size=4)
-    pipe_full.run_all(pages_v2, fused=fused)
+    pipe_full.run_all(pages_v2)
 
     assert _triples(pipe) == _triples(pipe_full)
     assert _triples(pipe) != t1  # the update actually changed the graph
@@ -104,10 +109,10 @@ def test_incremental_noop_changelog(spark, tmp_path):
     corpus = generate_corpus(40, seed=3)
     pages = pages_to_spark(spark, corpus)
     pipe = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4, chunk_size=4)
-    pipe.run_all(pages, fused=True)
+    pipe.run_all(pages)
     before = _triples(pipe)
     out = pipe.run_incremental(
-        pages, spark.createDataFrame([], "url string"), fused=True
+        pages, spark.createDataFrame([], "url string")
     )
     assert {"edges", "nodes"} <= set(out)
     assert _triples(pipe) == before
@@ -138,13 +143,13 @@ def test_incremental_from_catalog_changelog(spark, tmp_path):
     assert changed.count() == len(deleted) + len(updated)
 
     pipe = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4, chunk_size=4)
-    pipe.run_all(cat.read_table("pages", version=1), fused=True)
-    pipe.run_incremental(cat.read_table("pages", version=2), changed, fused=True)
+    pipe.run_all(cat.read_table("pages", version=1))
+    pipe.run_incremental(cat.read_table("pages", version=2), changed)
 
     pipe_full = KGPipeline(
         spark, str(tmp_path / "wd_full"), n_buckets=4, chunk_size=4
     )
-    pipe_full.run_all(pages_v2, fused=True)
+    pipe_full.run_all(pages_v2)
     assert _triples(pipe) == _triples(pipe_full)
 
 
@@ -196,7 +201,7 @@ def test_stream_kg_maintenance_matches_full_rebuild(spark, tmp_path):
     pipe_full = KGPipeline(
         spark, str(tmp_path / "wd_full"), n_buckets=4, chunk_size=4
     )
-    pipe_full.run_all(pages_to_spark(spark, merged), fused=True)
+    pipe_full.run_all(pages_to_spark(spark, merged))
     assert _triples(pipe) == _triples(pipe_full)
     assert _triples(pipe) != boot
     # corpus snapshot reflects the merge: 60 urls, recrawls updated
@@ -258,9 +263,9 @@ def test_run_incremental_null_url_consistent_bucket(spark, tmp_path):
     c1 = generate_corpus(12, seed=5)
     pages = pages_to_spark(spark, c1.pages)
     pipe = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4, chunk_size=4)
-    pipe.run_all(pages, fused=True)
+    pipe.run_all(pages)
     before = _triples(pipe)
     changed = spark.createDataFrame([(None,)], "url string")
-    out = pipe.run_incremental(pages, changed, fused=True)
+    out = pipe.run_incremental(pages, changed)
     assert out is not None
     assert _triples(pipe) == before

@@ -1,6 +1,9 @@
 """Fused page-local KG plan == modular plan, and matches the oracle."""
 
-from bertseyeview_spark.datagen import generate_corpus, pages_to_spark
+import pytest
+
+from bertseyeview_spark.datagen import build_alias_dict, generate_corpus, pages_to_spark
+from bertseyeview_spark.plans import kg_fused
 from bertseyeview_spark.plans.kg import construct_triples
 from bertseyeview_spark.plans.kg_fused import construct_triples_fused
 
@@ -28,6 +31,18 @@ def test_fused_with_scorer_unchanged_output(spark):
     base = _as_set(construct_triples_fused(spark, pages, ner_scorer_layers=0))
     scored = _as_set(construct_triples_fused(spark, pages, ner_scorer_layers=4))
     assert base == scored
+
+
+def test_fused_ceiling_guard_raises(spark, monkeypatch):
+    """Above FUSED_ALIAS_CEILING rows the fused plan refuses to collect
+    the dictionary and names the modular plan; at the ceiling it runs."""
+    pages = pages_to_spark(spark, generate_corpus(5, seed=2))
+    n_rows = len(build_alias_dict())
+    monkeypatch.setattr(kg_fused, "FUSED_ALIAS_CEILING", n_rows)
+    assert _as_set(construct_triples_fused(spark, pages))
+    monkeypatch.setattr(kg_fused, "FUSED_ALIAS_CEILING", n_rows - 1)
+    with pytest.raises(ValueError, match="modular plan"):
+        construct_triples_fused(spark, pages)
 
 
 def test_scorer_chunked_equals_naive():
