@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .similarity import _dot
+
 _N_PLANES = 16  # LSH signature bits
 _N_BANDS = 4    # 4 bands x 4 bits
 
@@ -80,12 +82,6 @@ def _lsh_signature_df(entities: DataFrame, seed: int = 7) -> DataFrame:
             )
 
     return entities.mapInPandas(run, schema=fields)
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def similarity_pairs(

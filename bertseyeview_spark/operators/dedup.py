@@ -14,12 +14,22 @@ shuffle rather than an O(n^2) cross join:
 * SimHash   — 64-bit token-hash majority signature (one Arrow UDF),
   near-dup = hamming distance <= d via banded buckets + bit_count.
 
+The three Jaccard operators share one exact verifier and one broadcast
+decision. Candidate pairs are confirmed by :func:`_verify_jaccard`, and
+both it and the n-gram pair counter choose between a broadcast of the
+per-doc ``xxhash64`` arrays and a shuffle join automatically, from the
+array table's row count against ``BROADCAST_ROWS_CEILING``
+(:func:`_broadcast_path`). Each choice is logged as one JSON record on
+this module's logger; no caller picks the path.
+
 All outputs are deterministic: hash functions are seed-fixed, and ties
 break on document id.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import re
 from collections.abc import Iterator
 
@@ -28,6 +38,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .textquality import norm_tokens
+
+log = logging.getLogger(__name__)
+
+# Broadcast ceiling for the per-doc xxhash64 arrays, in (doc, shingle)
+# rows: the exact-Jaccard verifier broadcasts them onto the candidate
+# pairs, and the n-gram CSR kernel collects and broadcasts them. At 8
+# bytes per hash, 32M rows hold ~256 MB of driver memory while the
+# broadcast is built (and as much again per executor). Above it both
+# take the shuffle join. It also keeps the kernel's int32 posting
+# indices far below 2**31.
+BROADCAST_ROWS_CEILING = 32_000_000
+# The CSR kernel's doc bound, on top of the rows ceiling: each task's
+# sort-count blocks scan O(n_docs^2 / tasks) doc pairs.
+CSR_DOCS_CEILING = 150_000
 
 
 def _finalize(out: DataFrame, *caches: DataFrame) -> DataFrame:
@@ -183,6 +207,129 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFram
 
 
 # ---------------------------------------------------------------------------
+# exact Jaccard and its broadcast decision (shared by the Jaccard operators)
+# ---------------------------------------------------------------------------
+
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, common, size_a, size_b) -> (id_a, id_b, jaccard): the
+    one exact-Jaccard expression, kept where ``jaccard >= threshold`` and
+    rounded to 6 places."""
+    jaccard = F.col("common").cast("double") / (
+        F.col("size_a") + F.col("size_b") - F.col("common")
+    )
+    return (
+        pairs.withColumn("jaccard", jaccard)
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    )
+
+
+def _with_sizes(common: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(id_a, id_b, common) -> adds ``size_a``/``size_b`` from the
+    per-doc (id, set_size) table."""
+
+    def side(s: str) -> DataFrame:
+        return sizes.select(
+            F.col("id").alias(f"id_{s}"), F.col("set_size").alias(f"size_{s}")
+        )
+
+    return common.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
+def _broadcast_path(
+    dispatcher: str,
+    harr: DataFrame,
+    rows: int | None = None,
+    docs_ceiling: int | None = None,
+) -> str:
+    """``"broadcast"`` or ``"join"`` for a consumer of the per-doc hash
+    arrays ``harr`` (id, _ha array<bigint>), logged as one JSON record
+    (``dispatcher``, ``docs``, ``rows``, ``ceiling``, ``docs_ceiling``,
+    ``path``).
+
+    Broadcast while the table's (doc, hash) rows are at or below
+    ``BROADCAST_ROWS_CEILING`` and, when ``docs_ceiling`` is given, its
+    docs at or below that; one aggregation job counts both. ``rows``
+    is the row count the caller will ship when it already knows it (the
+    n-gram frequency probe's capped universe); when that exceeds the
+    ceiling the answer is ``"join"`` without the job (``docs`` is then
+    logged as null)."""
+    ceiling = BROADCAST_ROWS_CEILING
+    docs = None
+    if rows is None or rows <= ceiling:
+        st = harr.agg(
+            F.count("*").alias("docs"), F.sum(F.size("_ha")).alias("rows")
+        ).first()
+        docs = int(st["docs"])
+        if rows is None:
+            rows = int(st["rows"] or 0)
+    fits = rows <= ceiling and (docs_ceiling is None or docs <= docs_ceiling)
+    path = "broadcast" if fits else "join"
+    log.info(
+        json.dumps(
+            {
+                "dispatcher": dispatcher,
+                "docs": docs,
+                "rows": rows,
+                "ceiling": ceiling,
+                "docs_ceiling": docs_ceiling,
+                "path": path,
+            }
+        )
+    )
+    return path
+
+
+def _verify_jaccard(
+    dispatcher: str, cands: DataFrame, harr: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of the candidate pairs ``cands`` (id_a, id_b) over
+    the per-doc distinct shingle-hash arrays ``harr`` (id, _ha
+    array<bigint>) -> (id_a, id_b, jaccard), see :func:`_jaccard`.
+
+    :func:`_broadcast_path` picks the path (identical outputs):
+
+    * ``"broadcast"``: broadcast the arrays onto the candidates and
+      count each pair's intersection as ``size(array_intersect)`` — no
+      re-explode of the shingle stream; work and exchange are
+      O(candidates) (measured ~115 s on the 72M within-budget simhash
+      candidates of sf1.0);
+    * ``"join"``: explode the arrays, equi-join the candidates on
+      (id, hash) and count per pair — no broadcast, any corpus size,
+      but the exchange is O(candidates x set_size) (~374 s on the same
+      input).
+    """
+    if _broadcast_path(dispatcher, harr) == "broadcast":
+
+        def side(s: str) -> DataFrame:
+            return F.broadcast(
+                harr.select(F.col("id").alias(f"id_{s}"), F.col("_ha").alias(f"_h{s}"))
+            )
+
+        pairs = (
+            cands.join(side("a"), "id_a")
+            .join(side("b"), "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.size(F.array_intersect("_ha", "_hb")).alias("common"),
+                F.size("_ha").alias("size_a"),
+                F.size("_hb").alias("size_b"),
+            )
+        )
+        return _jaccard(pairs, threshold)
+    sh = harr.select("id", F.explode("_ha").alias("shingle"))
+    common = (
+        cands.join(sh.withColumnRenamed("id", "id_a"), "id_a")
+        .join(sh.withColumnRenamed("id", "id_b"), ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("common"))
+    )
+    sizes = harr.select("id", F.size("_ha").alias("set_size"))
+    return _jaccard(_with_sizes(common, sizes), threshold)
+
+
+# ---------------------------------------------------------------------------
 # n-gram Jaccard set-similarity join
 # ---------------------------------------------------------------------------
 
@@ -255,11 +402,15 @@ def _pair_counts_broadcast(
     for any id type. Each unordered pair is produced exactly once (by
     the task owning the smaller-id doc; task slices are disjoint).
 
-    Scale ceiling (enforced by the caller's auto dispatch): the CSR
-    arrays must broadcast (~16 bytes per (doc, shingle) row) and the
-    per-task dense count blocks scan O(n_docs^2 / tasks) cells, so this
-    path is for the <=~150k-doc / <=~32M-row regime; past that the
-    shuffle join path (or prefix filtering) takes over automatically.
+    Scale ceiling (enforced by the caller's automatic dispatch,
+    :func:`_broadcast_path`): the CSR arrays must broadcast (~16 bytes
+    per (doc, shingle) row) and the per-task count blocks scan
+    O(n_docs^2 / tasks) cells, so this path runs only at or below
+    ``CSR_DOCS_CEILING`` docs and ``BROADCAST_ROWS_CEILING`` rows; past
+    either the shuffle join path (or prefix filtering) takes over. The
+    rows ceiling (32M) is also what makes the int32 posting indices
+    (``post_docs``, ``pair_start``, ``pair_len``) safe: they index at
+    most that many postings, far below 2**31.
     """
     import numpy as np
     import pyarrow as pa
@@ -434,14 +585,10 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    log_dropped: bool = True,
     prefix_filter: bool | str = "auto",
     auto_prefix_candidates: int = 20_000_000,
     auto_min_docs: int = 100_000,
     materialize: bool = True,
-    pair_mode: str = "auto",
-    broadcast_max_docs: int = 150_000,
-    broadcast_max_rows: int = 32_000_000,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with word-n-gram Jaccard >= threshold.
 
@@ -480,10 +627,10 @@ def ngram_jaccard_pairs(
     set sizes, so Jaccard can only under-estimate for pairs whose
     overlap was mostly boilerplate — the desired bias for dedup. Pass
     ``None`` to disable (exact semantics, e.g. vs a SQL oracle on data
-    known shingle-skew-free). The cap is never silent: with
-    ``log_dropped`` (default True) the number of excluded shingles is
-    computed inside the same frequency aggregation the cap already
-    needs — no extra job — and printed whenever it is non-zero.
+    known shingle-skew-free). The cap is never silent: the number of
+    excluded shingles is computed inside the same frequency aggregation
+    the cap already needs — no extra job — and logged as a WARNING
+    JSON record on this module's logger whenever it is non-zero.
 
     Internals run on ``xxhash64`` of the shingle window struct, never
     the shingle STRING: Jaccard only needs equality, and 8-byte long
@@ -494,26 +641,28 @@ def ngram_jaccard_pairs(
     ~|distinct shingles|^2 / 2^65 (~1e-7 at 2.6M shingles) and is
     accepted; outputs are oracle-verified equal at every test SF.
 
-    ``pair_mode`` picks how intersections are counted when prefix
-    filtering is off (identical outputs — asserted in tests):
+    When prefix filtering is off, intersections are counted on one of
+    two paths with identical outputs (asserted in tests), picked
+    automatically by :func:`_broadcast_path`:
 
-    * ``"broadcast"``: ship the doc<->shingle CSR to every task and
-      bincount co-occurrences per doc block in a numpy ``mapInArrow``
-      kernel (:func:`_pair_counts_broadcast`) — removes the shingle
-      self-join's candidate stream (127M rows at sf1.0) and the
-      52M-key pair aggregation exchange entirely; only near-threshold
-      pairs (thousands) ever leave the kernel. The exact Jaccard
-      filter/round still run in Catalyst, so arithmetic is unchanged.
-    * ``"join"``: the exchange-based exact path (shingle equi-join +
-      :func:`_pair_counts`) — no broadcast requirement, the 100-TB
-      shape.
-    * ``"auto"`` (default): broadcast iff the corpus fits the kernel's
-      ceiling (``broadcast_max_docs`` docs / ``broadcast_max_rows``
-      (doc, shingle) rows — CSR bytes and the per-task dense count
-      window both stay bounded); join otherwise. The deciding counts
-      come from one cheap aggregation over the persisted per-doc set
-      table (plus the capped-universe row sum the frequency probe
-      already computes when the cap is on).
+    * broadcast, while the join universe is at or below
+      ``BROADCAST_ROWS_CEILING`` (doc, shingle) rows and
+      ``CSR_DOCS_CEILING`` docs: ship the doc<->shingle CSR to every
+      task and sort-count co-occurrences per doc block in a numpy
+      ``mapInArrow`` kernel (:func:`_pair_counts_broadcast`) — removes
+      the shingle self-join's candidate stream (127M rows at sf1.0) and
+      the 52M-key pair aggregation exchange entirely; only
+      near-threshold pairs (thousands) ever leave the kernel;
+    * join, above either ceiling: the exchange-based exact path
+      (shingle equi-join + :func:`_pair_counts`) — no broadcast
+      requirement, the 100-TB shape.
+
+    The deciding counts come from one aggregation over the persisted
+    per-doc hash arrays; with the cap on, the rows are the capped
+    universe the frequency probe already summed, and when those alone
+    exceed the ceiling the aggregation is skipped. The exact Jaccard
+    filter and rounding run in Catalyst on every path
+    (:func:`_jaccard`).
     """
     # cache per-doc HASH arrays, not the window structs: every internal
     # consumer (probe, join sides, broadcast kernel, sizes) runs on the
@@ -558,10 +707,15 @@ def ngram_jaccard_pairs(
         cand_volume = int(probe["cand_volume"] or 0)
         nnz_join = int(probe["nnz_join"] or 0)
         if max_shingle_freq is not None:
-            if log_dropped and n_dropped:
-                print(
-                    f"[ngram_jaccard_pairs] dropped {n_dropped} shingles "
-                    f"with doc-frequency > {max_shingle_freq}"
+            if n_dropped:
+                log.warning(
+                    json.dumps(
+                        {
+                            "operator": "ngram_jaccard_pairs",
+                            "dropped_shingles": n_dropped,
+                            "max_shingle_freq": max_shingle_freq,
+                        }
+                    )
                 )
             joinable = sh.join(
                 freq.where(F.col("f") <= max_shingle_freq).select("shingle"),
@@ -666,71 +820,39 @@ def ngram_jaccard_pairs(
                 ["id_b", "shingle"],
             )
         )
-    else:
-        use_broadcast = pair_mode == "broadcast"
-        if pair_mode == "auto":
-            st = shsets.agg(
-                F.count("*").alias("nd"), F.sum(F.size("_ha")).alias("nnz")
-            ).first()
-            n_docs_b = int(st["nd"] or 0)
-            nnz = nnz_join if nnz_join is not None else int(st["nnz"] or 0)
-            use_broadcast = (
-                0 < n_docs_b <= broadcast_max_docs
-                and nnz <= broadcast_max_rows
-            )
-        if use_broadcast:
-            # uncapped universe: ship the per-doc hash arrays in ONE
-            # collect (ids, sizes and postings together); the capped
-            # universe collects the semi-joined rows instead
-            doc_arrays = (
-                shsets.select("id", F.col("_ha").alias("harr"))
-                if max_shingle_freq is None
-                else None
-            )
-            common = _pair_counts_broadcast(
-                joinable, sizes, threshold, doc_arrays=doc_arrays
-            )
-        else:
-            a = joinable.select(F.col("id").alias("id_a"), "shingle")
-            b = joinable.select(F.col("id").alias("id_b"), "shingle")
-            common = _pair_counts(
-                a.join(b, "shingle").where(F.col("id_a") < F.col("id_b"))
-            )
-    out = (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")),
+    elif (
+        _broadcast_path(
+            "ngram_jaccard_pairs.pair_count",
+            shsets,
+            rows=nnz_join,
+            docs_ceiling=CSR_DOCS_CEILING,
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+        == "broadcast"
+    ):
+        # uncapped universe: ship the per-doc hash arrays in ONE
+        # collect (ids, sizes and postings together); the capped
+        # universe collects the semi-joined rows instead
+        doc_arrays = (
+            shsets.select("id", F.col("_ha").alias("harr"))
+            if max_shingle_freq is None
+            else None
+        )
+        common = _pair_counts_broadcast(
+            joinable, sizes, threshold, doc_arrays=doc_arrays
+        )
+    else:
+        a = joinable.select(F.col("id").alias("id_a"), "shingle")
+        b = joinable.select(F.col("id").alias("id_b"), "shingle")
+        common = _pair_counts(
+            a.join(b, "shingle").where(F.col("id_a") < F.col("id_b"))
+        )
+    out = _jaccard(_with_sizes(common, sizes), threshold)
     return _finalize(out, shsets) if materialize else out
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_perm: int = 32
-) -> DataFrame:
-    """(id, sig array<bigint>[num_perm]) — min over shingles of
-    xxhash64(shingle, perm_seed). Entirely Catalyst: one explode + one
-    grouped aggregation with num_perm min() columns (map-side partials
-    keep the shuffle at num_perm longs per doc)."""
-    sh = shingle_table(df, id_col, text_col, n)
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-        for i in range(num_perm)
-    ]
-    sigs = sh.groupBy("id").agg(*aggs)
-    return sigs.select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig")
-    )
-
 
 def minhash_lsh_pairs(
     df: DataFrame,
@@ -741,7 +863,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.8,
     materialize: bool = True,
-    verify: str = "arrays",
 ) -> DataFrame:
     """Near-dup pairs via banding: docs agreeing on all rows of any band
     become candidates (bucket equi-join on (band, band-slice-hash)),
@@ -758,15 +879,12 @@ def minhash_lsh_pairs(
     (guide §2.3); signature hashing stays on the shingle STRING so the
     banding dice are unchanged.
 
-    ``verify`` mirrors :func:`simhash_verified_pairs` (identical
-    outputs): ``"arrays"`` (default) broadcasts each doc's window-hash
-    array onto the candidate pairs and counts the intersection per
-    pair — no re-explode of the shingle stream, work O(candidates x
-    set_size) on thousands of candidates; its ceiling is the broadcast
-    of the per-doc array table (tens of millions of docs at typical
-    set sizes). ``"join"`` explodes candidates against the hashed
-    shingle rows and re-aggregates — no broadcast requirement, the
-    beyond-ceiling path."""
+    Verification is :func:`_verify_jaccard`, shared with
+    :func:`simhash_verified_pairs`: it broadcasts each doc's
+    window-hash array onto the candidate pairs while the array table
+    is at or below ``BROADCAST_ROWS_CEILING`` rows, and takes the
+    shuffle join above it (identical outputs). The choice is logged on
+    this module's logger."""
     rows_per_band = num_perm // bands
     # one shingle pass feeds both signatures and candidate verification
     shsets = _shingle_sets(df, id_col, text_col, n)
@@ -815,65 +933,11 @@ def minhash_lsh_pairs(
 
     # verify candidates with exact Jaccard (reuses the cached per-doc
     # sets; hashed 8-byte keys, see docstring)
-    if verify == "arrays":
-        arr = shsets.select(
-            "id",
-            F.transform("_za", lambda z: F.xxhash64(z)).alias("harr"),
-            F.size("_za").alias("sz"),
-        )
-        out = (
-            candidates.join(
-                F.broadcast(
-                    arr.select(
-                        F.col("id").alias("id_a"),
-                        F.col("harr").alias("_ha"),
-                        F.col("sz").alias("size_a"),
-                    )
-                ),
-                "id_a",
-            )
-            .join(
-                F.broadcast(
-                    arr.select(
-                        F.col("id").alias("id_b"),
-                        F.col("harr").alias("_hb"),
-                        F.col("sz").alias("size_b"),
-                    )
-                ),
-                "id_b",
-            )
-            .withColumn("common", F.size(F.array_intersect("_ha", "_hb")))
-            .withColumn(
-                "jaccard",
-                F.col("common").cast("double")
-                / (F.col("size_a") + F.col("size_b") - F.col("common")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-        return _finalize(out, shsets) if materialize else out
-    sizes = shsets.select("id", F.size("_za").alias("set_size"))
-    shh = shsets.select("id", F.explode("_za").alias("_z")).select(
-        "id", F.xxhash64("_z").alias("shingle")
+    harr = shsets.select(
+        "id", F.transform("_za", lambda z: F.xxhash64(z)).alias("_ha")
     )
-    a_sh = shh.withColumnRenamed("id", "id_a")
-    b_sh = shh.withColumnRenamed("id", "id_b")
-    common = (
-        candidates.join(a_sh, "id_a")
-        .join(b_sh, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("set_size", "size_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("set_size", "size_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+    out = _verify_jaccard(
+        "minhash_lsh_pairs.verify", candidates, harr, threshold
     )
     return _finalize(out, shsets) if materialize else out
 
@@ -902,8 +966,10 @@ def _simhash64(text: str) -> int:
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash bigint) via one batched Arrow UDF."""
+    """(id, simhash bigint) via one batched Arrow UDF; ``id`` keeps the
+    input id column's type."""
     src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
+    id_type = src.schema["id"].dataType.simpleString()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -914,7 +980,7 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 }
             )
 
-    return src.mapInPandas(run, schema="id long, simhash long")
+    return src.mapInPandas(run, schema=f"id {id_type}, simhash long")
 
 
 def _band_bounds(bits: int, bands: int) -> list[tuple[int, int]]:
@@ -1039,7 +1105,6 @@ def simhash_verified_pairs(
     n: int = 3,
     threshold: float = 0.8,
     materialize: bool = True,
-    verify: str = "arrays",
 ) -> DataFrame:
     """SimHash-bucketed near-dup pairs with an exact n-gram-Jaccard
     verify: candidates = :func:`simhash_pairs` (hamming banding prunes
@@ -1059,99 +1124,23 @@ def simhash_verified_pairs(
     When the budget saturates, the output equals the exact-SQL Jaccard
     join, so an ANSI oracle grades it without replaying crc32.
 
-    ``verify`` picks the exact-Jaccard verification shape (identical
-    outputs, measured at sf1.0 where the degenerate 6-bit buckets
-    yield 72M within-budget candidates):
-
-    * ``"arrays"`` (default): broadcast each document's distinct
-      window-hash ARRAY onto the candidate pairs and count the
-      intersection per pair (``size(array_intersect)``) — work and
-      exchange are O(candidates), measured ~115s. CEILING: the
-      per-doc array table must broadcast (~8B x set_size x n_docs —
-      tens of millions of docs at typical set sizes); past that, use
-      ``"join"``.
-    * ``"join"``: explode candidates against the shingle rows and
-      re-aggregate — no broadcast requirement, scales to any corpus,
-      but the exchange is O(candidates x set_size) (3.2B rows, ~374s
-      measured on the same input).
+    Verification is :func:`_verify_jaccard` (shared with
+    :func:`minhash_lsh_pairs`) over each document's distinct
+    window-hash array: broadcast onto the candidates while the array
+    table is at or below ``BROADCAST_ROWS_CEILING`` rows, the shuffle
+    join above it (identical outputs), chosen automatically and logged.
     """
     cands = simhash_pairs(df, id_col, text_col, max_hamming).select(
         "id_a", "id_b"
     )
-    if verify == "arrays":
-        arr = _shingle_sets(df, id_col, text_col, n).select(
-            "id",
-            F.transform("_za", lambda z: F.xxhash64(z)).alias("harr"),
-            F.size("_za").alias("sz"),
-        )
-        if materialize:
-            # one materialization feeds BOTH broadcast sides
-            arr = arr.persist()
-        out = (
-            cands.join(
-                F.broadcast(
-                    arr.select(
-                        F.col("id").alias("id_a"),
-                        F.col("harr").alias("_ha"),
-                        F.col("sz").alias("_sa"),
-                    )
-                ),
-                "id_a",
-            )
-            .join(
-                F.broadcast(
-                    arr.select(
-                        F.col("id").alias("id_b"),
-                        F.col("harr").alias("_hb"),
-                        F.col("sz").alias("_sb"),
-                    )
-                ),
-                "id_b",
-            )
-            .withColumn("common", F.size(F.array_intersect("_ha", "_hb")))
-            .withColumn(
-                "jaccard",
-                F.col("common").cast("double")
-                / (F.col("_sa") + F.col("_sb") - F.col("common")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        )
-        return _finalize(out, arr) if materialize else out
-    sh = shingle_table(df, id_col, text_col, n)
+    harr = _shingle_sets(df, id_col, text_col, n).select(
+        "id", F.transform("_za", lambda z: F.xxhash64(z)).alias("_ha")
+    )
     if materialize:
-        sh = sh.persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("set_size"))
-    a_sh = sh.withColumnRenamed("id", "id_a")
-    b_sh = sh.withColumnRenamed("id", "id_b")
-    common = (
-        cands.join(a_sh, "id_a")
-        .join(b_sh, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(
-            sizes.withColumnRenamed("id", "id_a").withColumnRenamed(
-                "set_size", "size_a"
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "id_b").withColumnRenamed(
-                "set_size", "size_b"
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common").cast("double")
-            / (F.col("size_a") + F.col("size_b") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-    return _finalize(out, sh) if materialize else out
+        # one materialization feeds the size probe and both verify sides
+        harr = harr.persist()
+    out = _verify_jaccard("simhash_verified_pairs.verify", cands, harr, threshold)
+    return _finalize(out, harr) if materialize else out
 
 
 # ---------------------------------------------------------------------------

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..datagen import EMBED_DIM, token_embedding
+from .similarity import _dot
 
 
 def _embed_series(texts: pd.Series, cache: dict[str, np.ndarray]) -> pd.Series:
@@ -67,14 +68,6 @@ def embed_text_column(df: DataFrame, col: str, out_col: str = "embedding") -> Da
             yield pdf
 
     return df.mapInPandas(run, schema=schema)
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def link_mentions(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:

@@ -250,53 +250,115 @@ def test_ngram_jaccard_vs_python(spark, docs):
     assert (0, 1) in rows and rows[(0, 1)] == 1.0
 
 
-def test_ngram_pair_modes_identical(spark, docs):
-    """The broadcast bincount counter (r8) and the exchange join path
-    must be row-identical — including under a frequency cap (counting
-    on the capped universe, Jaccard on full sizes) and with STRING ids
-    (pair orientation must follow Spark's comparator, pinned here by
-    ids whose lexicographic order differs from insertion order)."""
+def _force_join(monkeypatch):
+    """Ceilings at 0: every broadcast dispatch in dedup takes the join."""
+    monkeypatch.setattr(D, "BROADCAST_ROWS_CEILING", 0)
+    monkeypatch.setattr(D, "CSR_DOCS_CEILING", 0)
 
-    def both(df, **kw):
-        a = sorted(
-            map(
-                tuple,
-                D.ngram_jaccard_pairs(df, "doc_id", "text", pair_mode="join", **kw).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                D.ngram_jaccard_pairs(
-                    df, "doc_id", "text", pair_mode="broadcast", **kw
-                ).collect(),
-            )
-        )
-        return a, b
 
-    a, b = both(docs, n=3, threshold=0.5)
-    assert a == b and len(a) > 0
-    a, b = both(docs, n=3, threshold=0.3, max_shingle_freq=3, log_dropped=False)
-    assert a == b
-    sdocs = docs.withColumn(
+def _str_ids(docs):
+    """String ids whose lexicographic order differs from insertion
+    order, so pair orientation must follow Spark's comparator."""
+    return docs.withColumn(
         "doc_id", F.concat(F.lit("d"), (F.lit(10) - F.col("doc_id")))
     )
-    a, b = both(sdocs, n=3, threshold=0.5)
-    assert a == b and len(a) > 0
-    # auto dispatch: tiny corpora resolve to the broadcast kernel, and a
-    # zero-doc ceiling forces the join path — outputs identical either way
-    forced_join = D.ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, threshold=0.5, broadcast_max_docs=0
-    )
-    assert (
-        sorted(map(tuple, forced_join.collect()))
-        == sorted(
-            map(
-                tuple,
-                D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5).collect(),
-            )
+
+
+def test_ngram_pair_modes_identical(spark, docs, monkeypatch):
+    """The broadcast CSR counter (r8) and the exchange join path must be
+    row-identical — including under a frequency cap (counting on the
+    capped universe, Jaccard on full sizes) and with STRING ids. Tiny
+    corpora dispatch to the broadcast kernel; ceilings at 0 force the
+    join path."""
+    cases = [
+        (docs, dict(n=3, threshold=0.5)),
+        (docs, dict(n=3, threshold=0.3, max_shingle_freq=3)),
+        (_str_ids(docs), dict(n=3, threshold=0.5)),
+    ]
+
+    def run(df, kw):
+        return sorted(
+            map(tuple, D.ngram_jaccard_pairs(df, "doc_id", "text", **kw).collect())
         )
-    )
+
+    broadcast = [run(df, kw) for df, kw in cases]
+    _force_join(monkeypatch)
+    join = [run(df, kw) for df, kw in cases]
+    assert broadcast == join
+    assert len(broadcast[0]) > 0 and len(broadcast[2]) > 0
+
+
+def test_verify_paths_identical(spark, docs, monkeypatch):
+    """minhash_lsh_pairs and simhash_verified_pairs share one exact
+    verifier: its broadcast and join paths return identical rows (int
+    and string ids), and the Jaccards equal the pure-python oracle."""
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    sdocs = _str_ids(docs)
+    str_texts = {r["doc_id"]: r["text"] for r in sdocs.collect()}
+
+    def run(df):
+        return [
+            sorted(map(tuple, op(df, "doc_id", "text", **kw).collect()))
+            for op, kw in [
+                (D.minhash_lsh_pairs,
+                 dict(n=3, num_perm=64, bands=16, threshold=0.5)),
+                (D.simhash_verified_pairs, dict(n=3, threshold=0.5)),
+            ]
+        ]
+
+    broadcast = {"int": run(docs), "str": run(sdocs)}
+    _force_join(monkeypatch)
+    join = {"int": run(docs), "str": run(sdocs)}
+    assert broadcast == join
+    for kind, tx in [("int", texts), ("str", str_texts)]:
+        for rows in broadcast[kind]:
+            assert len(rows) > 0
+            for a, b, jac in rows:
+                assert a < b
+                assert jac == round(_py_jaccard(tx[a], tx[b]), 6)
+
+
+def test_dedup_dispatch_records(spark, docs, monkeypatch, caplog):
+    """Each broadcast dispatch logs one JSON record naming its counts,
+    ceiling and path; the shingle cap logs what it dropped."""
+    import json
+
+    def records():
+        out = [
+            json.loads(r.getMessage())
+            for r in caplog.records
+            if r.name == D.__name__
+        ]
+        caplog.clear()
+        return out
+
+    toks = [r["text"].lower().split() for r in docs.collect()]
+    rows = sum(len({tuple(t[i : i + 3]) for i in range(len(t) - 2)}) for t in toks)
+    caplog.set_level("INFO", logger=D.__name__)
+    D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
+    D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3, max_shingle_freq=3)
+    mh, capped, ng = records()
+    assert mh == {
+        "dispatcher": "minhash_lsh_pairs.verify", "docs": 6, "rows": rows,
+        "ceiling": D.BROADCAST_ROWS_CEILING, "docs_ceiling": None,
+        "path": "broadcast",
+    }
+    assert capped["operator"] == "ngram_jaccard_pairs"
+    assert capped["max_shingle_freq"] == 3 and capped["dropped_shingles"] > 0
+    assert ng["dispatcher"] == "ngram_jaccard_pairs.pair_count"
+    assert ng["docs_ceiling"] == D.CSR_DOCS_CEILING and ng["path"] == "broadcast"
+
+    _force_join(monkeypatch)
+    D.simhash_verified_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
+    D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3, max_shingle_freq=3)
+    sh, capped, ng = records()
+    assert sh == {
+        "dispatcher": "simhash_verified_pairs.verify", "docs": 6, "rows": rows,
+        "ceiling": 0, "docs_ceiling": None, "path": "join",
+    }
+    # the capped universe already exceeds the 0-row ceiling: no size
+    # probe runs, so the doc count is unknown
+    assert ng["docs"] is None and ng["rows"] > 0 and ng["path"] == "join"
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
