@@ -253,11 +253,6 @@ def get_list_from_csv_string(
     ]
 
 
-def sanitize_pipe(col: Column) -> Column:
-    """Free-text fields: '|' -> ';' (reference __main__.py:842-852)."""
-    return F.regexp_replace(col, r"\|", ";")
-
-
 def apoc_csv_string(header: list[str], rows: list[list]) -> str:
     """The `apoc.export.csv.query(stream:true)` payload shape the
     reference's REST layer receives (neo4j_helper.py:557-559): a
@@ -397,14 +392,6 @@ def article_annotation_strings(linked_mentions):
 # pandas-UDF twins (factories — a pandas_udf needs an active session,
 # so decoration is deferred to call time)
 # ---------------------------------------------------------------------------
-
-def preprocess_date_udf():
-    @F.pandas_udf("string")
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(preprocess_date)
-
-    return _udf
-
 
 def author_string_udf():
     @F.pandas_udf("string")

@@ -19,10 +19,14 @@ Scale notes baked in:
 
 from __future__ import annotations
 
+import json
+import logging
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # skew-aware counting
@@ -544,9 +548,14 @@ def heavy_hitters(
         )
     # guarantee not met at rank k: exact fallback (log, don't silently
     # return a possibly-wrong tail)
-    print(
-        f"[heavy_hitters] MG guarantee not met at rank {k} "
-        f"(kth count <= N/counters = {threshold:.1f}); exact fallback"
+    log.warning(
+        json.dumps(
+            {
+                "event": "analytics.heavy_hitters.exact_fallback",
+                "k": k,
+                "n_over_counters": threshold,
+            }
+        )
     )
     rows = ranked_topk(src.groupBy("v").agg(F.count("*").alias("cnt")))
     return df.sparkSession.createDataFrame(

@@ -16,10 +16,14 @@ production (parquet overwrite stands in locally — jars not bundled).
 
 from __future__ import annotations
 
+import json
+import logging
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 @contextmanager
@@ -176,21 +180,6 @@ def accrete_properties(
     )
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Undirected projection (reference gds.graph.project with
-    orientation UNDIRECTED, __main__.py:1193-1247): add reversed rows."""
-    rev = edges.select(
-        F.col("dst").alias("src"), F.col("rel"), F.col("src").alias("dst")
-    )
-    return edges.unionByName(rev).dropDuplicates(["src", "rel", "dst"])
-
-
-def project_subgraph(edges: DataFrame, rels: list[str], undirected: bool = False) -> DataFrame:
-    """Filtered relationship view (reference G8 graph projection)."""
-    sub = edges.where(F.col("rel").isin(rels))
-    return symmetrize(sub) if undirected else sub
-
-
 def node_similarity(
     edges: DataFrame,
     threshold: float = 0.2,
@@ -214,7 +203,8 @@ def node_similarity(
     mega-hub neighbors (stopword-like pages at web scale) are excluded
     from the JOIN while still counting toward set sizes (similarity
     only under-estimates for hub-dominated pairs — the desired bias).
-    Never silent: dropped-hub count prints when non-zero."""
+    Never silent: a non-zero dropped-hub count is logged as a WARNING
+    JSON record on this module's logger."""
     # self-loop filter compares as strings: bipartite callers carry
     # different src/dst types and an ANSI-mode numeric cast of a
     # non-numeric id would throw. The deduped adjacency feeds sizes,
@@ -240,9 +230,14 @@ def node_similarity(
                 ).alias("n")
             ).first()["n"]
             if n_dropped:
-                print(
-                    f"[node_similarity] excluded {n_dropped} hub neighbors "
-                    f"with in-degree > {max_dst_freq} from the pair join"
+                log.warning(
+                    json.dumps(
+                        {
+                            "event": "graph.node_similarity.hub_cap",
+                            "excluded_neighbors": int(n_dropped),
+                            "max_dst_freq": max_dst_freq,
+                        }
+                    )
                 )
         joinable = adj.join(
             freq.where(F.col("f") <= max_dst_freq).select("dst"),
@@ -431,9 +426,14 @@ def adamic_adar(
                 ).alias("n")
             ).first()["n"]
             if n_dropped:
-                print(
-                    f"[adamic_adar] excluded {n_dropped} hub neighbors "
-                    f"with degree > {max_neighbor_deg} from the pair join"
+                log.warning(
+                    json.dumps(
+                        {
+                            "event": "graph.adamic_adar.hub_cap",
+                            "excluded_neighbors": int(n_dropped),
+                            "max_neighbor_deg": max_neighbor_deg,
+                        }
+                    )
                 )
         joinable = joinable.join(
             w.where(F.col("d") <= max_neighbor_deg).select("_z"), "_z", "semi"

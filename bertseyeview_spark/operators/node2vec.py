@@ -52,22 +52,6 @@ def build_adjacency(edges: DataFrame, undirected: bool = True) -> DataFrame:
     )
 
 
-def _step_hash(step: int, seed: int, portable: bool) -> Column:
-    """Deterministic non-negative 64-bit hash of (cur, walk_i, step, seed).
-    portable=True uses md5 (first 8 hex digits -> int in [0, 2^32)),
-    replayable verbatim in DuckDB; default is JVM xxhash64."""
-    if portable:
-        key = F.concat_ws(
-            "#",
-            F.col("cur"),
-            F.col("walk_i").cast("string"),
-            F.lit(str(step)),
-            F.lit(str(seed)),
-        )
-        return F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
-    return F.xxhash64(F.col("cur"), F.col("walk_i"), F.lit(step), F.lit(seed))
-
-
 def _weighted_pick_expr(weights_sql: str, u01_sql: str) -> Column:
     """1-based index of the first element whose cumulative weight reaches
     u01 * total — a linear JVM fold (no Python, no RNG state). The

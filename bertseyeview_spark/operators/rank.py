@@ -1,4 +1,4 @@
-"""E7 — ArticleRank / PageRank as an iterative DataFrame loop.
+"""E7 — ArticleRank / PageRank, personalized PageRank and HITS.
 
 Reference analogue: gds.articleRank.write over the Article/citing
 projection (shared/helper/neo4j_helper.py:2154-2186; invoked from
@@ -13,104 +13,184 @@ denominator:
 ``variant="pagerank"``).
 
 Scale notes:
-* one shuffle per iteration (groupBy dst), contributions combined
-  map-side by the partial hash agg;
+* **size dispatch.** Every operator deduplicates and persists its edge
+  table, then pulls at most ``RANK_LOCAL_MAX_EDGES + 1`` of its rows to
+  the driver as one Arrow table (``DataFrame.toArrow``). At or below the
+  ceiling that pull is the whole graph: the ids are dictionary-encoded in
+  sorted order, and the iterations run in-process as ``np.bincount``
+  passes; the result comes back through one ``createDataFrame``, which
+  keeps the id column's type. Above the ceiling the iterations run as
+  a distributed DataFrame loop. Each choice is logged as one JSON
+  record on this module's logger. The local path exists because a
+  citation graph of a few thousand edges spends nearly all of a
+  distributed loop's time scheduling ~3 jobs per iteration.
 * **fixed iteration count** (GDS default maxIterations=20), not a
-  float-threshold stop — keeps local[8] bit-identical to local[32];
-* ``localCheckpoint`` every iteration truncates the lineage chain, the
-  standard fix for iterative-DataFrame plan blowup;
-* the rank table is repartitioned on id once and the edge table on src
-  once, so every iteration's join reuses the same hash partitioning.
+  float-threshold stop. On the local path the edges are sorted by
+  (src, dst) index, so the summation order, and so every bit of the
+  result, does not depend on input partitioning. The distributed path
+  sums in Spark's grouped order, which can differ from the local one in
+  the last bits.
+* distributed loop: one shuffle per iteration (groupBy dst), combined
+  map-side by the partial hash agg; the rank table is repartitioned on
+  id once and the edge table on src once, so every iteration's join
+  reuses the same hash partitioning; ``localCheckpoint`` every 5 rounds
+  truncates the lineage chain; the loop runs at an edge-count-derived
+  shuffle width (``graph.derived_shuffle_width``).
+* edges with a null endpoint are dropped before ranking.
 """
 
 from __future__ import annotations
 
+import json
+import logging
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph import derived_shuffle_width
 
-def article_rank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 20,
-    variant: str = "article_rank",
-    checkpoint_every: int = 5,
-) -> DataFrame:
-    """edges(src, dst) [direction src->dst] -> (id, rank).
+log = logging.getLogger(__name__)
 
-    Only nodes appearing in the edge set are ranked (the reference
-    guards the GDS call with citationCount > 0, __main__.py:1322-1328);
-    isolated articles keep the implicit floor 1-d.
-    """
-    e = edges.select("src", "dst").dropDuplicates().persist()
+# CEILING: at or below this many deduplicated edges the rank operators
+# iterate on the driver. Peak driver Python memory at the ceiling is
+# ~0.4 GB, measured on a 2,000,000-edge graph over 1,000,000 nodes with
+# 20-character string ids (CPython 3.11, pyarrow 16): 177 MB tracemalloc
+# peak (the numpy index, weight and rank arrays) plus 198 MB Arrow pool
+# peak (the pulled edge table and its dictionary encoding). That run's
+# local path took 5.4 s for 20 ArticleRank iterations on 2 cores. Above
+# the ceiling the distributed loop runs, which scales to any edge count.
+RANK_LOCAL_MAX_EDGES = 2_000_000
 
-    # Scale-adaptive partitioning for the iteration tables (guide §2.2/
-    # §2.5): every iteration is its own tiny stage, so at small edge
-    # counts the session-level shuffle width (cores, or 2-3x cluster
-    # cores in production) just multiplies per-stage scheduling
-    # overhead — 10 iterations x 32 near-empty tasks measured 6.3s for
-    # a 150k-edge graph where 4 partitions run it in 4.4s. Derive the
-    # width from the edge count (~50k edge rows, a few MB, per
-    # partition) and cap it at the session's configured shuffle width
-    # so cluster settings still dominate at scale. The count is a
-    # ~free job on the just-persisted edge table.
-    n_edges = e.count()
-    conf = e.sparkSession.conf
-    sess_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    p = max(1, min(sess_parts, -(-n_edges // 50_000)))
-    # the width override (see the loop comment below) starts here so
-    # the setup exchanges (vertex distinct, e_norm join) run at p too;
-    # everything from here to the loop runs inside the try whose
-    # ``finally`` restores the session width
-    conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        return _article_rank_body(
-            e, p, variant, damping, iterations, checkpoint_every
+
+def _dedup_edges(edges: DataFrame) -> DataFrame:
+    """Distinct non-null (src, dst), both cast to the type their union
+    takes (the result's id type), persisted."""
+    id_type = edges.select("src").union(edges.select("dst")).schema[0].dataType
+    return (
+        edges.select(
+            F.col("src").cast(id_type).alias("src"),
+            F.col("dst").cast(id_type).alias("dst"),
         )
-    finally:
-        conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+        .dropna()
+        .dropDuplicates()
+        .persist()
+    )
 
 
-def _article_rank_body(
-    e: DataFrame,
-    p: int,
-    variant: str,
+def _dispatch(
+    dispatcher: str, e: DataFrame, **counts: int
+) -> tuple[pa.Table | None, int]:
+    """Pick the local or distributed path for the persisted edge table
+    ``e`` and log the choice as one JSON record. The probe is the pull
+    itself: at most ``RANK_LOCAL_MAX_EDGES + 1`` rows come back as one
+    Arrow table, so the local path costs no job beyond it and the probe
+    stays inside the ceiling's driver-memory bound. ``counts`` are other
+    driver-bound inputs, held to the same ceiling. Returns the edge
+    table (``None`` on the distributed path) and the exact edge count,
+    from which the distributed path sizes its shuffle width."""
+    ceiling = RANK_LOCAL_MAX_EDGES
+    t = e.limit(ceiling + 1).toArrow()
+    n_edges = t.num_rows if t.num_rows <= ceiling else e.count()
+    local = n_edges <= ceiling and all(v <= ceiling for v in counts.values())
+    path = "local" if local else "distributed"
+    log.info(
+        json.dumps(
+            {
+                "dispatcher": dispatcher,
+                "edges": n_edges,
+                **counts,
+                "ceiling": ceiling,
+                "path": path,
+            }
+        )
+    )
+    return (t if local else None), n_edges
+
+
+def _local_edges(t: pa.Table) -> tuple[pa.Array, np.ndarray, np.ndarray]:
+    """Edge table (src, dst) -> ``(ids, s, d)``: ``ids`` is the sorted
+    Arrow array of distinct endpoint ids, and ``s``/``d`` are the int64
+    positions in ``ids`` of each edge's src/dst, with the edges sorted
+    by ``(s, d)``. Both orders are functions of the edge set alone,
+    never of partition arrival order."""
+    both = pa.chunked_array(
+        t.column("src").chunks + t.column("dst").chunks, t.schema.field("src").type
+    ).combine_chunks().dictionary_encode()
+    order = pc.sort_indices(both.dictionary).to_numpy()
+    pos = np.empty(len(order), dtype=np.int64)
+    pos[order] = np.arange(len(order))
+    idx = pos[both.indices.to_numpy()]
+    s, d = idx[: t.num_rows], idx[t.num_rows :]
+    by_edge = np.lexsort((d, s))
+    return both.dictionary.take(order), s[by_edge], d[by_edge]
+
+
+def _power_iteration_local(
+    s: np.ndarray,
+    d: np.ndarray,
+    restart: np.ndarray,
+    avg_out: bool,
     damping: float,
     iterations: int,
-    checkpoint_every: int,
-) -> DataFrame:
-    vertices = (
+) -> np.ndarray:
+    """r_{t+1} = (1-d) * restart + d * sum_{u->v} r_t(u) / (out(u) + avg),
+    from r_0 = restart, with avg the mean out-degree over nodes that
+    have out-edges when ``avg_out`` (ArticleRank) and 0 otherwise."""
+    n = len(restart)
+    out = np.bincount(s, minlength=n)
+    avg = len(s) / np.count_nonzero(out) if avg_out and len(s) else 0.0
+    w = 1.0 / (out[s] + avg)
+    r = restart
+    for _ in range(iterations):
+        r = (1.0 - damping) * restart + damping * np.bincount(
+            d, weights=r[s] * w, minlength=n
+        )
+    return r
+
+
+def _vertices(e: DataFrame, p: int) -> DataFrame:
+    return (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         .repartition(p, "id")
-        .persist()
     )
 
+
+def _power_iteration(
+    e: DataFrame,
+    vertices: DataFrame,
+    p: int,
+    avg_out: bool,
+    damping: float,
+    iterations: int,
+) -> DataFrame:
+    """The distributed form of :func:`_power_iteration_local` over the
+    persisted ``vertices(id, restart)``, planned at width ``p``."""
     out_deg = e.groupBy(F.col("src").alias("id")).agg(
         F.count("*").alias("out_deg")
     )
-    if variant == "article_rank":
+    norm_src = out_deg
+    avg_out_col = F.lit(0.0)
+    if avg_out:
         # broadcast 1-row scalar instead of a blocking collect: the
-        # average folds into the e_norm checkpoint job (one driver
-        # round-trip fewer; no job dedicated to a single double)
-        avg_df = out_deg.agg(
-            F.coalesce(F.avg("out_deg"), F.lit(0.0)).alias("_avg_out")
+        # average folds into the e_norm checkpoint job
+        norm_src = norm_src.crossJoin(
+            F.broadcast(
+                out_deg.agg(
+                    F.coalesce(F.avg("out_deg"), F.lit(0.0)).alias("_avg_out")
+                )
+            )
         )
         avg_out_col = F.col("_avg_out")
-    else:
-        avg_df = None
-        avg_out_col = F.lit(0.0)
 
-    # per-source normalization factor, attached to the edge table ONCE:
-    # r*inv_norm needs inv_norm per *source*, and sources without
-    # out-edges simply don't appear in e — so the per-iteration plan is
-    # a single join + grouped sum instead of (norm join + filter + edge
-    # join). Nodes with no out-edges contribute nothing (dangling mass
-    # is not redistributed — matches the GDS formulation of ArticleRank).
-    norm_src = out_deg
-    if avg_df is not None:
-        norm_src = norm_src.crossJoin(F.broadcast(avg_df))
+    # per-source normalization factor, attached to the edge table ONCE,
+    # so the per-iteration plan is a single join + grouped sum. Nodes
+    # with no out-edges contribute nothing (dangling mass is not
+    # redistributed — matches the GDS formulation of ArticleRank).
     norm_src = norm_src.select(
         F.col("id").alias("src"),
         (F.lit(1.0) / (F.col("out_deg") + avg_out_col)).alias("inv_norm"),
@@ -121,17 +201,12 @@ def _article_rank_body(
         .repartition(p, "id")
         .localCheckpoint()
     )
+    ranks = vertices.select("id", F.col("restart").alias("rank")).localCheckpoint()
 
-    ranks = vertices.select("id", F.lit(1.0).alias("rank")).localCheckpoint()
-
-    # the loop's per-iteration aggregation exchanges also run at the
-    # derived width p (the caller's set/restore of the session shuffle
-    # width covers this body): the groupBy keeps its map-side partial
-    # aggregation — the hub-skew compressor a manual repartition(dst)
-    # would forfeit — while its output stays co-partitioned with the
-    # p-partitioned vertex/edge tables, so no iteration pays a
-    # width-mismatch exchange. The checkpoint calls inside the loop
-    # are what plan (and therefore consume) the override.
+    # the groupBy keeps its map-side partial aggregation — the hub-skew
+    # compressor a manual repartition(dst) would forfeit — while its
+    # output stays co-partitioned with the p-partitioned vertex/edge
+    # tables, so no iteration pays a width-mismatch exchange
     for it in range(iterations):
         contribs = (
             ranks.join(e_norm, "id")
@@ -141,22 +216,52 @@ def _article_rank_body(
         ranks = vertices.join(contribs, "id", "left").select(
             "id",
             (
-                F.lit(1.0 - damping)
+                F.lit(1.0 - damping) * F.col("restart")
                 + F.lit(damping) * F.coalesce(F.col("incoming"), F.lit(0.0))
             ).alias("rank"),
         )
-        # checkpoint every few rounds: enough to keep lineage flat,
-        # without paying a materialization job per iteration. Cadence 5
-        # measured best on the 10-iteration sf0.1 graph (4.44s vs
-        # 4.77s at 4, 5.86s at 2, 4.84s at 10 — too-frequent pays
-        # materialization jobs, too-rare pays deep-unrolled codegen);
-        # output hash identical at every cadence.
-        if it % checkpoint_every == checkpoint_every - 1 or it == iterations - 1:
+        # checkpoint every 5 rounds: enough to keep lineage flat without
+        # a materialization job per iteration (measured on the
+        # 10-iteration sf0.1 graph: 4.44s at 5 vs 4.77s at 4, 5.86s at
+        # 2, 4.84s at 10; output hash identical at every cadence)
+        if it % 5 == 4 or it == iterations - 1:
             ranks = ranks.localCheckpoint()
+    return ranks
 
+
+def article_rank(
+    edges: DataFrame,
+    damping: float = 0.85,
+    iterations: int = 20,
+    variant: str = "article_rank",
+) -> DataFrame:
+    """edges(src, dst) [direction src->dst] -> (id, rank).
+
+    Only nodes appearing in the edge set are ranked (the reference
+    guards the GDS call with citationCount > 0, __main__.py:1322-1328);
+    isolated articles keep the implicit floor 1-d.
+
+    Graphs of at most ``RANK_LOCAL_MAX_EDGES`` distinct edges iterate on
+    the driver (numpy), larger ones as a distributed loop; the dispatch
+    is logged as a ``rank.article_rank`` JSON record."""
+    e = _dedup_edges(edges)
+    t, n_edges = _dispatch("rank.article_rank", e)
+    avg_out = variant == "article_rank"
+    if t is not None:
+        e.unpersist()
+        ids, s, d = _local_edges(t)
+        rank = _power_iteration_local(
+            s, d, np.ones(len(ids)), avg_out, damping, iterations
+        )
+        return e.sparkSession.createDataFrame(pa.table({"id": ids, "rank": rank}))
+    with derived_shuffle_width(e, n_edges) as p:
+        vertices = (
+            _vertices(e, p).select("id", F.lit(1.0).alias("restart")).persist()
+        )
+        out = _power_iteration(e, vertices, p, avg_out, damping, iterations)
     e.unpersist()
     vertices.unpersist()
-    return ranks
+    return out
 
 
 def personalized_pagerank(
@@ -167,7 +272,8 @@ def personalized_pagerank(
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart into a source
     set — (id, rank). ``sources`` is a one-column (id) frame; restart
-    mass is split uniformly over it:
+    mass is split uniformly over its distinct ids, so a source that is
+    not in the graph takes its share of the split but receives none:
 
         r_{t+1}(v) = (1-d) * restart(v) + d * sum_{u->v} r_t(u)/out(u)
 
@@ -176,119 +282,86 @@ def personalized_pagerank(
     seed entities" ranking — e.g. ranking the KG neighborhood of a
     query's linked entities instead of global prestige.
 
-    Same scale discipline as article_rank: inv_norm pre-joined onto
-    edges once, ONE join + grouped sum per iteration, fixed iteration
-    count, localCheckpoint every 5 rounds. The restart vector rides the
-    vertex table as a column (one broadcast-sized left semi-join up
-    front, never per iteration); dangling mass is dropped, matching the
-    article_rank convention."""
-    from .graph import derived_shuffle_width
-
-    e = edges.select("src", "dst").dropDuplicates().persist()
-    n_edges = e.count()
-    with derived_shuffle_width(e, n_edges) as p:
-        return _personalized_pagerank_body(e, sources, damping, iterations, p)
-
-
-def _personalized_pagerank_body(
-    e: DataFrame,
-    sources: DataFrame,
-    damping: float,
-    iterations: int,
-    p: int,
-) -> DataFrame:
-    vertices = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(p, "id")
-    )
+    Same dispatch and iteration as article_rank (avgOut = 0, restart in
+    place of the constant 1); dangling mass is dropped. On the local
+    path the distinct sources also travel to the driver, so they are
+    held to the same ceiling as the edges."""
     src_ids = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
     n_sources = src_ids.count()
     if n_sources == 0:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    restart = F.when(
-        F.col("_is_src"), F.lit(1.0 / n_sources)
-    ).otherwise(F.lit(0.0))
-    vertices = (
-        vertices.join(
-            F.broadcast(src_ids.withColumn("_is_src", F.lit(True))),
-            "id",
-            "left",
+    e = _dedup_edges(edges)
+    t, n_edges = _dispatch("rank.personalized_pagerank", e, sources=n_sources)
+    if t is not None:
+        e.unpersist()
+        ids, s, d = _local_edges(t)
+        src = src_ids.toArrow().column("id").cast(ids.type)
+        is_src = pc.is_in(ids, value_set=src).to_numpy(zero_copy_only=False)
+        restart = np.where(is_src, 1.0 / n_sources, 0.0)
+        rank = _power_iteration_local(s, d, restart, False, damping, iterations)
+        return e.sparkSession.createDataFrame(pa.table({"id": ids, "rank": rank}))
+    with derived_shuffle_width(e, n_edges) as p:
+        # the restart vector rides the vertex table as a column (one
+        # broadcast-sized left join up front, never per iteration)
+        vertices = (
+            _vertices(e, p)
+            .join(
+                F.broadcast(src_ids.withColumn("_is_src", F.lit(True))),
+                "id",
+                "left",
+            )
+            .select(
+                "id",
+                F.when(F.col("_is_src"), F.lit(1.0 / n_sources))
+                .otherwise(F.lit(0.0))
+                .alias("restart"),
+            )
+            .persist()
         )
-        .select("id", F.coalesce("_is_src", F.lit(False)).alias("_is_src"))
-        .persist()
-    )
-    out_deg = e.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_deg")
-    )
-    norm_src = out_deg.select(
-        F.col("id").alias("src"),
-        (F.lit(1.0) / F.col("out_deg")).alias("inv_norm"),
-    )
-    e_norm = (
-        e.join(norm_src, "src")
-        .select(F.col("src").alias("id"), "dst", "inv_norm")
-        .repartition(p, "id")
-        .localCheckpoint()
-    )
-    ranks = vertices.select("id", restart.alias("rank")).localCheckpoint()
-    for it in range(iterations):
-        contribs = (
-            ranks.join(e_norm, "id")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("inv_norm")).alias("incoming"))
-        )
-        ranks = vertices.join(contribs, "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - damping) * restart
-                + F.lit(damping) * F.coalesce(F.col("incoming"), F.lit(0.0))
-            ).alias("rank"),
-        )
-        if it % 5 == 4 or it == iterations - 1:  # cadence measured in article_rank
-            ranks = ranks.localCheckpoint()
+        out = _power_iteration(e, vertices, p, False, damping, iterations)
     e.unpersist()
     vertices.unpersist()
-    return ranks
+    return out
 
 
 def hits_scores(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """HITS hubs & authorities over directed edges(src, dst) ->
-    (id, auth, hub), L1-normalized once after a FIXED iteration count.
+    (id, auth, hub), L1-normalized once after a FIXED iteration count
+    and rounded to 6 decimals.
 
     Complements :func:`article_rank` the way the reference's graph-
     algorithm surface does (gds.* invocations in
     shared/helper/neo4j_helper.py:2154-2186 — ArticleRank is the one
     wired up; HITS is the standard companion for citation graphs).
 
-    Scale/determinism notes (same discipline as article_rank):
-    * two shuffles per iteration (groupBy dst for auth, groupBy src for
-      hub), both map-side combined;
-    * fixed iterations, not a convergence threshold — local[8] ==
-      local[32];
-    * normalization deferred to ONE final pass (the per-iteration
-      normalization of textbook HITS only rescales — at a fixed
-      iteration count the normalized result is identical, and skipping
-      it saves 2 global aggregates per iteration); the final L1 scalars
-      join in as broadcast 1-row relations, no collect;
-    * localCheckpoint every other iteration keeps lineage flat.
-    """
+    Same dispatch as article_rank. Per iteration the local path runs two
+    ``np.bincount`` passes (auth from hubs, then hubs from auths) and
+    the distributed path two map-side-combined shuffles (groupBy dst,
+    then groupBy src). Normalization is deferred to ONE final pass (the
+    per-iteration normalization of textbook HITS only rescales — at a
+    fixed iteration count the normalized result is identical). Both
+    paths round with Spark's ``round`` (half-up), not numpy's
+    (half-even)."""
     if iterations < 1:
         raise ValueError("hits_scores needs at least one iteration")
-    from .graph import derived_shuffle_width
-
-    e = edges.select("src", "dst").dropDuplicates().persist()
-    # iteration loop at an edge-count-derived width (the article_rank
-    # pattern; see graph.derived_shuffle_width)
-    with derived_shuffle_width(e, e.count()) as p:
-        vertices = (
-            e.select(F.col("src").alias("id"))
-            .union(e.select(F.col("dst").alias("id")))
-            .distinct()
-            .repartition(p, "id")
-            .persist()
+    e = _dedup_edges(edges)
+    t, n_edges = _dispatch("rank.hits_scores", e)
+    if t is not None:
+        e.unpersist()
+        ids, s, d = _local_edges(t)
+        hub = np.ones(len(ids))
+        for _ in range(iterations):
+            auth = np.bincount(d, weights=hub[s], minlength=len(ids))
+            hub = np.bincount(s, weights=auth[d], minlength=len(ids))
+        scores = pa.table(
+            {"id": ids, "auth": auth / auth.sum(), "hub": hub / hub.sum()}
         )
+        return e.sparkSession.createDataFrame(scores).select(
+            "id", F.round("auth", 6).alias("auth"), F.round("hub", 6).alias("hub")
+        )
+
+    with derived_shuffle_width(e, n_edges) as p:
+        vertices = _vertices(e, p).persist()
         # only hubs need initialization: iteration 0 derives auths from
         # them before any read of a prior auth value (matching the SQL
         # oracle, which declares h0 only)
@@ -314,6 +387,7 @@ def hits_scores(edges: DataFrame, iterations: int = 5) -> DataFrame:
             if it % 2 == 1 or it == iterations - 1:
                 auths = auths.localCheckpoint()
                 hubs = hubs.localCheckpoint()
+        # the final L1 scalars join in as broadcast 1-row relations
         a_sum = auths.agg(F.sum("auth").alias("a_sum"))
         h_sum = hubs.agg(F.sum("hub").alias("h_sum"))
         out = (

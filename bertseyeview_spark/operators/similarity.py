@@ -24,8 +24,13 @@ Also: embedding-based near-duplicate pairs (cosine >= threshold), the
 
 from __future__ import annotations
 
+import json
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -581,12 +586,18 @@ def _split_oversized(
         if r["count"] > max_cluster_size
     ]
     if leftover:
-        print(
-            f"[semdedup] {len(leftover)} cluster(s) still exceed "
-            f"max_cluster_size={max_cluster_size} after {max_depth} "
-            f"split levels (sizes: {[s for _, s in leftover][:8]}); "
-            "proceeding — identical-vector members are collapsed to "
-            "delegates before the pair join"
+        # proceeding: identical-vector members are collapsed to
+        # delegates before the pair join
+        log.warning(
+            json.dumps(
+                {
+                    "event": "similarity.semdedup.oversized_clusters",
+                    "clusters": len(leftover),
+                    "max_cluster_size": max_cluster_size,
+                    "max_depth": max_depth,
+                    "sizes": [s for _, s in leftover][:8],
+                }
+            )
         )
     return vecs
 

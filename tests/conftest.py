@@ -23,3 +23,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def rank_paths(monkeypatch):
+    """Run a rank test on both sides of the ``RANK_LOCAL_MAX_EDGES``
+    dispatch: ``for path in rank_paths(): ...`` yields ``"local"`` at the
+    default ceiling, then ``"distributed"`` with the ceiling at 0."""
+    from bertseyeview_spark.operators import rank
+
+    def paths():
+        yield "local"
+        monkeypatch.setattr(rank, "RANK_LOCAL_MAX_EDGES", 0)
+        yield "distributed"
+
+    return paths

@@ -2,6 +2,9 @@
 crafted graphs; neighborhood-Jaccard node similarity (the GDS-family
 surface, shared/helper/neo4j_helper.py:2154-2186 analogues)."""
 
+import json
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,33 +31,35 @@ def _py_hits(edges, iterations=5):
     )
 
 
-def test_hits_vs_python(spark):
+def test_hits_vs_python(spark, rank_paths):
     edges = [
         ("a", "x"), ("a", "y"), ("b", "x"), ("b", "y"), ("b", "z"),
         ("c", "y"), ("d", "z"), ("x", "a"),
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    rows = hits_scores(df, iterations=5).collect()
     want_auth, want_hub = _py_hits(edges, iterations=5)
-    got_auth = {r["id"]: r["auth"] for r in rows}
-    got_hub = {r["id"]: r["hub"] for r in rows}
-    assert set(got_auth) == set(want_auth)
-    for n in want_auth:
-        assert got_auth[n] == pytest.approx(want_auth[n], abs=1e-6), n
-        assert got_hub[n] == pytest.approx(want_hub[n], abs=1e-6), n
-    # b links to every authority -> best hub; y is cited most -> best auth
-    assert max(got_hub, key=got_hub.get) == "b"
-    assert max(got_auth, key=got_auth.get) == "y"
+    for path in rank_paths():
+        rows = hits_scores(df, iterations=5).collect()
+        got_auth = {r["id"]: r["auth"] for r in rows}
+        got_hub = {r["id"]: r["hub"] for r in rows}
+        assert set(got_auth) == set(want_auth), path
+        for n in want_auth:
+            assert got_auth[n] == pytest.approx(want_auth[n], abs=1e-6), (path, n)
+            assert got_hub[n] == pytest.approx(want_hub[n], abs=1e-6), (path, n)
+        # b links to every authority -> best hub; y is cited most -> best auth
+        assert max(got_hub, key=got_hub.get) == "b", path
+        assert max(got_auth, key=got_auth.get) == "y", path
 
 
-def test_hits_deterministic_across_parallelism(spark):
+def test_hits_deterministic_across_parallelism(spark, rank_paths):
     edges = [(f"n{i}", f"n{(i * 7 + 3) % 20}") for i in range(40)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    a = sorted(map(tuple, hits_scores(df, iterations=4).collect()))
-    b = sorted(
-        map(tuple, hits_scores(df.repartition(1), iterations=4).collect())
-    )
-    assert a == b
+    for path in rank_paths():
+        a = sorted(map(tuple, hits_scores(df, iterations=4).collect()))
+        b = sorted(
+            map(tuple, hits_scores(df.repartition(1), iterations=4).collect())
+        )
+        assert a == b, path
 
 
 def _py_k_core(edges, k, iterations):
@@ -110,7 +115,7 @@ def test_node_similarity_jaccard(spark):
     assert r["similarity"] == pytest.approx(0.5)
 
 
-def test_node_similarity_hub_cap_excludes_but_counts(spark, capsys):
+def test_node_similarity_hub_cap_excludes_but_counts(spark, caplog):
     # p_hub is shared by all three entities; with the hub capped out of
     # the join, e1/e2 still pair via p2 but similarity counts the hub
     # in the set sizes (underestimate, never overestimate)
@@ -119,9 +124,18 @@ def test_node_similarity_hub_cap_excludes_but_counts(spark, capsys):
         ("e1", "p2"), ("e2", "p2"),
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    rows = node_similarity(df, threshold=0.0, max_dst_freq=2).collect()
-    out = capsys.readouterr().out
-    assert "excluded 1 hub neighbors" in out
+    log_name = "bertseyeview_spark.operators.graph"
+    with caplog.at_level(logging.WARNING, logger=log_name):
+        rows = node_similarity(df, threshold=0.0, max_dst_freq=2).collect()
+    assert [
+        json.loads(r.getMessage()) for r in caplog.records if r.name == log_name
+    ] == [
+        {
+            "event": "graph.node_similarity.hub_cap",
+            "excluded_neighbors": 1,
+            "max_dst_freq": 2,
+        }
+    ]
     got = {(r["id_a"], r["id_b"]): r["similarity"] for r in rows}
     # only the p2 pair survives candidate generation; J = 1/(2+2-1)
     assert got == {("e1", "e2"): pytest.approx(1 / 3)}
@@ -147,7 +161,7 @@ def _py_ppr(edges, sources, damping=0.85, iterations=10):
     return r
 
 
-def test_personalized_pagerank_vs_python(spark):
+def test_personalized_pagerank_vs_python(spark, rank_paths):
     from bertseyeview_spark.operators.rank import personalized_pagerank
 
     edges = [
@@ -156,25 +170,27 @@ def test_personalized_pagerank_vs_python(spark):
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
     srcs = spark.createDataFrame([("s",)], ["id"])
-    got = {
-        r["id"]: r["rank"]
-        for r in personalized_pagerank(df, srcs, iterations=12).collect()
-    }
     want = _py_ppr(edges, {"s"}, iterations=12)
-    assert set(got) == set(want)
-    for n in want:
-        assert got[n] == pytest.approx(want[n], abs=1e-12), n
-    # mass reachable from s only: the d/e island scores exactly zero
-    assert got["d"] == 0.0 and got["e"] == 0.0
-    assert got["a"] > 0 and got["c"] > 0
+    for path in rank_paths():
+        got = {
+            r["id"]: r["rank"]
+            for r in personalized_pagerank(df, srcs, iterations=12).collect()
+        }
+        assert set(got) == set(want), path
+        for n in want:
+            assert got[n] == pytest.approx(want[n], abs=1e-12), (path, n)
+        # mass reachable from s only: the d/e island scores exactly zero
+        assert got["d"] == 0.0 and got["e"] == 0.0, path
+        assert got["a"] > 0 and got["c"] > 0, path
 
 
-def test_personalized_pagerank_empty_sources_raises(spark):
+def test_personalized_pagerank_empty_sources_raises(spark, rank_paths):
     from bertseyeview_spark.operators.rank import personalized_pagerank
 
     df = spark.createDataFrame([("a", "b")], ["src", "dst"])
-    with pytest.raises(ValueError, match="non-empty source set"):
-        personalized_pagerank(df, spark.createDataFrame([], "id string"))
+    for path in rank_paths():
+        with pytest.raises(ValueError, match="non-empty source set"):
+            personalized_pagerank(df, spark.createDataFrame([], "id string"))
 
 
 def test_adamic_adar_vs_python(spark):

@@ -1,5 +1,8 @@
 """Analytics invariants, multimodal plumbing, text quality, search guard."""
 
+import json
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -530,7 +533,7 @@ def test_temperature_rates_strata_guard(spark):
         temperature_rates(df, "source", max_strata=10)
 
 
-def test_heavy_hitters_exact_and_fallback(spark):
+def test_heavy_hitters_exact_and_fallback(spark, caplog):
     """MG candidates + exact recount: verified fast path equals the
     exact top-k on skewed data; with too few counters the guarantee
     fails at rank k and the exact fallback still returns the right
@@ -550,13 +553,17 @@ def test_heavy_hitters_exact_and_fallback(spark):
     assert got == exp
     # counters=2: guarantee can't hold at rank 5 -> exact fallback,
     # answer still correct
-    got_fb = [
-        (r["value"], r["cnt"], r["rank"])
-        for r in heavy_hitters(df, "tok", k=5, counters=2)
-        .orderBy("rank")
-        .collect()
-    ]
+    log_name = "bertseyeview_spark.operators.analytics"
+    with caplog.at_level(logging.WARNING, logger=log_name):
+        got_fb = [
+            (r["value"], r["cnt"], r["rank"])
+            for r in heavy_hitters(df, "tok", k=5, counters=2)
+            .orderBy("rank")
+            .collect()
+        ]
     assert got_fb == exp
+    (rec,) = [json.loads(r.getMessage()) for r in caplog.records if r.name == log_name]
+    assert rec["event"] == "analytics.heavy_hitters.exact_fallback" and rec["k"] == 5
 
 
 def test_repetition_signals_hand_computed(spark):

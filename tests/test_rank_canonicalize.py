@@ -1,6 +1,9 @@
 """ArticleRank/PageRank vs a pure-python oracle; connected components
 on crafted clusters (incl. a hub); linking disambiguation invariants."""
 
+import json
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +16,12 @@ from bertseyeview_spark.operators.canonicalize import (
     connected_components,
     similarity_pairs,
 )
-from bertseyeview_spark.operators.rank import article_rank
+from bertseyeview_spark.operators.rank import (
+    RANK_LOCAL_MAX_EDGES,
+    article_rank,
+    hits_scores,
+    personalized_pagerank,
+)
 
 
 def _py_article_rank(edges, damping=0.85, iterations=20, variant="article_rank"):
@@ -36,22 +44,79 @@ def _py_article_rank(edges, damping=0.85, iterations=20, variant="article_rank")
 
 
 @pytest.mark.parametrize("variant", ["article_rank", "pagerank"])
-def test_article_rank_vs_python(spark, variant):
+def test_article_rank_vs_python(spark, rank_paths, variant):
     edges = [
         ("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
         ("d", "c"), ("e", "c"), ("f", "c"), ("d", "a"),
     ]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r["id"]: r["rank"]
-        for r in article_rank(df, iterations=15, variant=variant).collect()
-    }
     want = _py_article_rank(edges, iterations=15, variant=variant)
-    assert set(got) == set(want)
-    for n in want:
-        assert got[n] == pytest.approx(want[n], abs=1e-9), n
-    # 'c' is the most-cited node and must rank highest
-    assert max(got, key=got.get) == "c"
+    for path in rank_paths():
+        got = {
+            r["id"]: r["rank"]
+            for r in article_rank(df, iterations=15, variant=variant).collect()
+        }
+        assert set(got) == set(want), path
+        for n in want:
+            assert got[n] == pytest.approx(want[n], abs=1e-9), (path, n)
+        # 'c' is the most-cited node and must rank highest
+        assert max(got, key=got.get) == "c", path
+
+
+def _rank_graph(spark, id_type):
+    """Varied in-degrees (two moduli per source) and enough edges per
+    node that sum order would show in the last bits."""
+    edges = [(i, (i * 7 + 3) % 97) for i in range(300)]
+    edges += [(i, (i * 13 + 5) % 61) for i in range(300)]
+    if id_type == "string":
+        edges = [(f"n{a}", f"n{b}") for a, b in edges]
+    return spark.createDataFrame(edges, f"src {id_type}, dst {id_type}")
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_rank_local_path_partition_invariant(spark, id_type):
+    """The local path sorts ids and edges before summing, so its rows
+    are bit-identical however the input is partitioned, and the id
+    column keeps its type."""
+    df = _rank_graph(spark, id_type)
+    seeds = [(0,), (5,)] if id_type == "long" else [("n0",), ("n5",)]
+    srcs = spark.createDataFrame(seeds, f"id {id_type}")
+    ops = {
+        "article_rank": lambda g: article_rank(g, iterations=20),
+        "personalized_pagerank": lambda g: personalized_pagerank(g, srcs),
+        "hits_scores": lambda g: hits_scores(g, iterations=5),
+    }
+    for name, op in ops.items():
+        runs = [op(g) for g in (df, df.repartition(1), df.repartition(7))]
+        assert runs[0].schema["id"].dataType.simpleString() == (
+            "bigint" if id_type == "long" else "string"
+        ), name
+        rows = [sorted(map(tuple, r.collect())) for r in runs]
+        assert rows[0] == rows[1] == rows[2], name
+        assert len(rows[0]) == 300, name
+
+
+def test_rank_dispatch_records(spark, rank_paths, caplog):
+    df = _rank_graph(spark, "long")
+    srcs = spark.createDataFrame([(0,)], "id long")
+    n_edges = df.distinct().count()
+    logger = "bertseyeview_spark.operators.rank"
+    for path in rank_paths():
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=logger):
+            article_rank(df, iterations=2)
+            personalized_pagerank(df, srcs, iterations=2)
+            hits_scores(df, iterations=1)
+        ceiling = 0 if path == "distributed" else RANK_LOCAL_MAX_EDGES
+        recs = [json.loads(r.getMessage()) for r in caplog.records if r.name == logger]
+        assert recs == [
+            {"dispatcher": "rank.article_rank", "edges": n_edges,
+             "ceiling": ceiling, "path": path},
+            {"dispatcher": "rank.personalized_pagerank", "edges": n_edges,
+             "sources": 1, "ceiling": ceiling, "path": path},
+            {"dispatcher": "rank.hits_scores", "edges": n_edges,
+             "ceiling": ceiling, "path": path},
+        ]
 
 
 def test_connected_components_clusters(spark):

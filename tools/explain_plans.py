@@ -35,11 +35,11 @@ QUERIES = [
     ("ngram_jaccard_dedup", "cost-based plan selection: broadcast-CSR MapInArrow pair counting at this scale (shuffle equi-join past the broadcast ceiling, ppjoin prefix pruning past the candidate-volume threshold); codegen shingling, broadcast size joins, exact Jaccard filter in Catalyst"),
     ("motif_two_hop", "pattern terms compiled to chained equi-joins (Cypher MATCH analogue)"),
     ("gopher_quality", "codegen'd splits + one (id, bigram) grouped count; no Python"),
-    ("kg_pagerank", "inv_norm pre-joined onto edges: ONE join + grouped sum per iteration"),
+    ("kg_pagerank", "size-dispatched: at or below RANK_LOCAL_MAX_EDGES the deduplicated edges come to the driver in one Arrow pull and iterate as np.bincount passes, so the dump is the createDataFrame scan of the ranks; above it inv_norm is pre-joined onto edges: ONE join + grouped sum per iteration"),
     ("bm25_search", "explode fused with codegen In/InSet term filter (no interpreted HOF); tf/df grouped counts; idf/norm broadcast scalars; no UDFs"),
     ("triangle_counts", "oriented wedge equi-join + closing LEFT SEMI"),
     ("pii_redaction", "single codegen'd projection: regex counts + chained replaces"),
-    ("hits_scores", "two grouped sums per iteration (map-side combined); final L1 scalars as broadcast 1-row relations"),
+    ("hits_scores", "size-dispatched like kg_pagerank: two np.bincount passes per iteration on the driver at this scale (the dump is the created frame plus the Spark round); above the ceiling two grouped sums per iteration (map-side combined) and the final L1 scalars as broadcast 1-row relations"),
     ("k_core", "per-round grouped degree count + two LEFT SEMI prunes; flat lineage via localCheckpoint"),
     ("node_similarity", "neighbor equi-join candidates + exact Jaccard verify; hub cap as a broadcast semi-join"),
     ("host_profile", "ONE partial+final hash agg; shuffle carries md5 digests, never page text"),
