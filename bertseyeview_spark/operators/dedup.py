@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..dispatch import log_dispatch
 from .textquality import norm_tokens
 
 log = logging.getLogger(__name__)
@@ -264,20 +265,15 @@ def _broadcast_path(
         if rows is None:
             rows = int(st["rows"] or 0)
     fits = rows <= ceiling and (docs_ceiling is None or docs <= docs_ceiling)
-    path = "broadcast" if fits else "join"
-    log.info(
-        json.dumps(
-            {
-                "dispatcher": dispatcher,
-                "docs": docs,
-                "rows": rows,
-                "ceiling": ceiling,
-                "docs_ceiling": docs_ceiling,
-                "path": path,
-            }
-        )
+    return log_dispatch(
+        log,
+        dispatcher,
+        "broadcast" if fits else "join",
+        docs=docs,
+        rows=rows,
+        ceiling=ceiling,
+        docs_ceiling=docs_ceiling,
     )
-    return path
 
 
 def _verify_jaccard(

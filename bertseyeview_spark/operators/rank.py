@@ -41,7 +41,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import json
 import logging
 
 import numpy as np
@@ -50,6 +49,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..dispatch import log_dispatch
 from .graph import derived_shuffle_width
 
 log = logging.getLogger(__name__)
@@ -95,17 +95,13 @@ def _dispatch(
     t = e.limit(ceiling + 1).toArrow()
     n_edges = t.num_rows if t.num_rows <= ceiling else e.count()
     local = n_edges <= ceiling and all(v <= ceiling for v in counts.values())
-    path = "local" if local else "distributed"
-    log.info(
-        json.dumps(
-            {
-                "dispatcher": dispatcher,
-                "edges": n_edges,
-                **counts,
-                "ceiling": ceiling,
-                "path": path,
-            }
-        )
+    log_dispatch(
+        log,
+        dispatcher,
+        "local" if local else "distributed",
+        edges=n_edges,
+        **counts,
+        ceiling=ceiling,
     )
     return (t if local else None), n_edges
 

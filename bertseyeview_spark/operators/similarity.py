@@ -19,7 +19,15 @@ Two paths, as a 100 TB pipeline needs both:
   only (band, bucket) groups, never the full cross join.
 
 Also: embedding-based near-duplicate pairs (cosine >= threshold), the
-"embedding-cosine near-dup" dedup variant.
+"embedding-cosine near-dup" dedup variant, and SemDeDup (k-means, then
+within-cluster near-dup groups). Its k-means (:func:`_kmeans_fit`, also
+the IVF quantizer) is size-dispatched: at or below
+``KMEANS_LOCAL_MAX_VALUES`` vector values the (id, vector) rows come to
+the driver as one Arrow table and Lloyd's iterations run in numpy;
+above it they run as a distributed loop, one corpus scan per
+iteration. Both paths give the same assignments and centroids bit for
+bit, and each choice is logged as one JSON record on this module's
+logger.
 """
 
 from __future__ import annotations
@@ -27,10 +35,25 @@ from __future__ import annotations
 import json
 import logging
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dispatch import log_dispatch
+
 log = logging.getLogger(__name__)
+
+# CEILING: at or below this many vector values (rows x dim) the k-means
+# fit runs on the driver. Peak driver Python memory at the ceiling is
+# ~0.55 GB, measured for k=8, 3 iterations (CPython 3.11, pyarrow 16):
+# 546 MB tracemalloc peak at 500,000 x 64 and 531 MB at 20,833 x 1,536
+# (the pulled Arrow table and the (dim, n) float64 copy the kernel
+# normalizes in place), with the Arrow pool peak under 10 MB; process
+# RSS grew by 590 MB. Those fits took 14 s and 10 s on 2 cores. Above
+# the ceiling the distributed loop runs, which scales to any row count.
+KMEANS_LOCAL_MAX_VALUES = 32_000_000
 
 
 def _dot(a, b):
@@ -93,8 +116,6 @@ def brute_force_topk(
 def _hyperplane_signs(vec_col, dim: int, n_planes: int, seed: int = 11):
     """Deterministic random-hyperplane sign bits as an int column, built
     from seed-fixed literal plane coefficients — stays fully JVM-side."""
-    import numpy as np
-
     rng = np.random.RandomState(seed)
     planes = rng.standard_normal((n_planes, dim))
     bits = []
@@ -339,12 +360,156 @@ def _kmeans_fit(
     k: int,
     iterations: int,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Deterministic distributed Lloyd's k-means over unit-normalized
-    embeddings (cosine geometry). Returns ((id, cluster) DataFrame,
-    final centroids as k lists of floats — the coarse-quantizer model
+    """Deterministic Lloyd's k-means over unit-normalized embeddings
+    (cosine geometry). Returns ((id, cluster int) DataFrame, final
+    centroids as k lists of floats — the coarse-quantizer model
     ivf_topk probes).
 
-    Distributed shape (the same as any scalable k-means): each
+    Size dispatch (:func:`_kmeans_pull`): a one-row probe reads the
+    dimension, then at most ``KMEANS_LOCAL_MAX_VALUES // dim + 1``
+    (id, vector) rows come to the driver as one Arrow table. When that
+    pull is the whole input and every vector is non-null, free of null
+    elements and of the probed length, the fit runs in-process
+    (:func:`_kmeans_local`) and the assignments return through one
+    ``createDataFrame``, which keeps the id column's type. Otherwise the
+    table is dropped and the distributed loop runs
+    (:func:`_kmeans_distributed`), one corpus scan per iteration. Both
+    paths give the same assignments and centroids bit for bit: the
+    local kernel evaluates every dot product in the Catalyst fold's
+    order, and the centroid rounding below absorbs the only sums whose
+    order differs (the grouped means).
+
+    Determinism: initial centroids are the k smallest-id vectors with
+    no null element; centroid components are rounded to 9 decimals each
+    iteration so the 1e-15-scale float-summation-order wobble of the
+    grouped mean (which varies with partitioning) can never leak into
+    assignments — the same input yields byte-identical clusters at any
+    parallelism. Exact assignment ties break toward the lower cluster
+    id. An emptied cluster keeps its centroid; so does one whose only
+    members have null embeddings.
+    """
+    if k < 1:
+        raise ValueError(f"k-means needs k >= 1, got {k}")
+    v = F.col(vec_col).cast("array<double>")
+    pairs = df.select(F.col(id_col).alias("id"), v.alias("v"))
+    t, dim = _kmeans_pull(pairs)
+    if t is None:
+        return _kmeans_distributed(pairs, k, iterations)
+    ids = t.column("id")
+    vt = _columns(t.column("v"), dim)
+    del t  # frees the pulled vectors before the kernel runs
+    assign, centroids = _kmeans_local(ids, vt, k, iterations)
+    out = df.sparkSession.createDataFrame(
+        pa.table({"id": ids, "cluster": pa.array(assign, pa.int32())})
+    )
+    return out, centroids
+
+
+def _kmeans_pull(pairs: DataFrame) -> tuple[pa.Table | None, int]:
+    """The (id, v) rows of ``pairs`` as one Arrow table when the fit
+    runs locally (else ``None``), and the probed dimension. Logs the
+    choice as one JSON record (``dispatcher``, ``rows``, ``dim``,
+    ``ceiling``, ``path``, and on a fallback ``reason``: ``ceiling`` or
+    ``ragged_or_null``).
+
+    ``dim`` is the length of the first non-null vector (0 when there is
+    none). The pull masks every vector of another length to null, so it
+    never holds more than ``ceiling + dim`` values and stays inside the
+    ceiling's driver-memory bound whatever the input. ``rows`` is null
+    when the pull stopped at the row cap."""
+    ceiling = KMEANS_LOCAL_MAX_VALUES
+    probe = pairs.where(F.col("v").isNotNull()).select(F.size("v")).first()
+    dim = probe[0] if probe else 0
+    cap = ceiling // max(dim, 1)
+    t = (
+        pairs.select("id", F.when(F.size("v") == dim, F.col("v")).alias("v"))
+        .limit(cap + 1)
+        .toArrow()
+    )
+    vs = t.column("v")
+    rows, reason = t.num_rows, None
+    if rows > cap:
+        rows, reason = None, "ceiling"
+    elif vs.null_count or any(c.flatten().null_count for c in vs.chunks):
+        reason = "ragged_or_null"
+    path = "distributed" if reason else "local"
+    inputs = {"rows": rows, "dim": dim, "ceiling": ceiling}
+    if reason:
+        inputs["reason"] = reason
+    log_dispatch(log, "similarity.kmeans", path, **inputs)
+    return (None if reason else t), dim
+
+
+def _columns(vs: pa.ChunkedArray, dim: int) -> np.ndarray:
+    """Null-free list<double> rows of length ``dim`` -> a (dim, n)
+    float64 array, one contiguous row per vector component."""
+    out = np.empty((dim, len(vs)))
+    at = 0
+    for c in vs.chunks:
+        out[:, at : at + len(c)] = c.flatten().to_numpy().reshape(len(c), dim).T
+        at += len(c)
+    return out
+
+
+def _fold_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """sum_j a[j] * b[j] over the leading axis (broadcasting the rest),
+    summed as a sequential fold in j order from 0.0 — the evaluation
+    order of :func:`_dot`'s ``aggregate(zip_with(...))``, so every
+    entry is bit-identical to the Catalyst expression. A BLAS product
+    (``@``, ``np.dot``) or ``np.linalg.norm`` sums in another order and
+    differs in the last bits."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for aj, bj in zip(a, b):
+        acc = acc + aj * bj
+    return acc
+
+
+def _nearest(vt: np.ndarray, centroids: list[list[float]]) -> np.ndarray:
+    """Index of the best-scoring centroid for each column of ``vt``,
+    the first on an exact tie (the distributed path's low-cluster tie
+    break), scored in blocks of columns to bound the score matrix."""
+    dim, n = vt.shape
+    ct = np.array(centroids, dtype=np.float64).reshape(len(centroids), dim).T
+    out = np.empty(n, dtype=np.int32)
+    step = max(1, (1 << 20) // max(ct.shape[1], 1))
+    for s in range(0, n, step):
+        scores = _fold_dot(vt[:, s : s + step, None], ct[:, None, :])
+        out[s : s + step] = np.argmax(scores, axis=1)
+    return out
+
+
+def _kmeans_local(
+    ids: pa.ChunkedArray, vt: np.ndarray, k: int, iterations: int
+) -> tuple[np.ndarray, list[list[float]]]:
+    """The in-process fit over the (dim, n) vectors ``vt``, normalized
+    in place as :func:`_normalized_expr` does (a zero vector stays
+    zero). Returns the int32 assignments in ``ids`` order and the
+    centroids."""
+    norm = np.sqrt(_fold_dot(vt, vt))
+    zero = norm == 0.0
+    np.divide(vt, norm, out=vt, where=~zero)
+    vt[:, zero] = 0.0
+    # seeds: the k smallest ids (Spark's ascending order puts nulls first)
+    seeds = pc.sort_indices(
+        pa.table({"id": ids}), [("id", "ascending")], null_placement="at_start"
+    ).to_numpy()[:k]
+    centroids = [[round(x, 9) for x in vt[:, i].tolist()] for i in seeds]
+    for _ in range(iterations):
+        assign = _nearest(vt, centroids)
+        counts = np.bincount(assign, minlength=len(centroids))
+        members = np.argsort(assign, kind="stable")
+        ends = np.cumsum(counts)
+        for c in np.flatnonzero(counts):
+            idx = members[ends[c] - counts[c] : ends[c]]
+            mean = vt[:, idx].sum(axis=1) / counts[c]
+            centroids[c] = [round(x, 9) for x in mean.tolist()]
+    return _nearest(vt, centroids), centroids
+
+
+def _kmeans_distributed(
+    pairs: DataFrame, k: int, iterations: int
+) -> tuple[DataFrame, list[list[float]]]:
+    """The distributed fit over ``pairs`` (id, v array<double>): each
     iteration is ONE corpus scan — centroids travel to the data as
     k*dim broadcast literals inside the assignment expression, and the
     centroid update is a dim-explode + grouped mean whose output is
@@ -352,26 +517,21 @@ def _kmeans_fit(
     ever leaves the executors; iteration count is FIXED, not
     convergence-tested, so the plan is static and replayable.
 
-    Determinism: initial centroids are the k smallest-id vectors;
-    centroid components are rounded to 9 decimals each iteration so
-    the 1e-15-scale float-summation-order wobble of the grouped mean
-    (which varies with partitioning) can never leak into assignments —
-    the same input yields byte-identical clusters at any parallelism.
-    Exact assignment ties break toward the lower cluster id.
-    """
-    v = F.col(vec_col).cast("array<double>")
-    base = (
-        df.select(F.col(id_col).alias("id"), v.alias("_v"))
-        .select("id", _normalized_expr("_v").alias("nv"))
-        .persist()
-    )
+    A null embedding, or one with a null element, normalizes to null
+    (resp. all-null) elements: it is never a seed, scores null against
+    every centroid (so it lands in cluster 0) and adds nothing to any
+    mean. With no seed at all every row's cluster is null."""
+    base = pairs.select("id", _normalized_expr("v").alias("nv")).persist()
+    valid = F.col("nv").isNotNull() & ~F.exists("nv", lambda x: x.isNull())
     seeds = [
         list(r["nv"])
-        for r in base.orderBy("id").limit(k).collect()
+        for r in base.where(valid).orderBy("id").limit(k).collect()
     ]
     centroids = [[round(x, 9) for x in c] for c in seeds]
 
     def assign_expr(cents: list[list[float]]):
+        if not cents:
+            return F.lit(None).cast("int").alias("cluster")
         scored = F.array(
             *[
                 F.struct(
@@ -389,6 +549,7 @@ def _kmeans_fit(
         assigned = base.select("id", "nv", assign_expr(centroids))
         upd = (
             assigned.select("cluster", F.posexplode("nv").alias("pos", "x"))
+            .where(F.col("x").isNotNull())
             .groupBy("cluster", "pos")
             .agg(F.avg("x").alias("m"))
             .collect()
@@ -477,8 +638,9 @@ def ivf_topk(
     the same shape/determinism contract as brute_force_topk and
     lsh_ann_topk (ties break on neighbor_id).
 
-    Scale plan: the quantizer fit is the deterministic distributed
-    Lloyd's above (one scan per iteration); at query time centroid
+    Scale plan: the quantizer fit is the deterministic size-dispatched
+    Lloyd's above (on the driver for small corpora, one scan per
+    iteration beyond the ceiling); at query time centroid
     scoring is k*dim broadcast literals, the probe set explodes to
     (query, cluster) rows that BROADCAST against the corpus lists'
     cluster equi-join, so each query touches ~nprobe/n_clusters of

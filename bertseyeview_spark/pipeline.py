@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import build_alias_dict, build_curation_rules, alias_dict_to_spark
+from .dispatch import log_dispatch
 from .operators import canonicalize as canon
 from .operators import graph as G
 from .operators import rank as R
@@ -372,18 +373,13 @@ class KGPipeline:
         which joins the dictionary as a DataFrame. Logs the choice as
         one JSON record."""
         ceiling = kg_fused.FUSED_ALIAS_CEILING
-        plan = "fused" if self._alias_rows <= ceiling else "modular"
-        log.info(
-            json.dumps(
-                {
-                    "dispatcher": "KGPipeline.page_local_plan",
-                    "alias_rows": self._alias_rows,
-                    "ceiling": ceiling,
-                    "plan": plan,
-                }
-            )
+        return log_dispatch(
+            log,
+            "KGPipeline.page_local_plan",
+            "fused" if self._alias_rows <= ceiling else "modular",
+            alias_rows=self._alias_rows,
+            ceiling=ceiling,
         )
-        return plan
 
     def _run_page_local(self, pages: DataFrame, plan: str) -> None:
         if plan == "fused":

@@ -38,3 +38,18 @@ def rank_paths(monkeypatch):
         yield "distributed"
 
     return paths
+
+
+@pytest.fixture
+def kmeans_paths(monkeypatch):
+    """Run a k-means test on both sides of the ``KMEANS_LOCAL_MAX_VALUES``
+    dispatch: ``for path in kmeans_paths(): ...`` yields ``"local"`` at
+    the default ceiling, then ``"distributed"`` with the ceiling at 0."""
+    from bertseyeview_spark.operators import similarity
+
+    def paths():
+        yield "local"
+        monkeypatch.setattr(similarity, "KMEANS_LOCAL_MAX_VALUES", 0)
+        yield "distributed"
+
+    return paths

@@ -1,5 +1,8 @@
 """Dedup + similarity operators vs independent pure-python oracles."""
 
+import json
+import logging
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -723,7 +726,7 @@ def test_lm_perplexity_vs_python(spark):
         assert abs(got[i][1] - exp[i][1]) < 1e-6
 
 
-def test_kmeans_semdedup_vs_numpy(spark):
+def test_kmeans_semdedup_vs_numpy(spark, kmeans_paths):
     """Deterministic Lloyd's matches an exact numpy replica (same init,
     same rounding), and semdedup keeps one representative per
     within-cluster near-dup group."""
@@ -763,29 +766,30 @@ def test_kmeans_semdedup_vs_numpy(spark):
         cents = np.array(new)
     exp_assign = np.argmax(nv @ cents.T, axis=1)
 
-    got = {
-        r["id"]: r["cluster"]
-        for r in kmeans_embeddings(df, "vec_id", "embedding", k, iters).collect()
-    }
-    assert got == {i: int(exp_assign[i]) for i in range(n)}
+    for _ in kmeans_paths():
+        got = {
+            r["id"]: r["cluster"]
+            for r in kmeans_embeddings(df, "vec_id", "embedding", k, iters).collect()
+        }
+        assert got == {i: int(exp_assign[i]) for i in range(n)}
 
-    sd = {
-        r["id"]: (r["cluster"], r["rep_id"], r["is_rep"])
-        for r in semdedup(
-            df, "vec_id", "embedding", k=k, iterations=iters, threshold=0.999
-        ).collect()
-    }
-    assert len(sd) == n
-    # the planted near-dup collapses to rep = NUMERIC min id (id's
-    # original type, not the canonicalizer's string-order label)
-    assert sd[30] == (int(exp_assign[30]), 30, True)
-    assert sd[31] == (int(exp_assign[31]), 30, False)
-    # everything else survives as its own representative (incl. the
-    # zero vector, which can never reach any cosine threshold)
-    assert all(sd[i][2] for i in range(n) if i != 31)
+        sd = {
+            r["id"]: (r["cluster"], r["rep_id"], r["is_rep"])
+            for r in semdedup(
+                df, "vec_id", "embedding", k=k, iterations=iters, threshold=0.999
+            ).collect()
+        }
+        assert len(sd) == n
+        # the planted near-dup collapses to rep = NUMERIC min id (id's
+        # original type, not the canonicalizer's string-order label)
+        assert sd[30] == (int(exp_assign[30]), 30, True)
+        assert sd[31] == (int(exp_assign[31]), 30, False)
+        # everything else survives as its own representative (incl. the
+        # zero vector, which can never reach any cosine threshold)
+        assert all(sd[i][2] for i in range(n) if i != 31)
 
 
-def test_semdedup_split_oversized_guard(spark):
+def test_semdedup_split_oversized_guard(spark, kmeans_paths):
     """Cluster-size guard: a single runaway k-means cluster (forced
     with k=1) holding three well-separated blobs is recursively
     re-split below the size budget before the quadratic pair join,
@@ -817,28 +821,29 @@ def test_semdedup_split_oversized_guard(spark):
         [(i, [float(x) for x in nv[i]], 0) for i in range(n)],
         "id long, nv array<double>, cluster int",
     )
-    split = _split_oversized(vdf, 1, max_cluster_size=35).collect()
-    by_cluster: dict[int, set[int]] = {}
-    for r in split:
-        by_cluster.setdefault(r["cluster"], set()).add(r["id"] % 3)
-    assert all(len(blobs) == 1 for blobs in by_cluster.values())
-    sizes = {c: sum(1 for r in split if r["cluster"] == c) for c in by_cluster}
-    assert max(sizes.values()) <= 35 and sum(sizes.values()) == n
+    for _ in kmeans_paths():
+        split = _split_oversized(vdf, 1, max_cluster_size=35).collect()
+        by_cluster: dict[int, set[int]] = {}
+        for r in split:
+            by_cluster.setdefault(r["cluster"], set()).add(r["id"] % 3)
+        assert all(len(blobs) == 1 for blobs in by_cluster.values())
+        sizes = {c: sum(1 for r in split if r["cluster"] == c) for c in by_cluster}
+        assert max(sizes.values()) <= 35 and sum(sizes.values()) == n
 
-    # end-to-end: guard on, near-dup still collapses, everyone else reps
-    sd = {
-        r["id"]: (r["rep_id"], r["is_rep"])
-        for r in semdedup(
-            df, "vec_id", "embedding", k=1, iterations=1,
-            threshold=0.99999, max_cluster_size=35,
-        ).collect()
-    }
-    assert len(sd) == n
-    assert sd[87] == (84, False)
-    assert all(sd[i] == (i, True) for i in range(n) if i != 87)
+        # end-to-end: guard on, near-dup still collapses, everyone else reps
+        sd = {
+            r["id"]: (r["rep_id"], r["is_rep"])
+            for r in semdedup(
+                df, "vec_id", "embedding", k=1, iterations=1,
+                threshold=0.99999, max_cluster_size=35,
+            ).collect()
+        }
+        assert len(sd) == n
+        assert sd[87] == (84, False)
+        assert all(sd[i] == (i, True) for i in range(n) if i != 87)
 
 
-def test_semdedup_identical_vector_cluster_is_linear(spark):
+def test_semdedup_identical_vector_cluster_is_linear(spark, kmeans_paths):
     """Fully degenerate case: a cluster of byte-identical vectors that
     NO k-means can split (every dot ties). The guard detects zero
     split progress and stops; the exact-duplicate collapse then
@@ -858,20 +863,21 @@ def test_semdedup_identical_vector_cluster_is_linear(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
-    sd = {
-        r["id"]: (r["rep_id"], r["is_rep"])
-        for r in semdedup(
-            df, "vec_id", "embedding", k=2, iterations=2,
-            threshold=0.99, max_cluster_size=10, max_split_depth=2,
-        ).collect()
-    }
-    assert len(sd) == n_same + 5
-    assert sd[0] == (0, True)
-    assert all(sd[i] == (0, False) for i in range(1, n_same))
-    assert all(sd[100 + j] == (100 + j, True) for j in range(5))
+    for _ in kmeans_paths():
+        sd = {
+            r["id"]: (r["rep_id"], r["is_rep"])
+            for r in semdedup(
+                df, "vec_id", "embedding", k=2, iterations=2,
+                threshold=0.99, max_cluster_size=10, max_split_depth=2,
+            ).collect()
+        }
+        assert len(sd) == n_same + 5
+        assert sd[0] == (0, True)
+        assert all(sd[i] == (0, False) for i in range(1, n_same))
+        assert all(sd[100 + j] == (100 + j, True) for j in range(5))
 
 
-def test_ivf_topk_clustered_full_recall_at_nprobe1(spark):
+def test_ivf_topk_clustered_full_recall_at_nprobe1(spark, kmeans_paths):
     """On data WITH cluster structure (the real-corpus shape) IVF
     achieves full recall probing a single list: 4 well-separated
     clusters, queries near the centers -> nprobe=1 equals brute force
@@ -899,21 +905,145 @@ def test_ivf_topk_clustered_full_recall_at_nprobe1(spark):
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
         for r in brute_force_topk(df, qs, "vec_id", "embedding", k=5).collect()
     }
-    got1 = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-        for r in ivf_topk(
-            df, qs, "vec_id", "embedding", k=5, n_clusters=4, nprobe=1
-        ).collect()
+    for _ in kmeans_paths():
+        got1 = {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
+            for r in ivf_topk(
+                df, qs, "vec_id", "embedding", k=5, n_clusters=4, nprobe=1
+            ).collect()
+        }
+        assert got1 == exact
+        # saturation: nprobe == n_clusters is exact on ANY data
+        got_all = {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
+            for r in ivf_topk(
+                df, qs, "vec_id", "embedding", k=5, n_clusters=4, nprobe=4
+            ).collect()
+        }
+        assert got_all == exact
+
+
+def _kmeans_records(caplog):
+    out = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == SIM.__name__
+    ]
+    caplog.clear()
+    return out
+
+
+def _tie_planted(spark, id_type: str, elem_type: str):
+    """300 8-d vectors whose first assignment is full of ties: the six
+    seeds (ids 0-5) are coordinate permutations of one integer vector,
+    a fifth of the rows are integer-grid points (cosines to permuted
+    seeds that are equal in exact arithmetic, so the fold's summation
+    order decides them), two seeds coincide (every row ties between
+    them) and one row is the zero vector (ties everywhere)."""
+    rng = np.random.RandomState(13)
+    n, dim = 300, 8
+    x = rng.standard_normal((n, dim))
+    grid = rng.permutation(np.arange(6, n))[: n // 5]
+    x[grid] = rng.randint(-1, 3, (len(grid), dim))
+    base = np.array([3.0, 1.0, 2.0, 1.0, 0.0, 0.0, 0.0, 0.0])
+    for i in range(6):
+        x[i] = np.roll(base, i)
+    x[5] = x[4]
+    x[n - 1] = 0.0
+    ids = [i if id_type == "long" else f"v{i:03d}" for i in range(n)]
+    return spark.createDataFrame(
+        [(ids[i], [float(v) for v in x[i]]) for i in range(n)],
+        f"vec_id {id_type}, embedding array<{elem_type}>",
+    )
+
+
+@pytest.mark.parametrize(
+    "id_type,elem_type", [("long", "double"), ("string", "float")]
+)
+def test_kmeans_paths_bit_identical(spark, kmeans_paths, id_type, elem_type):
+    """The driver-local fit reproduces the distributed Catalyst fit bit
+    for bit, assignments and centroids, on tie-planted data at any
+    partitioning, keeping the id type; empty input yields no rows and
+    no centroids."""
+    df = _tie_planted(spark, id_type, elem_type)
+    inputs = {
+        "p1": df.repartition(1),
+        "p7": df.repartition(7),
+        "empty": df.limit(0),
     }
-    assert got1 == exact
-    # saturation: nprobe == n_clusters is exact on ANY data
-    got_all = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cos_sim"])
-        for r in ivf_topk(
-            df, qs, "vec_id", "embedding", k=5, n_clusters=4, nprobe=4
-        ).collect()
-    }
-    assert got_all == exact
+    fits = {}
+    for path in kmeans_paths():
+        for name, d in inputs.items():
+            assign, cents = SIM._kmeans_fit(d, "vec_id", "embedding", 6, 3)
+            assert assign.schema["id"].dataType.simpleString() == (
+                "bigint" if id_type == "long" else "string"
+            )
+            fits[path, name] = (
+                sorted(map(tuple, assign.collect())),
+                np.array(cents).tobytes(),
+            )
+    for name in inputs:
+        assert fits["local", name] == fits["distributed", name], name
+    assert fits["local", "p1"] == fits["local", "p7"]
+    assert len(fits["local", "p1"][0]) == 300
+    assert fits["local", "empty"] == ([], np.array([]).tobytes())
+    # an empty pull fits any ceiling, so the distributed loop's own
+    # empty case is checked directly
+    pairs = inputs["empty"].select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
+    assign, cents = SIM._kmeans_distributed(pairs, 6, 3)
+    assert assign.collect() == [] and cents == []
+
+
+def test_kmeans_dispatch_records(spark, kmeans_paths, caplog):
+    """Every k-means fit logs one record naming rows, dim, ceiling and
+    path, plus the reason on a fallback; a ragged input falls back; k
+    below 1 is rejected before any probe."""
+    rng = np.random.RandomState(17)
+    rows = [(i, [float(v) for v in rng.standard_normal(8)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ragged = df.union(spark.createDataFrame([(40, [1.0, 2.0, 3.0])], df.schema))
+    with pytest.raises(ValueError):
+        SIM.kmeans_embeddings(df, k=0)
+    caplog.set_level(logging.INFO, logger=SIM.__name__)
+    SIM.kmeans_embeddings(ragged, k=4).collect()
+    assert _kmeans_records(caplog) == [
+        {"dispatcher": "similarity.kmeans", "rows": 41, "dim": 8,
+         "ceiling": SIM.KMEANS_LOCAL_MAX_VALUES, "reason": "ragged_or_null",
+         "path": "distributed"},
+    ]
+    for path in kmeans_paths():
+        SIM.kmeans_embeddings(df, k=4).collect()
+        if path == "local":
+            expected = {"rows": 40, "ceiling": SIM.KMEANS_LOCAL_MAX_VALUES}
+        else:
+            expected = {"rows": None, "ceiling": 0, "reason": "ceiling"}
+        assert _kmeans_records(caplog) == [
+            {"dispatcher": "similarity.kmeans", "dim": 8, **expected,
+             "path": path},
+        ]
+
+
+@pytest.mark.parametrize("bad", [None, [1.0, None] + [0.5] * 6])
+def test_kmeans_null_embedding_at_smallest_id(spark, caplog, bad):
+    """A null embedding, or one with a null element, at the smallest id
+    is no seed and adds to no mean: the fit runs distributed, returns
+    one row per input and clusters the other rows exactly as without
+    it."""
+    rng = np.random.RandomState(19)
+    rows = [(i, [float(v) for v in rng.standard_normal(8)]) for i in range(1, 41)]
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    df = spark.createDataFrame([(0, bad)] + rows, schema)
+    caplog.set_level(logging.INFO, logger=SIM.__name__)
+    got = dict(map(tuple, SIM.kmeans_embeddings(df, k=4).collect()))
+    (rec,) = _kmeans_records(caplog)
+    assert rec["path"] == "distributed" and rec["reason"] == "ragged_or_null"
+    assert sorted(got) == list(range(41))
+    want = dict(map(tuple, SIM.kmeans_embeddings(clean, k=4).collect()))
+    assert {i: got[i] for i in range(1, 41)} == want
 
 
 def test_dedup_paragraphs_ccnet_semantics(spark):

@@ -92,7 +92,7 @@ def test_default_run_all_picks_fused(spark, tmp_path, caplog):
             "dispatcher": "KGPipeline.page_local_plan",
             "alias_rows": len(build_alias_dict()),
             "ceiling": kg_fused.FUSED_ALIAS_CEILING,
-            "plan": "fused",
+            "path": "fused",
         }
     ]
     assert not os.path.exists(pipe._path("mentions"))
@@ -121,6 +121,6 @@ def test_above_ceiling_dispatch_matches_fused(
         spark, str(tmp_path / "mod"), n_buckets=2, chunk_size=2, rank_iterations=2
     )
     modular.run_all(pages)
-    assert [r["plan"] for r in _plan_records(caplog)] == ["modular"]
+    assert [r["path"] for r in _plan_records(caplog)] == ["modular"]
     assert os.path.isdir(modular._path("mentions"))
     assert _triples(modular) == _triples(fused)

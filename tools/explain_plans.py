@@ -4,10 +4,18 @@ The point (per the build brief): after correctness, verify each plan is
 the one you'd want at 100 TB — filters pushed to the scan, projections
 pruned, small sides broadcast, aggregations partial+final, top-k as
 TakeOrderedAndProject, no Python in JVM-only paths.
+
+With ``--label`` it instead writes one plan per query to
+``<out>/<query>_<label>.txt`` (default: the ``HEADLINE`` queries), for a
+before/after diff: run it with ``--label before`` in a checkout of the
+starting commit and ``--label after`` in the changed tree.
+
+Usage: python tools/explain_plans.py [--sf DIR] [--label L [--out DIR] [query ...]]
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -19,6 +27,16 @@ import __spark_entry__ as E  # noqa: E402
 from bertseyeview_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the queries captured for a before/after plan diff
+HEADLINE = [
+    "ngram_jaccard_dedup", "minhash_lsh_dedup", "quality_features",
+    "language_id", "embedding_topk_cosine", "label_abundance_two_groups",
+    "top_entities", "sessionization", "events_windowed_agg",
+    "dictionary_mention_topk", "top_articles_citations",
+    "connected_components",
+]
 
 QUERIES = [
     ("label_abundance", "scalar counts broadcast; LEFT SEMI subsets; partial+final hash aggs"),
@@ -45,7 +63,7 @@ QUERIES = [
     ("host_profile", "ONE partial+final hash agg; shuffle carries md5 digests, never page text"),
     ("decontamination", "benchmark shingles broadcast; corpus scanned once, raw-shingle explode + probe + partial count-distinct in one codegen stage, no corpus shuffle on shingle"),
     ("lm_perplexity", "bigram counts as grouped aggs; context table broadcast (kills unigram key skew); scoring = one composite-key shuffle join"),
-    ("embedding_ivf_topk", "IVF: centroids as broadcast literals; probe rows broadcast against the cluster equi-join — each query touches ~nprobe/n_clusters of the corpus, no query-dependent corpus shuffle"),
+    ("embedding_ivf_topk", "IVF: the quantizer is semdedup's size-dispatched k-means (driver-local at this scale, so the lists' assignments are a created frame); centroids as broadcast literals; probe rows broadcast against the cluster equi-join — each query touches ~nprobe/n_clusters of the corpus, no query-dependent corpus shuffle"),
     ("temperature_resample", "domain-mix rates compiled to ONE codegen'd when/otherwise hash filter over the scan — no shuffle; the grouped count that derived the rates is a separate tiny job"),
     ("exact_substring_dedup", "codegen arrays_zip window build + dual-seed xxhash64 fingerprints; both shuffles key on the fingerprint (AQE skew-split covers boilerplate keys); per-doc gaps-and-islands window bounded by doc length"),
     ("substring_cut", "flag stage shared with exact_substring_dedup; canonical pick = one row_number window over the fingerprint; cut applied as a per-doc HOF filter against that doc's own collected ranges — no corpus-wide state"),
@@ -53,7 +71,7 @@ QUERIES = [
     ("bfs_distances", "frontier expansion: per hop ONE frontier-edge equi-join, then dedup + left-anti membership probe against the settled set (first discovery = shortest hop, no min-merge needed); work tracks the expanding boundary"),
     ("warc_roundtrip", "one Arrow pass per WARC blob (binaryFile granularity); no per-record Python round trips; md5/length computed JVM-side on the parsed payloads"),
     ("text_chunking", "zero-shuffle: one codegen projection + posexplode of a closed-form per-doc chunk grid"),
-    ("semdedup", "k-means centroids as broadcast literals (one scan/iteration); size-guarded cluster equi-join for pairs; delegate collapse via (cluster, nv) window"),
+    ("semdedup", "size-dispatched k-means, fitted eagerly: at or below KMEANS_LOCAL_MAX_VALUES vector values the (id, vector) rows come to the driver in one Arrow pull and Lloyd's runs in numpy, so the assignments enter the dump as the created frame's scan; above it centroids travel as broadcast literals (one scan/iteration); size-guarded cluster equi-join for pairs; delegate collapse via (cluster, nv) window"),
     ("weighted_sssp", "Bellman-Ford frontier relaxation: per round ONE frontier-edge equi-join + grouped min-merge against the settled costs (a later discovery can be cheaper, unlike BFS first-discovery); parallel edges min-collapsed once up front"),
     ("closeness_centrality", "per-source BFS keyed (source, vertex): per hop ONE frontier-edge equi-join + dedup + left-anti settled probe; state is |sample| x |reach| — the pivot-sampling knob that keeps closeness linear at scale; final grouped count/sum + one division"),
     ("dsir_select", "hashed-ngram importance weights: codegen window build, two B-row bucket histograms whose log-ratio table BROADCASTS onto per-doc bucket counts; one corpus shuffle (doc x bucket) + bucket-ordered fold; top-k as TakeOrderedAndProject"),
@@ -123,25 +141,45 @@ def _plan_only_overrides():
     }
 
 
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _write(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+    print(f"wrote {path}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf", default=SF_DIR)
+    ap.add_argument("--label", help="write <out>/<query>_<label>.txt plans")
+    ap.add_argument("--out", default=os.path.join(REPO, "plans", "r08"))
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
     spark = get_spark("explain", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     qs.update(_plan_only_overrides())
-    out = [
-        "# EXPLAIN — physical plans of the headline queries\n",
-        f"Generated by tools/explain_plans.py at sf_dir={SF_DIR}.",
-        "Annotations state the property each plan is expected to show.\n",
-    ]
-    for name, expectation in QUERIES:
-        df = qs[name](spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        out.append(f"\n## {name}\n\nExpected: {expectation}\n\n```\n{buf.getvalue()}```\n")
-    with open(os.path.join(os.path.dirname(SF_DIR) or ".", "/root/repo/EXPLAIN.md"), "w") as f:
-        f.write("\n".join(out))
-    print("wrote /root/repo/EXPLAIN.md")
+    if args.label:
+        os.makedirs(args.out, exist_ok=True)
+        for name in args.queries or HEADLINE:
+            plan = _plan(qs[name](spark, args.sf))
+            _write(os.path.join(args.out, f"{name}_{args.label}.txt"), plan)
+    else:
+        out = [
+            "# EXPLAIN — physical plans of the headline queries\n",
+            f"Generated by tools/explain_plans.py at sf_dir={args.sf}.",
+            "Annotations state the property each plan is expected to show.\n",
+        ]
+        for name, expectation in QUERIES:
+            plan = _plan(qs[name](spark, args.sf))
+            out.append(f"\n## {name}\n\nExpected: {expectation}\n\n```\n{plan}```\n")
+        _write(os.path.join(REPO, "EXPLAIN.md"), "\n".join(out))
     spark.stop()
 
 
