@@ -20,12 +20,17 @@ identical at any parallelism; application is a pure function.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..dispatch import log_dispatch
+
+log = logging.getLogger(__name__)
 
 END_OF_WORD = "▁"  # sentencepiece-style marker
 
@@ -80,10 +85,17 @@ def learn_bpe(
     """Learn an ordered merge list from a (word, count) table.
 
     The vocabulary is probe-checked to fit the driver (the standard
-    trainer shape); the loop is the published BPE algorithm with a
+    trainer shape): above ``VOCAB_DRIVER_MAX_ROWS`` rows it raises. The
+    probe is logged as one JSON record (path ``driver`` or ``error``)
+    on this module's logger. The loop is the published BPE algorithm with a
     deterministic (count desc, pair asc) tiebreak."""
     n = word_freqs.limit(VOCAB_DRIVER_MAX_ROWS + 1).count()
-    if n > VOCAB_DRIVER_MAX_ROWS:
+    path = log_dispatch(
+        log, "bpe.learn_bpe",
+        "driver" if n <= VOCAB_DRIVER_MAX_ROWS else "error",
+        rows=n, ceiling=VOCAB_DRIVER_MAX_ROWS,
+    )
+    if path == "error":
         raise ValueError(
             f"vocabulary exceeds {VOCAB_DRIVER_MAX_ROWS} rows; pre-trim "
             "the word-frequency table (min-count filter) before training"

@@ -8,7 +8,9 @@ map applied node-at-a-time. The scalable generalization (north rule) is:
 1. build *merge-candidate pairs* from (a) explicit curation rules,
    (b) entity ids sharing an alias AND embedding-similar, and
    (c) an LSH-bucketed embedding similarity self-join (random
-   hyperplane signatures -> band buckets -> within-bucket cosine);
+   hyperplane signatures -> band buckets -> within-bucket cosine,
+   each pair scored once at its first agreeing band through
+   :func:`~.similarity.banded_pairs`);
 2. run **connected components** over the pair graph (iterative
    min-label propagation on DataFrames, the public "hash-to-min"
    scheme; ``localCheckpoint`` per iteration truncates lineage);
@@ -16,6 +18,11 @@ map applied node-at-a-time. The scalable generalization (north rule) is:
    (deterministic across parallelism levels);
 4. remap the edge table through the resulting (entity_id ->
    canonical_id) map with two left joins + ``coalesce``.
+
+``build_canonical_map_auto`` runs all of this on the driver for
+dictionaries of at most ``DRIVER_SIM_MAX_ROWS`` rows, with exact
+cosine in place of (c). ``MAX_ALIAS_FREQ`` caps the aliases (b) uses
+on both paths.
 
 Note sharing a surface alone is NOT merge-worthy — truly ambiguous
 aliases (one surface, two different real-world entities, e.g. disease
@@ -25,6 +32,7 @@ conjunct in (b).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -32,10 +40,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .similarity import _dot
+from ..dispatch import log_dispatch
+from .similarity import _dot, ab_sides, banded_pairs
+
+log = logging.getLogger(__name__)
 
 _N_PLANES = 16  # LSH signature bits
 _N_BANDS = 4    # 4 bands x 4 bits
+# an alias mapped to more entity ids than this is too ambiguous to
+# justify a merge: both canonicalization paths skip it in source (b)
+MAX_ALIAS_FREQ = 64
+# fixed min-propagation rounds of the distributed CC in
+# build_canonical_map: curation and alias merge clusters are shallow,
+# so 8 rounds cover diameter <= 8 without a per-round convergence job
+CC_FIXED_ROUNDS = 8
 
 
 def curation_pairs(curation_rules: DataFrame) -> DataFrame:
@@ -47,36 +65,35 @@ def curation_pairs(curation_rules: DataFrame) -> DataFrame:
 
 
 def _lsh_signature_df(entities: DataFrame, seed: int = 7) -> DataFrame:
-    """entity (entity_id, embedding:array<double>) -> one row per band:
-    (entity_id, band, sig). Random hyperplanes are seeded-deterministic
-    and generated identically on every worker."""
-    fields = "entity_id string, band int, sig int, embedding array<double>"
+    """entity (entity_id, embedding:array<double>) -> one row per entity:
+    (entity_id, bkts, embedding), ``bkts`` holding the ``_N_BANDS``
+    band buckets of the signature bits. Random hyperplanes are
+    seeded-deterministic and generated identically on every worker."""
+    fields = "entity_id string, bkts array<int>, embedding array<double>"
+    per_band = _N_PLANES // _N_BANDS
+    weights = 1 << np.arange(per_band)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dim = None
         planes = None
         for pdf in batches:
-            ids, bands, sigs, embs = [], [], [], []
-            for eid, emb in zip(pdf["entity_id"], pdf["embedding"]):
+            bkts, embs = [], []
+            for emb in pdf["embedding"]:
+                if emb is None or len(emb) == 0:
+                    # no signature: null buckets never join
+                    bkts.append(None)
+                    embs.append(None)
+                    continue
                 v = np.asarray(emb, dtype=np.float64)
                 if planes is None:
-                    dim = len(v)
                     rng = np.random.RandomState(seed)
-                    planes = rng.standard_normal((_N_PLANES, dim))
-                bits = (planes @ v) > 0
-                per_band = _N_PLANES // _N_BANDS
-                for b in range(_N_BANDS):
-                    chunk = bits[b * per_band : (b + 1) * per_band]
-                    sig = int(sum(int(x) << i for i, x in enumerate(chunk)))
-                    ids.append(eid)
-                    bands.append(b)
-                    sigs.append(sig)
-                    embs.append(list(v))
+                    planes = rng.standard_normal((_N_PLANES, len(v)))
+                bits = ((planes @ v) > 0).reshape(_N_BANDS, per_band)
+                bkts.append((bits @ weights).tolist())
+                embs.append(list(v))
             yield pd.DataFrame(
                 {
-                    "entity_id": pd.Series(ids, dtype="object"),
-                    "band": pd.Series(bands, dtype="int32"),
-                    "sig": pd.Series(sigs, dtype="int32"),
+                    "entity_id": pdf["entity_id"],
+                    "bkts": pd.Series(bkts, dtype="object"),
                     "embedding": pd.Series(embs, dtype="object"),
                 }
             )
@@ -84,12 +101,7 @@ def _lsh_signature_df(entities: DataFrame, seed: int = 7) -> DataFrame:
     return entities.mapInPandas(run, schema=fields)
 
 
-def similarity_pairs(
-    alias_dict: DataFrame,
-    threshold: float = 0.90,
-    use_lsh: bool = True,
-    max_alias_freq: int = 64,
-) -> DataFrame:
+def similarity_pairs(alias_dict: DataFrame, threshold: float = 0.90) -> DataFrame:
     """Merge-candidate pairs among canonical entity ids.
 
     (b) same-alias + cosine >= threshold;
@@ -98,9 +110,12 @@ def similarity_pairs(
 
     Embeddings in the dictionary are unit-norm, so cosine == dot.
     At 10^8 dictionary entries the LSH path shuffles only
-    (band, sig)-bucketed candidates instead of the full cross join.
+    (band, bucket)-bucketed candidates instead of the full cross join,
+    and each pair leaves it once, at its first agreeing band
+    (:func:`banded_pairs`); the final ``dropDuplicates`` only merges
+    the two sources.
 
-    ``max_alias_freq`` caps the shared-alias self-join: an alias mapped
+    ``MAX_ALIAS_FREQ`` caps the shared-alias self-join: an alias mapped
     to f entity ids yields f^2 candidate rows, and at web scale a single
     stopword-like surface (f ~ 10^5) would dominate the whole shuffle.
     Aliases above the cap are excluded from path (b) — they are exactly
@@ -119,7 +134,7 @@ def similarity_pairs(
     freq_bad = (
         ents.groupBy("alias")
         .agg(F.count("*").alias("_f"))
-        .where(F.col("_f") > max_alias_freq)
+        .where(F.col("_f") > MAX_ALIAS_FREQ)
         .select("alias")
     )
     capped = ents.join(F.broadcast(freq_bad), "alias", "left_anti")
@@ -132,8 +147,6 @@ def similarity_pairs(
         .where(F.col("sim") >= threshold)
         .select("a", "b")
     )
-    if not use_lsh:
-        return shared.dropDuplicates()
 
     # (c) LSH over one representative embedding per entity id
     reps = (
@@ -141,19 +154,13 @@ def similarity_pairs(
         .agg(F.min_by("emb", "alias").alias("embedding"))
         .select("entity_id", "embedding")
     )
-    sigs = _lsh_signature_df(reps)
-    sl = sigs.select(
-        "band", "sig", F.col("entity_id").alias("a"), F.col("embedding").alias("ea")
-    )
-    sr = sigs.select(
-        "band", "sig", F.col("entity_id").alias("b"), F.col("embedding").alias("eb")
+    sigs = _lsh_signature_df(reps).select(
+        F.col("entity_id").alias("id"), F.col("embedding").alias("e"), "bkts"
     )
     lsh = (
-        sl.join(sr, ["band", "sig"])
-        .where(F.col("a") < F.col("b"))
-        .withColumn("sim", _dot("ea", "eb"))
-        .where(F.col("sim") >= threshold)
-        .select("a", "b")
+        banded_pairs(*ab_sides(sigs), F.col("id_a") < F.col("id_b"))
+        .where(_dot("e_a", "e_b") >= threshold)
+        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     )
     return shared.unionByName(lsh).dropDuplicates()
 
@@ -247,35 +254,26 @@ def build_canonical_map(
     curation_rules: DataFrame | None = None,
     alias_dict: DataFrame | None = None,
     threshold: float = 0.90,
-    fixed_cc_iterations: int | None = 8,
-    max_alias_freq: int = 64,
 ) -> DataFrame:
     """Union all pair sources, run CC, keep only rows that actually
     remap (entity_id != canonical_id) so the downstream join stays small
     and broadcastable.
 
     Merge clusters from curation rules (depth-1 from->to maps) and
-    alias/embedding similarity are shallow; 8 fixed min-propagation
-    rounds cover diameter <= 8 without per-round convergence jobs.
-    Pass ``fixed_cc_iterations=None`` to fall back to convergence-
-    checked iteration for adversarial graphs."""
+    alias/embedding similarity are shallow; the distributed CC runs
+    ``CC_FIXED_ROUNDS`` min-propagation rounds with no per-round
+    convergence job."""
     sources = []
     if curation_rules is not None:
         sources.append(curation_pairs(curation_rules))
     if alias_dict is not None:
-        sources.append(
-            similarity_pairs(
-                alias_dict, threshold, max_alias_freq=max_alias_freq
-            )
-        )
+        sources.append(similarity_pairs(alias_dict, threshold))
     if not sources:
         return spark.createDataFrame([], "entity_id string, canonical_id string")
     pairs = sources[0]
     for s in sources[1:]:
         pairs = pairs.unionByName(s)
-    cc = connected_components_auto(
-        spark, pairs, fixed_iterations=fixed_cc_iterations
-    )
+    cc = connected_components_auto(spark, pairs, fixed_iterations=CC_FIXED_ROUNDS)
     return cc.where(F.col("entity_id") != F.col("canonical_id"))
 
 
@@ -292,20 +290,28 @@ def build_canonical_map_auto(
     alias_dict: DataFrame | None = None,
     threshold: float = 0.90,
 ) -> DataFrame:
-    """Size-dispatched :func:`build_canonical_map`: small dictionaries
-    run as one collect + exact numpy cosine + union-find; large ones
-    take the distributed LSH + connected-components path. Same output —
-    including the shared-alias frequency cap, which both paths apply
-    identically (the dispatch must never change the merge decision)."""
-    import numpy as np
+    """Size-dispatched :func:`build_canonical_map`: dictionaries of at
+    most ``DRIVER_SIM_MAX_ROWS`` rows run as one collect + numpy cosine
+    + union-find on the driver; larger ones take the distributed path.
+    The choice is logged as one JSON record on this module's logger.
 
-    max_alias_freq = 64  # keep in sync with similarity_pairs' default
+    The two paths apply the same curation rules and the same
+    shared-alias source (b), frequency cap included. They differ in
+    source (c): the driver path compares every pair of entity
+    representatives by exact cosine, while the distributed path only
+    scores pairs that share an LSH band bucket, so it can miss a pair
+    above the threshold and merge fewer ids."""
     if alias_dict is None:
         return build_canonical_map(spark, curation_rules, alias_dict, threshold)
     # count-probe first (a few bytes to the driver); rows only travel
     # after the dictionary has proven it fits the driver path
     n = alias_dict.limit(DRIVER_SIM_MAX_ROWS + 1).count()
-    if n > DRIVER_SIM_MAX_ROWS:
+    path = log_dispatch(
+        log, "canonicalize.build_canonical_map_auto",
+        "driver" if n <= DRIVER_SIM_MAX_ROWS else "distributed",
+        rows=n, ceiling=DRIVER_SIM_MAX_ROWS,
+    )
+    if path == "distributed":
         return build_canonical_map(spark, curation_rules, alias_dict, threshold)
     rows = alias_dict.select("alias", "entity_id", "embedding").collect()
 
@@ -326,7 +332,7 @@ def build_canonical_map_auto(
     for alias, eid, emb in ents:
         by_alias.setdefault(alias, []).append((eid, emb))
     for cands in by_alias.values():
-        if len(cands) > max_alias_freq:
+        if len(cands) > MAX_ALIAS_FREQ:
             continue
         for i in range(len(cands)):
             for j in range(i + 1, len(cands)):
@@ -384,14 +390,21 @@ def connected_components_auto(
 ) -> DataFrame:
     """Size-dispatched connected components: driver union-find for
     small pair graphs, iterative min-label propagation otherwise.
-    Same output either way (canonical = min id in component).
+    Same output either way (canonical = min id in component) while
+    ``fixed_iterations``, if given, covers the component diameter. The
+    choice is logged as one JSON record on this module's logger.
 
     The dispatch probe is a limit+count (a few bytes back to the
     driver); the pairs only travel to the driver after the probe has
     proven they fit — never pull O(data) rows just to decide."""
     pairs = pairs.persist()
     n = pairs.limit(DRIVER_CC_MAX_PAIRS + 1).count()
-    if n > DRIVER_CC_MAX_PAIRS:
+    path = log_dispatch(
+        log, "canonicalize.connected_components_auto",
+        "driver" if n <= DRIVER_CC_MAX_PAIRS else "distributed",
+        pairs=n, ceiling=DRIVER_CC_MAX_PAIRS,
+    )
+    if path == "distributed":
         out = connected_components(pairs, fixed_iterations=fixed_iterations)
         pairs.unpersist()
         return out

@@ -14,6 +14,12 @@ shuffle rather than an O(n^2) cross join:
 * SimHash   — 64-bit token-hash majority signature (one Arrow UDF),
   near-dup = hamming distance <= d via banded buckets + bit_count.
 
+Both banded families find candidates through
+:func:`~.similarity.banded_pairs`, the LSH join shared with the
+embedding operators and canonicalization: each pair is kept at the
+first band where its two bucket arrays agree, so no pair-dedup
+exchange follows the bucket join.
+
 The three Jaccard operators share one exact verifier and one broadcast
 decision. Candidate pairs are confirmed by :func:`_verify_jaccard`, and
 both it and the n-gram pair counter choose between a broadcast of the
@@ -38,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dispatch import log_dispatch
+from .similarity import ab_sides, banded_pairs
 from .textquality import norm_tokens
 
 log = logging.getLogger(__name__)
@@ -861,7 +868,8 @@ def minhash_lsh_pairs(
     materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via banding: docs agreeing on all rows of any band
-    become candidates (bucket equi-join on (band, band-slice-hash)),
+    become candidates (bucket equi-join on (band, band-slice-hash),
+    each pair once, at its first agreeing band: :func:`banded_pairs`),
     then candidates are verified with exact n-gram Jaccard. With
     num_perm=32, bands=8 (r=4), the S-curve crosses ~0.7 — standard
     public MinHash-LSH parameterization.
@@ -898,33 +906,20 @@ def minhash_lsh_pairs(
         .agg(*aggs)
         .select("id", F.array(*[F.col(f"h{i}") for i in range(num_perm)]).alias("sig"))
     )
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.array(
+    bkts = F.array(
+        *[
+            F.xxhash64(
                 *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
+                    F.element_at("sig", b * rows_per_band + r + 1)
+                    for r in range(rows_per_band)
                 ]
             )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-    l = banded.select(F.col("id").alias("id_a"), "band", "bucket")
-    r = banded.select(F.col("id").alias("id_b"), "band", "bucket")
-    candidates = (
-        l.join(r, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
+            for b in range(bands)
+        ]
+    )
+    candidates = banded_pairs(
+        *ab_sides(sigs.select("id", bkts.alias("bkts"))),
+        F.col("id_a") < F.col("id_b"),
     )
 
     # verify candidates with exact Jaccard (reuses the cached per-doc
@@ -993,16 +988,23 @@ def _band_bounds(bits: int, bands: int) -> list[tuple[int, int]]:
 
 
 def simhash_candidates_from_sigs(
-    sigs: DataFrame, max_hamming: int = 3, bands: int | None = None
+    sigs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """Candidate near-dup pairs from a (id, simhash) table via banded
     buckets, verified with JVM ``bit_count(a ^ b) <= max_hamming``.
 
     The band count is DERIVED from the hamming budget: with
-    ``bands = max_hamming + 1`` (the default), any two signatures
-    differing in <= max_hamming bits must agree on at least one whole
-    band (pigeonhole), so candidate recall over the hamming budget is
+    ``max_hamming + 1`` bands, any two signatures differing in <=
+    max_hamming bits must agree on at least one whole band
+    (pigeonhole), so candidate recall over the hamming budget is
     guaranteed — not empirical — at every budget.
+
+    Each pair is joined once, at its first agreeing band
+    (:func:`banded_pairs`), and the hamming filter runs per join row
+    inside the join's codegen stage: on low-entropy corpora the 6-bit
+    band buckets degenerate (50k docs -> 2.35B joined rows measured at
+    sf1.0), and a pair-dedup exchange before the filter took 660 s
+    where the in-stage filter takes ~35 s.
 
     Cost model (measured, not hoped): the *verification* work is
     proportional to the number of pairs within the hamming budget —
@@ -1013,65 +1015,25 @@ def simhash_candidates_from_sigs(
     variant was measured 3x WORSE there — it re-finds each degenerate
     pair C(b,2)/b times). Keep ``max_hamming`` small at scale; that is
     the knob that bounds work."""
-    if bands is None:
-        bands = max_hamming + 1
-    if bands > 64:
-        raise ValueError("bands must be <= 64 for a 64-bit signature")
-    bounds = _band_bounds(64, bands)
-    banded = sigs.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", shift)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bucket"),
-                    )
-                    for b, (shift, width) in enumerate(bounds)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.bucket")
-    l = banded.select(
-        F.col("id").alias("id_a"), F.col("simhash").alias("sig_a"), "band", "bucket"
+    if max_hamming > 63:
+        raise ValueError(
+            "max_hamming must be <= 63: a 64-bit signature has at most "
+            "64 bands"
+        )
+    bkts = F.array(
+        *[
+            F.shiftright("simhash", shift).bitwiseAND(F.lit((1 << width) - 1))
+            for shift, width in _band_bounds(64, max_hamming + 1)
+        ]
     )
-    r = banded.select(
-        F.col("id").alias("id_b"), F.col("simhash").alias("sig_b"), "band", "bucket"
-    )
-    # hamming filter BEFORE the pair dedup (r8): on low-entropy corpora
-    # the 6-bit band buckets degenerate (50k docs -> 2.35B joined rows
-    # measured at sf1.0) and the old shape shuffled ALL of them through
-    # dropDuplicates before the one-cycle bit_count filter cut ~all.
-    # bit_count runs inside the join's codegen stage, so non-candidate
-    # rows now die in-stage (measured 660s -> ~35s at sf1.0). hamming
-    # is a pure function of the two signatures, so filtering per join
-    # row instead of per deduped pair selects exactly the same pair
-    # set. Second r8 pass: the pair dedup exchange is gone entirely —
-    # both signatures ride the join rows, so each pair is kept ONLY at
-    # its FIRST agreeing band (an in-stage predicate over the same
-    # band slices the buckets were built from); every within-budget
-    # pair survives exactly once, the bit_count redundancy across
-    # agreeing bands disappears with it, and the operator emits with
-    # NO exchange at all after the bucket join.
-    def band_eq(b: int):
-        shift, width = bounds[b]
-        m = F.lit((1 << width) - 1)
-        return F.shiftright(F.col("sig_a"), shift).bitwiseAND(
-            m
-        ) == F.shiftright(F.col("sig_b"), shift).bitwiseAND(m)
-
-    first_agree = F.when(band_eq(0), F.lit(0))
-    for b in range(1, bands):
-        first_agree = first_agree.when(band_eq(b), F.lit(b))
     return (
-        l.join(r, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.col("band") == first_agree)
+        banded_pairs(
+            *ab_sides(sigs.select("id", "simhash", bkts.alias("bkts"))),
+            F.col("id_a") < F.col("id_b"),
+        )
         .withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+            "hamming",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
         )
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -1083,14 +1045,13 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    bands: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming. Candidates
     come from ``max_hamming + 1`` band buckets (pigeonhole guarantee —
     see :func:`simhash_candidates_from_sigs`); verification is JVM
     ``bit_count(a ^ b)``."""
     sigs = simhash_signatures(df, id_col, text_col)
-    return simhash_candidates_from_sigs(sigs, max_hamming, bands)
+    return simhash_candidates_from_sigs(sigs, max_hamming)
 
 
 def simhash_verified_pairs(
@@ -1109,8 +1070,8 @@ def simhash_verified_pairs(
 
     This is the production dedup shape — cheap bitwise candidate
     generation, exact verification only on the pruned set. Candidate
-    recall over the hamming budget is GUARANTEED (bands =
-    max_hamming + 1, pigeonhole — see simhash_candidates_from_sigs),
+    recall over the hamming budget is GUARANTEED (max_hamming + 1
+    bands, pigeonhole — see simhash_candidates_from_sigs),
     so the only remaining approximation is SimHash itself: whether
     hamming <= max_hamming captures every true Jaccard >= t pair is
     corpus-dependent. Measured on the synthetic docs corpus: budget 10

@@ -18,6 +18,13 @@ Two paths, as a 100 TB pipeline needs both:
   re-ranks candidates. Recall is tunable with bands; the shuffle moves
   only (band, bucket) groups, never the full cross join.
 
+Every banded LSH join in the package (this module's ANN candidates
+and near-dup pairs, dedup's MinHash and SimHash, canonicalization's
+embedding merge) goes through :func:`banded_pairs`. It keeps each pair
+at the first band where both sides' bucket arrays agree, so each pair
+leaves the join once and no pair-dedup exchange follows. It assumes
+each id appears once per side.
+
 Also: embedding-based near-duplicate pairs (cosine >= threshold), the
 "embedding-cosine near-dup" dedup variant, and SemDeDup (k-means, then
 within-cluster near-dup groups). Its k-means (:func:`_kmeans_fit`, also
@@ -129,6 +136,65 @@ def _hyperplane_signs(vec_col, dim: int, n_planes: int, seed: int = 11):
     return out
 
 
+def banded_pairs(a: DataFrame, b: DataFrame, pair) -> DataFrame:
+    """Banded-LSH candidate join that emits each pair once, at the first
+    band where its two sides agree.
+
+    ``a`` carries ``bkts_a`` and ``b`` carries ``bkts_b``: one array of
+    per-band bucket values per row. Their other columns are the
+    caller's id and payload, and no name may appear on both sides.
+    Each side is ``posexplode``d to (band, bucket) rows and the two are
+    equi-joined on them under the ``pair`` condition (``id_a < id_b``
+    for a self-join). A join row is kept only when
+
+        band == array_position(zip_with(bkts_a, bkts_b, (x, y) -> x = y),
+                               true) - 1
+
+    which is a pure function of the two arrays, so it folds into the
+    join's own condition. Every pair sharing at least one bucket comes
+    out exactly once, and no pair-dedup exchange follows the join. A
+    null bucket matches nothing: the equi-join skips it and ``x = y``
+    is never true on it.
+
+    Precondition: each id appears at most once per side; a repeated id
+    repeats its pairs. Returns both sides' columns without the bucket
+    arrays.
+    """
+    # posexplode(concat(bkts)), not of the bare column: over a bare
+    # column Catalyst infers a size(bkts) > 0 filter and pushes it below
+    # the projection that builds the buckets, so every row computes its
+    # signature once more per band (lsh_candidates ran 2.3x slower)
+    ea = a.select("*", F.posexplode(F.concat("bkts_a")).alias("band", "bucket"))
+    eb = b.select("*", F.posexplode(F.concat("bkts_b")).alias("band", "bucket"))
+    first = F.array_position(
+        F.zip_with("bkts_a", "bkts_b", lambda x, y: x == y), True
+    ) - 1
+    return (
+        ea.join(eb, ["band", "bucket"])
+        .where(pair & (F.col("band") == first))
+        .drop("band", "bucket", "bkts_a", "bkts_b")
+    )
+
+
+def ab_sides(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a :func:`banded_pairs` self-join: ``df`` with
+    every column suffixed ``_a``, then ``_b``."""
+    return tuple(
+        df.select(*[F.col(c).alias(f"{c}_{s}") for c in df.columns])
+        for s in "ab"
+    )
+
+
+def _with_buckets(df: DataFrame, sig, n_bands: int, width: int, name: str):
+    """``df`` plus ``name``: the int signature ``sig`` split into
+    ``n_bands`` buckets of ``width`` low-order bits each. The signature
+    is projected on its own first, so each row computes it once rather
+    than once per band."""
+    m = F.lit((1 << width) - 1)
+    bkts = [F.shiftright("_sig", b * width).bitwiseAND(m) for b in range(n_bands)]
+    return df.withColumn("_sig", sig).select(*df.columns, F.array(*bkts).alias(name))
+
+
 def lsh_candidates(
     corpus: DataFrame,
     queries: DataFrame,
@@ -141,42 +207,23 @@ def lsh_candidates(
 ) -> DataFrame:
     """The LSH candidate stage of lsh_ann_topk, exposed so the recall
     harness (tools/ann_recall.py) measures the exact production
-    candidate sets: distinct (query_id, neighbor_id, queryv, neighborv)
-    rows sharing at least one signature band. Each band is an equi-join
-    on (band, bucket); the query side is broadcast."""
-    per_band = n_planes // bands
+    candidate sets: (neighbor_id, neighborv, query_id, queryv) rows
+    sharing at least one signature band, each pair once
+    (:func:`banded_pairs`, so ``id_col`` must be unique within
+    ``corpus`` and within ``queries``). The query side is broadcast."""
 
-    def with_bands(df: DataFrame, prefix: str) -> DataFrame:
+    def side(df: DataFrame, prefix: str, s: str) -> DataFrame:
         v = F.col(vec_col).cast("array<double>")
-        sig = _hyperplane_signs(v, dim, n_planes, seed)
-        out = df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            v.alias(f"{prefix}v"),
-            sig.alias("sig"),
-        )
-        bb = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sig", b * per_band)
-                        .bitwiseAND(F.lit((1 << per_band) - 1))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        )
-        return out.select(f"{prefix}_id", f"{prefix}v", bb.alias("bb")).select(
-            f"{prefix}_id", f"{prefix}v", "bb.band", "bb.bucket"
+        return _with_buckets(
+            df.select(F.col(id_col).alias(f"{prefix}_id"), v.alias(f"{prefix}v")),
+            _hyperplane_signs(F.col(f"{prefix}v"), dim, n_planes, seed),
+            bands, n_planes // bands, f"bkts_{s}",
         )
 
-    cb = with_bands(corpus, "neighbor")
-    qb = with_bands(queries, "query")
-    return (
-        cb.join(F.broadcast(qb), ["band", "bucket"])
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .dropDuplicates(["query_id", "neighbor_id"])
+    return banded_pairs(
+        side(corpus, "neighbor", "a"),
+        F.broadcast(side(queries, "query", "b")),
+        F.col("query_id") != F.col("neighbor_id"),
     )
 
 
@@ -227,79 +274,29 @@ def embedding_neardup_pairs(
         b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        # Banded-join discipline for the degenerate-bucket case (the
-        # simhash r8 lesson, taken further). With few planes per band
-        # the bucket join degenerates — 1-bit buckets split n vectors
-        # into two ~n/2 halves, so the raw join emits O(bands * n^2/2)
-        # rows each carrying BOTH double vectors; the old shape
-        # (dropDuplicates first, cosine after) measured 74 GB of sort
-        # spill at 20k vectors. Three output-identical changes:
-        # * each pair is kept ONLY at its FIRST agreeing band (the
-        #   signatures ride the join rows, so "no earlier band agrees"
-        #   is an in-stage predicate) — every unordered pair survives
-        #   exactly once and the pair-dedup exchange disappears
-        #   entirely, along with the bands-fold redundancy in cosine
-        #   work;
-        # * per-vector norms are hoisted out of the pair loop (same
-        #   IEEE expression shape: dot / (norm_a * norm_b));
-        # * the threshold filter runs per join row inside the codegen
-        #   stage, so non-candidates never reach any exchange.
-        sig = _hyperplane_signs(F.col("v"), dim, n_planes)
-        per_band = n_planes // bands
-        mask = (1 << per_band) - 1
-        banded = base.withColumn("sig", sig).withColumn(
-            "nrm", _norm(F.col("v"))
-        ).select(
-            "id",
-            "v",
-            "sig",
-            "nrm",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.shiftright("sig", bi * per_band)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("bucket"),
-                        )
-                        for bi in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("id", "v", "sig", "nrm", "bb.band", "bb.bucket")
-        a = banded.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.col("sig").alias("sig_a"), F.col("nrm").alias("na"),
-            "band", "bucket",
+        # Banded-join discipline for the degenerate-bucket case: with
+        # few planes per band the bucket join degenerates (1-bit
+        # buckets split n vectors into two ~n/2 halves), so the raw
+        # join emits O(bands * n^2/2) rows each carrying BOTH double
+        # vectors; dropDuplicates first and cosine after measured 74 GB
+        # of sort spill at 20k vectors. So each pair is kept only at
+        # its first agreeing band (banded_pairs: no pair-dedup
+        # exchange, no bands-fold cosine work), per-vector norms are
+        # hoisted out of the pair loop (same IEEE expression shape:
+        # dot / (norm_a * norm_b)), and the threshold runs per join
+        # row inside the codegen stage.
+        banded = _with_buckets(
+            base.withColumn("n", _norm(F.col("v"))),
+            _hyperplane_signs(F.col("v"), dim, n_planes),
+            bands, n_planes // bands, "bkts",
         )
-        b = banded.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("sig").alias("sig_b"), F.col("nrm").alias("nb"),
-            "band", "bucket",
-        )
-
-        def band_eq(bi: int):
-            return F.shiftright(F.col("sig_a"), bi * per_band).bitwiseAND(
-                F.lit(mask)
-            ) == F.shiftright(F.col("sig_b"), bi * per_band).bitwiseAND(
-                F.lit(mask)
-            )
-
-        first_agree = F.when(band_eq(0), F.lit(0))
-        for bi in range(1, bands):
-            first_agree = first_agree.when(band_eq(bi), F.lit(bi))
         pairs = (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(F.col("band") == first_agree)
+            banded_pairs(*ab_sides(banded), F.col("id_a") < F.col("id_b"))
             .withColumn(
                 "cos_sim",
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb")),
+                _dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")),
             )
             .where(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", "cos_sim")
         )
         return pairs.select(
             "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")

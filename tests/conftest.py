@@ -53,3 +53,37 @@ def kmeans_paths(monkeypatch):
         yield "distributed"
 
     return paths
+
+
+def _join_dedup(a, b, pair):
+    """The banded candidate join before ``banded_pairs``: explode every
+    band, equi-join on (band, bucket), then ``dropDuplicates`` on the
+    id pair."""
+    from pyspark.sql import functions as F
+
+    ea = a.select("*", F.posexplode("bkts_a").alias("band", "bucket"))
+    eb = b.select("*", F.posexplode("bkts_b").alias("band", "bucket"))
+    ids = [c for c in a.columns + b.columns if "id" in c.split("_")]
+    return (
+        ea.join(eb, ["band", "bucket"])
+        .where(pair)
+        .dropDuplicates(ids)
+        .drop("band", "bucket", "bkts_a", "bkts_b")
+    )
+
+
+@pytest.fixture
+def band_join_paths(monkeypatch):
+    """Run a banded-LSH test on both candidate-join shapes: ``for path in
+    band_join_paths(): ...`` yields ``"first_band"`` (``banded_pairs``),
+    then ``"join_dedup"`` with ``banded_pairs`` replaced in every
+    calling module by :func:`_join_dedup`."""
+    from bertseyeview_spark.operators import canonicalize, dedup, similarity
+
+    def paths():
+        yield "first_band"
+        for mod in (canonicalize, dedup, similarity):
+            monkeypatch.setattr(mod, "banded_pairs", _join_dedup)
+        yield "join_dedup"
+
+    return paths

@@ -2,6 +2,8 @@
 word-frequency-table formulation (training never touches raw text
 twice)."""
 
+import pytest
+
 from bertseyeview_spark.operators.bpe import (
     END_OF_WORD,
     bpe_tokenize,
@@ -272,3 +274,38 @@ FROM enc WHERE step = {len(BPE_MERGES_V1)}
     assert set(got) == set(words)
     for w in words:
         assert got[w] == encode_word(w, ranks), w
+
+
+def test_learn_bpe_dispatch_records(spark, monkeypatch, caplog):
+    """The vocabulary probe logs one record with the probed row count
+    and the ceiling: driver at the default ceiling; with the ceiling at
+    0 the record reads error and training raises."""
+    import json
+    import logging
+
+    from bertseyeview_spark.operators import bpe
+
+    def records():
+        out = [
+            json.loads(r.getMessage())
+            for r in caplog.records
+            if r.name == bpe.__name__
+        ]
+        caplog.clear()
+        return out
+
+    docs = spark.createDataFrame([(0, "low lower newest")], "doc_id long, text string")
+    wf = word_frequencies(docs, "text")
+    caplog.set_level(logging.INFO, logger=bpe.__name__)
+    learn_bpe(wf, n_merges=2)
+    assert records() == [{
+        "dispatcher": "bpe.learn_bpe", "rows": 3,
+        "ceiling": bpe.VOCAB_DRIVER_MAX_ROWS, "path": "driver",
+    }]
+    monkeypatch.setattr(bpe, "VOCAB_DRIVER_MAX_ROWS", 0)
+    with pytest.raises(ValueError, match="vocabulary exceeds 0 rows"):
+        learn_bpe(wf, n_merges=2)
+    assert records() == [{
+        "dispatcher": "bpe.learn_bpe", "rows": 1, "ceiling": 0,
+        "path": "error",
+    }]

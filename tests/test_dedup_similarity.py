@@ -441,8 +441,83 @@ def test_embedding_neardup_exact(spark):
     assert pairs == {(0, 1)}
 
 
-def test_embedding_neardup_banded_matches_exact(spark):
-    """The banded branch (r8: pairs kept only at their FIRST agreeing
+def _banded_lsh_candidates(spark):
+    """20 seeded 8-d vectors, three exact copies of vector 0 (equal
+    signatures, so they agree in every band) and a null vector."""
+    vecs = np.random.RandomState(5).standard_normal((20, 8))
+    rows = [(i, [float(x) for x in vecs[i]]) for i in range(20)]
+    rows += [(100 + i, rows[0][1]) for i in range(3)] + [(200, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.where((F.col("vec_id") < 4) | (F.col("vec_id") >= 100))
+    return SIM.lsh_candidates(df, q, dim=8, n_planes=12, bands=4)
+
+
+def _banded_minhash(spark):
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    rows = [(i, base) for i in range(3)] + [
+        (3, base + " today"),
+        (4, "an unrelated document about shuffles joins and exchanges"),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    return D.minhash_lsh_pairs(df, "doc_id", "text", n=3, threshold=0.5)
+
+
+def _banded_simhash(spark):
+    sig = 0x0123456789ABCDEF
+    rows = [(i, sig) for i in range(3)] + [
+        (3, sig ^ 0b101),
+        (4, 0x7777000011112222),
+        (5, None),
+    ]
+    sigs = spark.createDataFrame(rows, "id long, simhash long")
+    return D.simhash_candidates_from_sigs(sigs, max_hamming=3)
+
+
+def _banded_direct(spark):
+    """banded_pairs itself, on bucket arrays with null elements."""
+    rows = [(1, [None, 5, 7]), (2, [None, 5, 7]), (3, [None, None, 7]),
+            (4, [1, 2, 3]), (5, [1, None, 3]), (6, None)]
+    df = spark.createDataFrame(rows, "id long, bkts array<long>")
+    return SIM.banded_pairs(*SIM.ab_sides(df), F.col("id_a") < F.col("id_b"))
+
+
+_BANDED_CALLERS = {
+    "minhash_lsh_pairs": (_banded_minhash, 3),
+    "simhash_candidates_from_sigs": (_banded_simhash, 6),
+    "lsh_candidates": (_banded_lsh_candidates, 12),
+    "banded_pairs": (_banded_direct, 4),
+}
+
+
+def _rows(df):
+    return sorted(
+        tuple(tuple(x) if isinstance(x, list) else x for x in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize("caller", list(_BANDED_CALLERS))
+def test_banded_callers_match_join_dedup(spark, band_join_paths, caller):
+    """The banded candidate generators join through banded_pairs. On
+    planted copies that agree in every band, plus a null input (a null
+    bucket element for banded_pairs itself), each returns the pair set
+    of the old every-band join + dropDuplicates shape, and no pair row
+    twice. embedding_neardup_pairs and canonicalize.similarity_pairs
+    take the same case in their own tests."""
+    build, min_pairs = _BANDED_CALLERS[caller]
+    got = {}
+    for path in band_join_paths():
+        out = build(spark)
+        got[path] = _rows(out)
+        if path == "first_band":
+            assert out.count() == out.distinct().count()
+    assert got["first_band"] == got["join_dedup"]
+    assert len(got["first_band"]) >= min_pairs
+
+
+def test_embedding_neardup_banded_matches_exact(spark, band_join_paths):
+    """The banded branch (pairs kept only at their FIRST agreeing
     band, cosine + threshold filtered in-stage, no pair dedup) must
     emit each qualifying pair exactly once. At saturated banding
     (per-band width 1, miss probability 2^-n_planes on near-identical
@@ -455,18 +530,26 @@ def test_embedding_neardup_banded_matches_exact(spark):
     for i in range(10):
         rows.append((100 + i, [float(x + 0.001 * ((i + j) % 5 - 2))
                                for j, x in enumerate(vecs[i])]))
+    # exact copies of vector 0 agree in every band; a null vector
+    # has no cosine
+    rows += [(200 + i, rows[0][1]) for i in range(2)] + [(300, None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     exact = sorted(map(tuple, SIM.embedding_neardup_pairs(
         df, threshold=0.98, dim=16, exact=True).collect()))
-    banded = sorted(map(tuple, SIM.embedding_neardup_pairs(
-        df, threshold=0.98, dim=16, n_planes=12, bands=12,
-        exact=False).collect()))
-    assert banded == exact and len(exact) >= 10
-    modest = sorted(map(tuple, SIM.embedding_neardup_pairs(
-        df, threshold=0.98, dim=16, n_planes=12, bands=3,
-        exact=False).collect()))
+    banded = {}
+    for path in band_join_paths():
+        banded[path] = [
+            sorted(map(tuple, SIM.embedding_neardup_pairs(
+                df, threshold=0.98, dim=16, n_planes=12, bands=bands,
+                exact=False).collect()))
+            for bands in (12, 3)
+        ]
+    saturated, modest = banded["first_band"]
+    assert saturated == exact and len(exact) >= 13
     assert set(modest) <= set(exact)
     assert len(modest) == len(set(modest))  # no pair emitted twice
+    # the same pair sets as the old every-band join + dropDuplicates
+    assert banded["first_band"] == banded["join_dedup"]
 
 
 def test_fingerprint_vs_python(spark, docs):
@@ -616,8 +699,8 @@ def test_dedup_releases_shingle_cache(spark):
 
 
 def test_simhash_banding_pigeonhole(spark):
-    """Bands are derived from the hamming budget (bands = max_hamming
-    + 1): a signature pair whose differing bits land in EVERY 16-bit
+    """Bands are derived from the hamming budget (max_hamming + 1
+    bands): a signature pair whose differing bits land in EVERY 16-bit
     quarter — invisible to the old fixed 4x16 banding beyond hamming 3
     — must be found when max_hamming covers it."""
     import bertseyeview_spark.operators.dedup as D
@@ -654,6 +737,9 @@ def test_simhash_banding_pigeonhole(spark):
     # old fixed-width behavior is preserved at the default budget:
     # 4 bands of 16 bits
     assert D._band_bounds(64, 4) == [(0, 16), (16, 16), (32, 16), (48, 16)]
+    # a 64-bit signature splits into at most 64 bands: max_hamming 63
+    with pytest.raises(ValueError, match="max_hamming must be <= 63"):
+        D.simhash_candidates_from_sigs(sigs, max_hamming=64)
 
 
 def test_decontaminate_flags_benchmark_overlap(spark):

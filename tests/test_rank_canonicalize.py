@@ -135,24 +135,36 @@ def test_connected_components_clusters(spark):
     assert len(set(cc.values())) == 3
 
 
-def test_similarity_pairs_merges_near_duplicates_only(spark):
-    import pandas as pd
-
+def test_similarity_pairs_merges_near_duplicates_only(spark, band_join_paths):
+    """Identical embeddings (they agree in every LSH band) merge,
+    dissimilar ones and an entity with no embedding do not, and the LSH
+    path returns the pair set of the old every-band join +
+    dropDuplicates shape."""
     e1 = [float(x) for x in text_embedding("alpha beta gamma")]
     e2 = [float(x) for x in text_embedding("alpha beta gamma")]  # identical
     e3 = [float(x) for x in text_embedding("totally different context")]
-    pdf = pd.DataFrame(
-        [
-            ("alpha syndrome", "Disease:MESH:D1", "disease", e1),
-            ("alpha disorder", "Disease:OMIM:9", "disease", e2),
-            ("beta complex", "Disease:MESH:D2", "disease", e3),
-        ],
-        columns=["alias", "entity_id", "entity_type", "embedding"],
+    rows = [
+        ("alpha syndrome", "Disease:MESH:D1", "disease", e1),
+        ("alpha disorder", "Disease:OMIM:9", "disease", e2),
+        ("alpha condition", "Disease:DOID:4", "disease", e2),
+        ("beta complex", "Disease:MESH:D2", "disease", e3),
+        ("alpha syndrome", "Disease:MESH:D3", "disease", None),
+    ]
+    df = spark.createDataFrame(
+        rows, "alias string, entity_id string, entity_type string, "
+        "embedding array<double>",
     )
-    df = spark.createDataFrame(pdf)
-    pairs = {(r["a"], r["b"]) for r in similarity_pairs(df, threshold=0.9).collect()}
+    got = {}
+    for path in band_join_paths():
+        out = similarity_pairs(df, threshold=0.9)
+        got[path] = sorted(map(tuple, out.collect()))
+    pairs = set(got["first_band"])
+    assert len(pairs) == len(got["first_band"])
     assert ("Disease:MESH:D1", "Disease:OMIM:9") in pairs
+    assert ("Disease:DOID:4", "Disease:MESH:D1") in pairs
     assert all("Disease:MESH:D2" not in p for p in pairs)
+    assert all("Disease:MESH:D3" not in p for p in pairs)
+    assert got["first_band"] == got["join_dedup"]
 
 
 def test_ambiguous_alias_not_merged(spark):
@@ -163,3 +175,68 @@ def test_ambiguous_alias_not_merged(spark):
     pairs = {(r["a"], r["b"]) for r in similarity_pairs(alias, threshold=0.9).collect()}
     assert ("Disease:MESH:D000690", "Gene:2671") not in pairs
     assert ("Gene:2671", "Disease:MESH:D000690") not in pairs
+
+
+def _canon_records(caplog):
+    from bertseyeview_spark.operators import canonicalize
+
+    out = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == canonicalize.__name__
+    ]
+    caplog.clear()
+    return out
+
+
+def test_build_canonical_map_auto_dispatch_records(spark, monkeypatch, caplog):
+    """The dictionary-size dispatch logs one record per call with the
+    probed row count and the ceiling: driver at the default ceiling,
+    distributed with the ceiling at 0."""
+    from bertseyeview_spark.operators import canonicalize
+
+    alias = alias_dict_to_spark(spark, build_alias_dict())
+    n = alias.count()
+    caplog.set_level(logging.INFO, logger=canonicalize.__name__)
+    canonicalize.build_canonical_map_auto(spark, None, alias)
+    assert _canon_records(caplog) == [{
+        "dispatcher": "canonicalize.build_canonical_map_auto",
+        "rows": n, "ceiling": canonicalize.DRIVER_SIM_MAX_ROWS,
+        "path": "driver",
+    }]
+    monkeypatch.setattr(canonicalize, "DRIVER_SIM_MAX_ROWS", 0)
+    canonicalize.build_canonical_map_auto(spark, None, alias).collect()
+    sim, cc = _canon_records(caplog)
+    assert sim == {
+        "dispatcher": "canonicalize.build_canonical_map_auto",
+        "rows": 1, "ceiling": 0, "path": "distributed",
+    }
+    # the distributed path's pair graph goes through the CC dispatch
+    assert cc["dispatcher"] == "canonicalize.connected_components_auto"
+
+
+def test_connected_components_auto_dispatch_records(spark, monkeypatch, caplog):
+    """The pair-count dispatch logs one record per call with the probed
+    pair count and the ceiling, on both sides of it, and both paths
+    agree on the components."""
+    from bertseyeview_spark.operators import canonicalize
+
+    pairs = spark.createDataFrame(
+        [("a1", "a2"), ("a2", "a3"), ("z1", "z2")], ["a", "b"]
+    )
+    caplog.set_level(logging.INFO, logger=canonicalize.__name__)
+    driver = sorted(map(tuple, canonicalize.connected_components_auto(
+        spark, pairs).collect()))
+    assert _canon_records(caplog) == [{
+        "dispatcher": "canonicalize.connected_components_auto",
+        "pairs": 3, "ceiling": canonicalize.DRIVER_CC_MAX_PAIRS,
+        "path": "driver",
+    }]
+    monkeypatch.setattr(canonicalize, "DRIVER_CC_MAX_PAIRS", 0)
+    dist = sorted(map(tuple, canonicalize.connected_components_auto(
+        spark, pairs).collect()))
+    assert _canon_records(caplog) == [{
+        "dispatcher": "canonicalize.connected_components_auto",
+        "pairs": 1, "ceiling": 0, "path": "distributed",
+    }]
+    assert dist == driver

@@ -43,13 +43,15 @@ QUERIES = [
     ("top_articles_citations", "two semi-joined grouped counts; TakeOrderedAndProject top-k"),
     ("top_entities", "broadcast dim join; partial+final count; distributed top-k"),
     ("search_topk", "predicate pushdown into the parquet scan; top-k"),
-    ("minhash_lsh_dedup", "JVM-side signatures; banded bucket equi-join; broadcast-arrays candidate verification (size(array_intersect) per pair, shingle stream never re-exploded); no Python"),
+    ("minhash_lsh_dedup", "JVM-side signatures; banded bucket equi-join through banded_pairs (first agreeing band in the join condition: no pair-dedup aggregate or exchange); broadcast-arrays candidate verification (size(array_intersect) per pair, shingle stream never re-exploded); no Python"),
     ("embedding_topk_cosine", "broadcast query side; codegen'd cosine; window top-k"),
     ("events_windowed_agg", "single hash agg over time buckets"),
     ("label_abundance_two_groups", "ONE scan of the mention set: membership tags via broadcast left joins, single grouped agg with conditional counts"),
     ("citation_rows", "metadata prepped once, joined twice (article/reference side); single boundary window for the ordinal"),
     ("node_properties_search", "properties map built from one meta join; map projection; filter + top-k"),
-    ("embedding_neardup", "LSH banded self-join (no cross join); codegen'd cosine verify"),
+    ("simhash_dedup", "one Arrow UDF for the signatures; max_hamming + 1 band buckets through banded_pairs (first agreeing band in the join condition, bit_count hamming filter in the same stage, no pair-dedup exchange); broadcast-arrays exact-Jaccard verify"),
+    ("embedding_ann_lsh", "hyperplane signatures JVM-side; banded_pairs with the query side broadcast (first agreeing band in the join condition, no pair-dedup exchange); cosine re-rank + window top-k"),
+    ("embedding_neardup", "LSH banded self-join through banded_pairs (no cross join; first agreeing band in the join condition, so no pair-dedup exchange); codegen'd cosine verify"),
     ("ngram_jaccard_dedup", "cost-based plan selection: broadcast-CSR MapInArrow pair counting at this scale (shuffle equi-join past the broadcast ceiling, ppjoin prefix pruning past the candidate-volume threshold); codegen shingling, broadcast size joins, exact Jaccard filter in Catalyst"),
     ("motif_two_hop", "pattern terms compiled to chained equi-joins (Cypher MATCH analogue)"),
     ("gopher_quality", "codegen'd splits + one (id, bigram) grouped count; no Python"),
@@ -110,6 +112,13 @@ def _plan_only_overrides():
             threshold=0.8, materialize=False,
         )
 
+    def simhash(spark, sf_dir):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        return D.simhash_verified_pairs(
+            docs, "doc_id", "text", max_hamming=10, n=3, threshold=0.8,
+            materialize=False,
+        )
+
     def substr_spans(spark, sf_dir):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         return D.exact_substring_spans(
@@ -135,6 +144,7 @@ def _plan_only_overrides():
     return {
         "ngram_jaccard_dedup": ngram,
         "minhash_lsh_dedup": minhash,
+        "simhash_dedup": simhash,
         "exact_substring_dedup": substr_spans,
         "substring_cut": substr_cut,
         "repetition_signals": repetition,
