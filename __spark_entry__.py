@@ -417,12 +417,10 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # prefix_filter="auto" (the default): ppjoin candidate pruning is
-    # output-identical (tests assert equality with the plain path) but
-    # its window+joins only pay off when the shingle-join candidate
-    # volume is large — the operator probes that volume and picks the
-    # path, so this query runs the cheap exact join at bench scale and
-    # the pruned join at web scale.
+    # the operator picks its own pair-count path from one ceiling
+    # probe: the broadcast CSR kernel at bench scale, ppjoin (prefix,
+    # length and positional filters; output-identical, asserted in
+    # tests) once the shingle table outgrows the broadcast ceilings.
     # max_shingle_freq=None: this query is graded against an EXACT SQL
     # oracle, so the skew cap (an intentional approximation for
     # boilerplate-heavy corpora) must be off here — exactness-sensitive
@@ -3399,9 +3397,8 @@ SELECT source, count(*) AS n_docs,
   quantile_cont(n_chars, 0.99) AS p99
 FROM documents GROUP BY source
 """,
-        # cluster membership via recursive reachability; min id is the
-        # representative (string min — the engine canonicalizer works on
-        # string ids, so the comparison is lexicographic on both sides)
+        # cluster membership via recursive reachability; the numeric
+        # min id is the representative, ids keep their BIGINT type
         "dedup_representatives": """
 WITH RECURSIVE toks AS (
   SELECT doc_id, string_split_regex(regexp_replace(lower(text), '^[ \\t\\n\\x0B\\f\\r]+|[ \\t\\n\\x0B\\f\\r]+$', '', 'g'), '[ \\t\\n\\x0B\\f\\r]+') t FROM documents
@@ -3419,7 +3416,7 @@ common AS (
   GROUP BY 1, 2
 ),
 prs AS (
-  SELECT id_a::VARCHAR AS a, id_b::VARCHAR AS b
+  SELECT id_a AS a, id_b AS b
   FROM common JOIN sizes sa ON id_a = sa.doc_id JOIN sizes sb ON id_b = sb.doc_id
   WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.8
 ),
@@ -3430,10 +3427,10 @@ reach AS (
   SELECT u.b AS id, reach.r FROM reach JOIN und u ON u.a = reach.id
 ),
 comp AS (SELECT id, min(r) AS rep FROM reach GROUP BY id)
-SELECT d.doc_id::VARCHAR AS id,
-  coalesce(comp.rep, d.doc_id::VARCHAR) AS rep_id,
-  (coalesce(comp.rep, d.doc_id::VARCHAR) = d.doc_id::VARCHAR) AS is_rep
-FROM documents d LEFT JOIN comp ON d.doc_id::VARCHAR = comp.id
+SELECT d.doc_id AS id,
+  coalesce(comp.rep, d.doc_id) AS rep_id,
+  (coalesce(comp.rep, d.doc_id) = d.doc_id) AS is_rep
+FROM documents d LEFT JOIN comp ON d.doc_id = comp.id
 """,
         "motif_two_hop": """
 WITH ent(alias, eid) AS (VALUES {ent_values}),
@@ -3588,7 +3585,7 @@ common AS (
   GROUP BY 1, 2
 ),
 prs AS (
-  SELECT id_a::VARCHAR AS a, id_b::VARCHAR AS b
+  SELECT id_a AS a, id_b AS b
   FROM common JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id
   WHERE c * 1.0 / (sa.sz + sb.sz - c) >= 0.8
 ),
@@ -3600,9 +3597,8 @@ reach AS (
 ),
 comp AS (SELECT id, min(r) AS rep FROM reach GROUP BY id),
 dup AS (
-  SELECT surv.id,
-    coalesce(comp.rep, surv.id::VARCHAR) = surv.id::VARCHAR AS dup_ok
-  FROM surv LEFT JOIN comp ON surv.id::VARCHAR = comp.id
+  SELECT surv.id, coalesce(comp.rep, surv.id) = surv.id AS dup_ok
+  FROM surv LEFT JOIN comp ON surv.id = comp.id
 )
 SELECT g.id,
   (g.lang_ok AND g.quality_ok AND coalesce(dup.dup_ok, FALSE)) AS keep,

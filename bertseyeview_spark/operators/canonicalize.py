@@ -432,6 +432,38 @@ def connected_components_auto(
     return spark.createDataFrame(rows, "entity_id string, canonical_id string")
 
 
+def component_min_ids(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``nodes`` (id, ...) plus ``rep_id``: the minimum ``id`` of each
+    node's connected component over the undirected ``pairs`` (id_a,
+    id_b), in the id's own type and order (9 before 10), where
+    :func:`connected_components_auto` labels components by the string
+    minimum. A node in no pair is its own rep. The near-dup keep-one
+    step of ``dedup_representatives`` and ``semdedup``."""
+    cc = connected_components_auto(
+        nodes.sparkSession,
+        pairs.select(
+            F.col("id_a").cast("string").alias("a"),
+            F.col("id_b").cast("string").alias("b"),
+        ),
+        fixed_iterations=8,
+    )
+    comp = nodes.withColumn("_sid", F.col("id").cast("string")).join(
+        cc.select(
+            F.col("entity_id").alias("_sid"), F.col("canonical_id").alias("_comp")
+        ),
+        "_sid",
+        "left",
+    )
+    reps = (
+        comp.where(F.col("_comp").isNotNull())
+        .groupBy("_comp")
+        .agg(F.min("id").alias("_rep"))
+    )
+    return comp.join(reps, "_comp", "left").select(
+        *nodes.columns, F.coalesce("_rep", "id").alias("rep_id")
+    )
+
+
 def apply_canonical_map(edges: DataFrame, cmap: DataFrame) -> DataFrame:
     """Remap edge endpoints through the canonical map (broadcast —
     merge maps are tiny relative to the edge set) and re-dedup.

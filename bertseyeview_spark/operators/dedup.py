@@ -4,9 +4,10 @@ Four families, each designed so the *candidate generation* is a bounded
 shuffle rather than an O(n^2) cross join:
 
 * exact      — hash-groupBy on a content digest (one shuffle);
-* n-gram Jaccard — set-similarity join: explode word n-grams,
-  equi-join on shingle, count intersections, verify Jaccard
-  (the classic exact algorithm; at 100 TB add prefix filtering);
+* n-gram Jaccard — exact set-similarity join: count each pair's
+  shared word n-grams with a broadcast CSR kernel while the shingle
+  table fits under the broadcast ceilings, and by ppjoin (prefix,
+  length and positional filters, then verification) above them;
 * MinHash + LSH — k independent min-hashes per doc computed **entirely
   JVM-side** (xxhash64 with per-permutation seeds over exploded
   shingles — no Python), banded into buckets, candidate pairs from
@@ -23,8 +24,9 @@ exchange follows the bucket join.
 The three Jaccard operators share one exact verifier and one broadcast
 decision. Candidate pairs are confirmed by :func:`_verify_jaccard`, and
 both it and the n-gram pair counter choose between a broadcast of the
-per-doc ``xxhash64`` arrays and a shuffle join automatically, from the
-array table's row count against ``BROADCAST_ROWS_CEILING``
+per-doc ``xxhash64`` arrays and a shuffle join (for the n-gram counter,
+ppjoin) automatically, from the array table's row count against
+``BROADCAST_ROWS_CEILING``
 (:func:`_broadcast_path`). Each choice is logged as one JSON record on
 this module's logger; no caller picks the path.
 
@@ -410,7 +412,7 @@ def _pair_counts_broadcast(
     per (doc, shingle) row) and the per-task count blocks scan
     O(n_docs^2 / tasks) cells, so this path runs only at or below
     ``CSR_DOCS_CEILING`` docs and ``BROADCAST_ROWS_CEILING`` rows; past
-    either the shuffle join path (or prefix filtering) takes over. The
+    either, ppjoin (:func:`_prefix_join_counts`) takes over. The
     rows ceiling (32M) is also what makes the int32 posting indices
     (``post_docs``, ``pair_start``, ``pair_len``) safe: they index at
     most that many postings, far below 2**31.
@@ -581,6 +583,95 @@ def _pair_counts_broadcast(
     )
 
 
+def _prefix_join_counts(
+    joinable: DataFrame, freq: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, common) over the (id, shingle) join universe
+    ``joinable`` by ppjoin: a self-join of each document's prefix, cut
+    by the length and positional filters, then a count of each
+    surviving pair's overlap against the full ``joinable`` sets.
+
+    Each document's shingles are ranked by ascending global frequency
+    (``freq``: shingle, f; rarest first, shingle hash as tiebreak) and
+    only its first ``|s| - ceil(t*|s|) + 1`` join. Two sets with
+    Jaccard >= t share at least one prefix token under a common global
+    order (the prefix-filtering guarantee), so every qualifying pair is
+    a candidate. ``freq`` may count shingles outside ``joinable`` (the
+    frequency cap drops them); a shingle inside keeps all its rows, so
+    its count is the same. The verification join makes the counts
+    equal to those of a plain shingle self-join."""
+    from pyspark.sql import Window
+
+    ranked = joinable.join(freq, "shingle").withColumn(
+        "_rk",
+        F.row_number().over(
+            Window.partitionBy("id").orderBy(F.asc("f"), F.asc("shingle"))
+        ),
+    )
+    # prefix length over the CAPPED set size (the join universe):
+    # |s| - ceil(t*|s|) + 1 == floor((1-t)*|s|) + 1. The epsilon
+    # matters: IEEE 0.8*5 = 4.0000000000000002 would ceil to 5 and
+    # SHORTEN the prefix (missed pairs); the +1e-9 errs toward a
+    # LONGER prefix (extra candidates, never dropped answers).
+    cap_sizes = joinable.groupBy("id").agg(F.count("*").alias("_cap_size"))
+    prefix = (
+        ranked.join(cap_sizes, "id")
+        .where(
+            F.col("_rk")
+            <= F.floor(
+                F.lit(1.0 - threshold) * F.col("_cap_size") + F.lit(1e-9)
+            )
+            + F.lit(1)
+        )
+        .select("id", "shingle", "_rk", "_cap_size")
+    )
+
+    # candidates carry first-shared-prefix-token positions for the
+    # ppjoin positional filter: overlap <= 1 + min(|a|c - pa,
+    # |b|c - pb) for the first shared token at ranks (pa, pb)
+    def side(s: str) -> DataFrame:
+        return prefix.select(
+            F.col("id").alias(f"id_{s}"),
+            "shingle",
+            F.col("_rk").alias(f"_rk{s}"),
+            F.col("_cap_size").alias(f"_cap{s}"),
+        )
+
+    cand = (
+        side("a")
+        .join(side("b"), "shingle")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "_capa", "_capb")
+        .agg(F.min("_rka").alias("_pa"), F.min("_rkb").alias("_pb"))
+    )
+    # length + positional filters (the classic ppjoin companions,
+    # e.g. "Scalable and Robust Set Similarity Join"): J >= t
+    # forces t*|a| <= |b| <= |a|/t on FULL sizes and a minimum
+    # overlap of t/(1+t)*(|a|+|b|) that the positional upper bound
+    # must reach. Epsilons err toward keeping candidates.
+    minoverlap = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("size_a") + F.col("size_b"))
+        - F.lit(1e-9)
+    )
+    ubound = F.lit(1) + F.least(
+        F.col("_capa") - F.col("_pa"), F.col("_capb") - F.col("_pb")
+    )
+    cand = (
+        _with_sizes(cand, sizes)
+        .where(
+            (F.col("size_b") >= F.lit(threshold) * F.col("size_a") - F.lit(1e-9))
+            & (F.col("size_a") >= F.lit(threshold) * F.col("size_b") - F.lit(1e-9))
+            & (ubound >= minoverlap)
+        )
+        .select("id_a", "id_b")
+    )
+    return _pair_counts(
+        cand.join(joinable.withColumnRenamed("id", "id_a"), "id_a").join(
+            joinable.withColumnRenamed("id", "id_b"), ["id_b", "shingle"]
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -588,39 +679,9 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    prefix_filter: bool | str = "auto",
-    auto_prefix_candidates: int = 20_000_000,
-    auto_min_docs: int = 100_000,
     materialize: bool = True,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with word-n-gram Jaccard >= threshold.
-
-    ``prefix_filter`` enables ppjoin-style prefix filtering: order each
-    document's shingles by ascending global frequency (rarest first,
-    shingle text as tiebreak) and join only on each document's first
-    ``|s| - ceil(t*|s|) + 1`` shingles. Two sets with Jaccard >= t must
-    share at least one prefix token under a common global order (the
-    published prefix-filtering guarantee), so the candidate set still
-    contains every qualifying pair while the join touches only the rare
-    tail of each document — at web scale this shrinks the equi-join's
-    build input by ~t of every document's shingles and composes with
-    the frequency cap (applied first). Verification joins candidates
-    back to the FULL shingle sets, so the output is byte-identical to
-    the unfiltered path (asserted in tests).
-
-    The filter's row_number window + extra joins only pay for
-    themselves when the raw candidate volume is large; at small scale
-    they are pure overhead (a measured 4x slowdown at sf0.1). Default
-    ``"auto"`` is therefore cost-based, at the price of ONE probe job:
-    a single aggregation over the shingle-frequency table (needed
-    anyway when the cap is on) computes the exact candidate volume
-    sum_s f_s*(f_s-1)/2 — the row count the shingle equi-join would
-    produce — and prefix filtering turns on only when it exceeds
-    ``auto_prefix_candidates`` (default 2e7 rows, roughly where the
-    pruning joins cost less than the avoided join volume). Only when
-    the cap is disabled (no frequency table needed) does a cheap
-    corpus row count (``auto_min_docs``) settle small inputs first.
-    Pass True/False to force either path; output is identical.
 
     ``max_shingle_freq`` drops ubiquitous shingles (boilerplate) before
     the self-join — the skew guard: a shingle appearing in f docs
@@ -644,21 +705,48 @@ def ngram_jaccard_pairs(
     ~|distinct shingles|^2 / 2^65 (~1e-7 at 2.6M shingles) and is
     accepted; outputs are oracle-verified equal at every test SF.
 
-    When prefix filtering is off, intersections are counted on one of
-    two paths with identical outputs (asserted in tests), picked
-    automatically by :func:`_broadcast_path`:
+    Intersections are counted on one of two paths with identical
+    outputs (asserted in tests), picked by :func:`_broadcast_path` and
+    logged as one ``ngram_jaccard_pairs.pair_count`` record:
 
-    * broadcast, while the join universe is at or below
+    * ``broadcast``, while the join universe is at or below
       ``BROADCAST_ROWS_CEILING`` (doc, shingle) rows and
       ``CSR_DOCS_CEILING`` docs: ship the doc<->shingle CSR to every
       task and sort-count co-occurrences per doc block in a numpy
-      ``mapInArrow`` kernel (:func:`_pair_counts_broadcast`) — removes
-      the shingle self-join's candidate stream (127M rows at sf1.0) and
-      the 52M-key pair aggregation exchange entirely; only
+      ``mapInArrow`` kernel (:func:`_pair_counts_broadcast`) — no
+      shingle self-join and no pair aggregation exchange; only
       near-threshold pairs (thousands) ever leave the kernel;
-    * join, above either ceiling: the exchange-based exact path
-      (shingle equi-join + :func:`_pair_counts`) — no broadcast
-      requirement, the 100-TB shape.
+    * ``join``, above either ceiling: ppjoin
+      (:func:`_prefix_join_counts`) — a self-join of each document's
+      rarest-first prefix, pruned by the length and positional
+      filters, then verified against the full capped sets. No
+      broadcast requirement: the 100-TB shape.
+
+    Measured cost of the join side (4-vCPU VM, local[4],
+    ``SPARK_DRIVER_MEM=6g``, one run per short-doc cell; ceilings
+    patched to 0; "plain" is the shingle self-join + :func:`_pair_counts`
+    that ppjoin replaced; outputs identical). Short docs are the 5,000
+    sf0.1 documents salted into 10 shards (~54 words, 2.6M capped
+    (doc, shingle) rows, 69.1M shingle-join candidates, 8,185 pairs);
+    long docs join each document's 10 salted copies (~540 words, 1.7M
+    rows, 41.7M candidates, 216 pairs):
+
+    ==============  ===  ====  ==========  =========
+    docs            t    cap   ppjoin (s)  plain (s)
+    ==============  ===  ====  ==========  =========
+    50,000 short    0.7  1000  51.0        69.1
+    50,000 short    0.7  None  41.5        66.6
+    50,000 short    0.8  1000  35.8        70.7
+    50,000 short    0.8  None  32.5        66.0
+    5,000 long      0.8  1000  29.0        25.5
+    ==============  ===  ====  ==========  =========
+
+    ppjoin wins 1.4-2.0x on short documents. On long ones, where each
+    prefix is ~70 shingles deep, it loses: the long row is the median
+    of 3 runs per side (ppjoin 24.2-34.8 s, plain 24.0-28.0 s). Suffix
+    filtering (ppjoin+) would target that case and is not implemented.
+    Below the ceilings the CSR kernel ran the default 50,000-short
+    call (t 0.8, cap 1000) in 14.0-15.1 s.
 
     The deciding counts come from one aggregation over the persisted
     per-doc hash arrays; with the cap on, the rows are the capped
@@ -684,146 +772,30 @@ def ngram_jaccard_pairs(
     # count over the exploded shingle rows (one exchange fewer)
     sizes = shsets.select("id", F.size("_ha").alias("set_size"))
 
-    # tier-1 auto decision by corpus row count runs ONLY when no
-    # frequency probe will run anyway (cap disabled): with the
-    # default-on cap the candidate-volume aggregation below already
-    # answers the auto decision, so adding a row-count job here would
-    # make the decision cost two probe jobs instead of one.
-    if prefix_filter == "auto" and max_shingle_freq is None:
-        if df.count() < auto_min_docs:
-            prefix_filter = False
-
     joinable = sh
     nnz_join = None  # (doc, shingle) rows in the join universe, if known
     freq = sh.groupBy("shingle").agg(F.count("*").alias("f"))
-    if max_shingle_freq is not None or prefix_filter == "auto":
-        cap = max_shingle_freq
-        in_join = F.lit(True) if cap is None else (F.col("f") <= cap)
+    if max_shingle_freq is not None:
+        in_join = F.col("f") <= max_shingle_freq
         probe = freq.agg(
             F.sum(F.when(~in_join, 1).otherwise(0)).alias("n_dropped"),
-            F.sum(
-                F.when(in_join, F.col("f") * (F.col("f") - 1) / 2).otherwise(0)
-            ).alias("cand_volume"),
             F.sum(F.when(in_join, F.col("f")).otherwise(0)).alias("nnz_join"),
         ).first()
         n_dropped = int(probe["n_dropped"] or 0)
-        cand_volume = int(probe["cand_volume"] or 0)
         nnz_join = int(probe["nnz_join"] or 0)
-        if max_shingle_freq is not None:
-            if n_dropped:
-                log.warning(
-                    json.dumps(
-                        {
-                            "operator": "ngram_jaccard_pairs",
-                            "dropped_shingles": n_dropped,
-                            "max_shingle_freq": max_shingle_freq,
-                        }
-                    )
+        if n_dropped:
+            log.warning(
+                json.dumps(
+                    {
+                        "operator": "ngram_jaccard_pairs",
+                        "dropped_shingles": n_dropped,
+                        "max_shingle_freq": max_shingle_freq,
+                    }
                 )
-            joinable = sh.join(
-                freq.where(F.col("f") <= max_shingle_freq).select("shingle"),
-                "shingle",
-                "semi",
             )
-        if prefix_filter == "auto":
-            prefix_filter = cand_volume > auto_prefix_candidates
+        joinable = sh.join(freq.where(in_join).select("shingle"), "shingle", "semi")
 
-    if prefix_filter:
-        from pyspark.sql import Window
-
-        freq = joinable.groupBy("shingle").agg(F.count("*").alias("_f"))
-        ranked = joinable.join(freq, "shingle").withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy("id").orderBy(
-                    F.asc("_f"), F.asc("shingle")
-                )
-            ),
-        )
-        # prefix length over the CAPPED set size (the join universe):
-        # |s| - ceil(t*|s|) + 1 == floor((1-t)*|s|) + 1. The epsilon
-        # matters: IEEE 0.8*5 = 4.0000000000000002 would ceil to 5 and
-        # SHORTEN the prefix (missed pairs); the +1e-9 errs toward a
-        # LONGER prefix (extra candidates, never dropped answers).
-        cap_sizes = joinable.groupBy("id").agg(
-            F.count("*").alias("_cap_size")
-        )
-        prefix = (
-            ranked.join(cap_sizes, "id")
-            .where(
-                F.col("_rk")
-                <= F.floor(
-                    F.lit(1.0 - threshold) * F.col("_cap_size") + F.lit(1e-9)
-                )
-                + F.lit(1)
-            )
-            .select("id", "shingle", "_rk", "_cap_size")
-        )
-        # candidates carry first-shared-prefix-token positions for the
-        # ppjoin positional filter: overlap <= 1 + min(|a|c - pa,
-        # |b|c - pb) for the first shared token at ranks (pa, pb)
-        pa = prefix.select(
-            F.col("id").alias("id_a"),
-            "shingle",
-            F.col("_rk").alias("_rka"),
-            F.col("_cap_size").alias("_capa"),
-        )
-        pb = prefix.select(
-            F.col("id").alias("id_b"),
-            "shingle",
-            F.col("_rk").alias("_rkb"),
-            F.col("_cap_size").alias("_capb"),
-        )
-        cand = (
-            pa.join(pb, "shingle")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "_capa", "_capb")
-            .agg(F.min("_rka").alias("_pa"), F.min("_rkb").alias("_pb"))
-        )
-        # length + positional filters (the classic ppjoin companions,
-        # e.g. "Scalable and Robust Set Similarity Join"): J >= t
-        # forces t*|a| <= |b| <= |a|/t on FULL sizes and a minimum
-        # overlap of t/(1+t)*(|a|+|b|) that the positional upper bound
-        # must reach. Epsilons err toward keeping candidates.
-        sz = sizes
-        minoverlap = F.ceil(
-            F.lit(threshold / (1.0 + threshold))
-            * (F.col("_sza") + F.col("_szb"))
-            - F.lit(1e-9)
-        )
-        ubound = F.lit(1) + F.least(
-            F.col("_capa") - F.col("_pa"), F.col("_capb") - F.col("_pb")
-        )
-        cand = (
-            cand.join(
-                sz.select(
-                    F.col("id").alias("id_a"), F.col("set_size").alias("_sza")
-                ),
-                "id_a",
-            )
-            .join(
-                sz.select(
-                    F.col("id").alias("id_b"), F.col("set_size").alias("_szb")
-                ),
-                "id_b",
-            )
-            .where(
-                (F.col("_szb") >= F.lit(threshold) * F.col("_sza") - F.lit(1e-9))
-                & (F.col("_sza") >= F.lit(threshold) * F.col("_szb") - F.lit(1e-9))
-                & (ubound >= minoverlap)
-            )
-            .select("id_a", "id_b")
-        )
-        # verify candidates against the full JOINABLE (cap-consistent)
-        # shingle sets — output is identical to the unfiltered path
-        # under the same cap settings
-        common = _pair_counts(
-            cand.join(joinable.withColumnRenamed("id", "id_a"), "id_a").join(
-                joinable.withColumnRenamed("id", "id_b"),
-                ["id_b", "shingle"],
-            )
-        )
-    elif (
+    if (
         _broadcast_path(
             "ngram_jaccard_pairs.pair_count",
             shsets,
@@ -844,11 +816,7 @@ def ngram_jaccard_pairs(
             joinable, sizes, threshold, doc_arrays=doc_arrays
         )
     else:
-        a = joinable.select(F.col("id").alias("id_a"), "shingle")
-        b = joinable.select(F.col("id").alias("id_b"), "shingle")
-        common = _pair_counts(
-            a.join(b, "shingle").where(F.col("id_a") < F.col("id_b"))
-        )
+        common = _prefix_join_counts(joinable, freq, sizes, threshold)
     out = _jaccard(_with_sizes(common, sizes), threshold)
     return _finalize(out, shsets) if materialize else out
 
@@ -917,10 +885,12 @@ def minhash_lsh_pairs(
             for b in range(bands)
         ]
     )
-    candidates = banded_pairs(
-        *ab_sides(sigs.select("id", bkts.alias("bkts"))),
-        F.col("id_a") < F.col("id_b"),
-    )
+    # (id, bkts) feeds both sides of the band self-join; persisted, the
+    # signature aggregate runs once instead of once per side
+    bkts = sigs.select("id", bkts.alias("bkts"))
+    if materialize:
+        bkts = bkts.persist()
+    candidates = banded_pairs(*ab_sides(bkts), F.col("id_a") < F.col("id_b"))
 
     # verify candidates with exact Jaccard (reuses the cached per-doc
     # sets; hashed 8-byte keys, see docstring)
@@ -930,7 +900,7 @@ def minhash_lsh_pairs(
     out = _verify_jaccard(
         "minhash_lsh_pairs.verify", candidates, harr, threshold
     )
-    return _finalize(out, shsets) if materialize else out
+    return _finalize(out, shsets, bkts) if materialize else out
 
 
 # ---------------------------------------------------------------------------
@@ -1111,42 +1081,22 @@ def dedup_representatives(
 ) -> DataFrame:
     """Near-dup pairs (id_a, id_b) -> the deduplicated corpus decision:
     connected components over the pair graph, one representative per
-    cluster (min id — deterministic), every other member marked with
-    its representative. Documents in no pair keep themselves.
+    cluster (the minimum id in the id's own type and order, 9 before
+    10), every other member marked with its representative. Documents
+    in no pair keep themselves.
 
     This is the step after candidate generation in every production
     dedup pipeline: pairs alone don't dedup — transitive clusters do
     (a~b, b~c must drop two docs, not one per pair). Returns
-    (id, rep_id, is_rep). CC is the same size-dispatched min-label
-    propagation the entity canonicalizer uses (driver union-find for
-    small pair graphs, iterative DataFrame loop at scale)."""
-    from .canonicalize import connected_components_auto
+    (id, rep_id, is_rep), ids in ``id_col``'s type. CC is the same
+    size-dispatched min-label propagation the entity canonicalizer uses
+    (driver union-find for small pair graphs, iterative DataFrame loop
+    at scale), see :func:`~.canonicalize.component_min_ids`."""
+    from .canonicalize import component_min_ids
 
-    spark = df.sparkSession
-    cc = connected_components_auto(
-        spark,
-        pairs.select(
-            F.col("id_a").cast("string").alias("a"),
-            F.col("id_b").cast("string").alias("b"),
-        ),
-        fixed_iterations=8,
-    )
-    ids = df.select(F.col(id_col).cast("string").alias("id"))
-    return (
-        ids.join(
-            cc.select(
-                F.col("entity_id").alias("id"),
-                F.col("canonical_id").alias("rep_id"),
-            ),
-            "id",
-            "left",
-        )
-        .select(
-            "id",
-            F.coalesce("rep_id", "id").alias("rep_id"),
-        )
-        .withColumn("is_rep", F.col("id") == F.col("rep_id"))
-    )
+    return component_min_ids(
+        df.select(F.col(id_col).alias("id")), pairs
+    ).withColumn("is_rep", F.col("id") == F.col("rep_id"))
 
 
 # ---------------------------------------------------------------------------

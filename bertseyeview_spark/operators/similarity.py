@@ -819,7 +819,7 @@ def semdedup(
     similarity 0 with everything instead of throwing DIVIDE_BY_ZERO
     under this build's default ANSI mode.
     """
-    from .canonicalize import connected_components_auto
+    from .canonicalize import component_min_ids
 
     clusters = kmeans_embeddings(df, id_col, vec_col, k, iterations)
     v = F.col(vec_col).cast("array<double>")
@@ -860,35 +860,6 @@ def semdedup(
         .select("id_a", "id_b")
         .unionByName(member_pairs)
     )
-    cc = connected_components_auto(
-        df.sparkSession,
-        pairs.select(
-            F.col("id_a").cast("string").alias("a"),
-            F.col("id_b").cast("string").alias("b"),
-        ),
-        fixed_iterations=8,
-    )
-    comp = vecs.select("id", F.col("cluster0").alias("cluster")).withColumn(
-        "_sid", F.col("id").cast("string")
-    ).join(
-        cc.select(
-            F.col("entity_id").alias("_sid"),
-            F.col("canonical_id").alias("_comp"),
-        ),
-        "_sid",
-        "left",
-    )
-    reps = (
-        comp.where(F.col("_comp").isNotNull())
-        .groupBy("_comp")
-        .agg(F.min("id").alias("_rep"))
-    )
-    return (
-        comp.join(reps, "_comp", "left")
-        .select(
-            "id",
-            "cluster",
-            F.coalesce("_rep", F.col("id")).alias("rep_id"),
-            (F.coalesce("_rep", F.col("id")) == F.col("id")).alias("is_rep"),
-        )
-    )
+    return component_min_ids(
+        vecs.select("id", F.col("cluster0").alias("cluster")), pairs
+    ).withColumn("is_rep", F.col("rep_id") == F.col("id"))

@@ -75,8 +75,7 @@ def clean_corpus(
         threshold=dedup_threshold,
     )
     reps = dedup_representatives(survivors, pairs, "id").select(
-        F.col("id").cast("long").alias("id"),
-        F.col("is_rep").alias("_dup_ok"),
+        "id", F.col("is_rep").alias("_dup_ok")
     )
 
     verdict = (

@@ -267,12 +267,49 @@ def _str_ids(docs):
     )
 
 
+def _skewed_docs(spark):
+    """8 docs with near and exact dups, a partial overlap and one doc
+    that shares 0's shingles but is much longer (the length filter may
+    prune it as a candidate)."""
+    texts = [
+        (0, "alpha beta gamma delta epsilon zeta"),
+        (1, "alpha beta gamma delta epsilon eta"),    # near-dup of 0
+        (2, "alpha beta gamma delta epsilon zeta"),   # exact dup of 0
+        (3, "one two three four five six seven"),
+        (4, "one two three four five six eight"),     # near-dup of 3
+        (5, "totally different words here now ok"),
+        (6, "alpha beta gamma unrelated tail words"), # partial overlap
+        (7, "alpha beta gamma delta epsilon zeta plus a very long tail "
+            "of extra words that dilute the jaccard far below threshold"),
+    ]
+    return spark.createDataFrame(texts, "doc_id long, text string")
+
+
+def _random_docs(spark):
+    """90 docs over a 25-word vocabulary: 60 random, then 30
+    single-token mutations of the first 30."""
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(25)]
+    rows = []
+    for i in range(60):
+        n = rng.randint(3, 15)
+        rows.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
+    for i in range(60, 90):
+        base = rows[i - 60][1].split()
+        base[rng.randrange(len(base))] = rng.choice(vocab)
+        rows.append((i, " ".join(base)))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_ngram_pair_modes_identical(spark, docs, monkeypatch):
-    """The broadcast CSR counter (r8) and the exchange join path must be
-    row-identical — including under a frequency cap (counting on the
-    capped universe, Jaccard on full sizes) and with STRING ids. Tiny
-    corpora dispatch to the broadcast kernel; ceilings at 0 force the
-    join path."""
+    """The broadcast CSR counter and ppjoin (prefix, length and
+    positional filters, then verification) must be row-identical,
+    near-threshold pairs included, under a frequency cap (counting on
+    the capped universe, Jaccard on full sizes) and with STRING ids.
+    Tiny corpora dispatch to the broadcast kernel; ceilings at 0 force
+    ppjoin."""
     cases = [
         (docs, dict(n=3, threshold=0.5)),
         (docs, dict(n=3, threshold=0.3, max_shingle_freq=3)),
@@ -289,6 +326,42 @@ def test_ngram_pair_modes_identical(spark, docs, monkeypatch):
     join = [run(df, kw) for df, kw in cases]
     assert broadcast == join
     assert len(broadcast[0]) > 0 and len(broadcast[2]) > 0
+
+
+def _csr_vs_ppjoin(df, monkeypatch):
+    """ngram_jaccard_pairs rows (n=2) at thresholds 0.5 and 0.8 on the
+    broadcast CSR path, then on ppjoin (ceilings at 0)."""
+
+    def run():
+        return [
+            set(map(tuple, D.ngram_jaccard_pairs(
+                df, "doc_id", "text", n=2, threshold=thr
+            ).collect()))
+            for thr in (0.5, 0.8)
+        ]
+
+    plain = run()
+    _force_join(monkeypatch)
+    return plain, run()
+
+
+def test_prefix_filter_output_identical(spark, monkeypatch):
+    """ppjoin prefix filtering must be a pure candidate-pruning
+    optimization: its output equals the unfiltered CSR count exactly,
+    near-threshold and size-skewed pairs included."""
+    plain, pref = _csr_vs_ppjoin(_skewed_docs(spark), monkeypatch)
+    for thr, p, q in zip((0.5, 0.8), plain, pref):
+        assert q == p, f"threshold {thr}"
+        assert p  # non-empty: the comparison is meaningful
+
+
+def test_prefix_filter_randomized_equality(spark, monkeypatch):
+    """Randomized corpus with planted near-dups: prefix+length+positional
+    filtering must equal the unfiltered CSR count at both thresholds."""
+    plain, pref = _csr_vs_ppjoin(_random_docs(spark), monkeypatch)
+    for thr, p, q in zip((0.5, 0.8), plain, pref):
+        assert q == p, f"threshold {thr}"
+        assert p
 
 
 def test_verify_paths_identical(spark, docs, monkeypatch):
@@ -351,6 +424,16 @@ def test_dedup_dispatch_records(spark, docs, monkeypatch, caplog):
     assert ng["dispatcher"] == "ngram_jaccard_pairs.pair_count"
     assert ng["docs_ceiling"] == D.CSR_DOCS_CEILING and ng["path"] == "broadcast"
 
+    # uncapped: the one pair_count record is the only probe, and its
+    # rows are the full per-doc sets
+    D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5, max_shingle_freq=None)
+    (ng,) = records()
+    assert ng == {
+        "dispatcher": "ngram_jaccard_pairs.pair_count", "docs": 6, "rows": rows,
+        "ceiling": D.BROADCAST_ROWS_CEILING, "docs_ceiling": D.CSR_DOCS_CEILING,
+        "path": "broadcast",
+    }
+
     _force_join(monkeypatch)
     D.simhash_verified_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     D.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3, max_shingle_freq=3)
@@ -362,6 +445,16 @@ def test_dedup_dispatch_records(spark, docs, monkeypatch, caplog):
     # the capped universe already exceeds the 0-row ceiling: no size
     # probe runs, so the doc count is unknown
     assert ng["docs"] is None and ng["rows"] > 0 and ng["path"] == "join"
+    # the join path is ppjoin: the prefix ranks come from a row_number
+    # window
+    out = D.ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=0.5, max_shingle_freq=None,
+        materialize=False,
+    )
+    (ng,) = records()
+    assert ng["dispatcher"] == "ngram_jaccard_pairs.pair_count"
+    assert ng["path"] == "join"
+    assert "row_number" in out._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -559,116 +652,50 @@ def test_fingerprint_vs_python(spark, docs):
         assert got[r["doc_id"]] == rolling_fingerprint(r["text"])
 
 
-def test_prefix_filter_output_identical(spark):
-    """ppjoin prefix filtering must be a pure candidate-pruning
-    optimization: output equals the unfiltered path exactly, including
-    near-threshold pairs."""
-    import bertseyeview_spark.operators.dedup as D
+def test_dedup_representatives_numeric_min(spark, monkeypatch):
+    """The representative is the minimum id in the id's own type (9
+    before 10, returned as a long), not the string minimum the
+    connected components label by, on both CC paths."""
+    from pyspark.sql.types import LongType
 
-    texts = [
-        (0, "alpha beta gamma delta epsilon zeta"),
-        (1, "alpha beta gamma delta epsilon eta"),    # near-dup of 0
-        (2, "alpha beta gamma delta epsilon zeta"),   # exact dup of 0
-        (3, "one two three four five six seven"),
-        (4, "one two three four five six eight"),     # near-dup of 3
-        (5, "totally different words here now ok"),
-        (6, "alpha beta gamma unrelated tail words"), # partial overlap
-        # size-skewed: shares 0's shingles but is much longer — the
-        # length filter may prune it as a candidate, and the output
-        # must still match the plain path exactly
-        (7, "alpha beta gamma delta epsilon zeta plus a very long tail "
-            "of extra words that dilute the jaccard far below threshold"),
-    ]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    for thr in (0.5, 0.8):
-        plain = {
-            tuple(r)
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=thr,
-                prefix_filter=False,
-            ).collect()
-        }
-        pref = {
-            tuple(r)
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=thr,
-                prefix_filter=True,
-            ).collect()
-        }
-        assert pref == plain, f"threshold {thr}"
-        assert plain  # non-empty: the comparison is meaningful
+    import bertseyeview_spark.operators.canonicalize as C
 
-
-def test_prefix_filter_randomized_equality(spark):
-    """Randomized corpus with planted near-dups: prefix+length+positional
-    filtering must equal the plain path at multiple thresholds."""
-    import random
-
-    import bertseyeview_spark.operators.dedup as D
-
-    rng = random.Random(7)
-    vocab = [f"w{i}" for i in range(25)]
-    rows = []
-    for i in range(60):
-        n = rng.randint(3, 15)
-        rows.append((i, " ".join(rng.choice(vocab) for _ in range(n))))
-    for i in range(60, 90):  # single-token mutations of earlier docs
-        base = rows[i - 60][1].split()
-        base[rng.randrange(len(base))] = rng.choice(vocab)
-        rows.append((i, " ".join(base)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for thr in (0.5, 0.8):
-        plain = {
-            tuple(r)
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=thr,
-                prefix_filter=False,
-            ).collect()
-        }
-        pref = {
-            tuple(r)
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=thr,
-                prefix_filter=True,
-            ).collect()
-        }
-        assert pref == plain, f"threshold {thr}"
-
-
-def test_prefix_filter_auto_cost_based(spark):
-    """prefix_filter="auto" probes the shingle-join candidate volume:
-    tiny corpora take the plain path (no row_number window in the plan)
-    and a low threshold forces the pruned path — outputs identical."""
-    import bertseyeview_spark.operators.dedup as D
-
-    texts = [
-        (0, "alpha beta gamma delta epsilon zeta"),
-        (1, "alpha beta gamma delta epsilon eta"),
-        (2, "one two three four five six"),
-    ]
-    docs = spark.createDataFrame(texts, "doc_id long, text string")
-    auto_small = {
-        tuple(r)
-        for r in D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.5
-        ).collect()
+    docs = spark.createDataFrame(
+        [(i, "x") for i in (3, 9, 10, 11, 20)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(9, 10), (10, 11)], "id_a long, id_b long")
+    want = {
+        3: (3, True), 9: (9, True), 10: (9, False), 11: (9, False), 20: (20, True)
     }
-    forced_on = {
-        tuple(r)
-        for r in D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.5,
-            prefix_filter="auto", auto_prefix_candidates=0, auto_min_docs=0,
-        ).collect()
-    }
-    forced_off = {
-        tuple(r)
-        for r in D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=2, threshold=0.5,
-            prefix_filter=False,
-        ).collect()
-    }
-    assert auto_small == forced_on == forced_off
-    assert auto_small
+    for ceiling in (C.DRIVER_CC_MAX_PAIRS, 0):
+        monkeypatch.setattr(C, "DRIVER_CC_MAX_PAIRS", ceiling)
+        out = D.dedup_representatives(docs, pairs, "doc_id")
+        assert out.schema["id"].dataType == LongType()
+        assert out.schema["rep_id"].dataType == LongType()
+        assert {r["id"]: (r["rep_id"], r["is_rep"]) for r in out.collect()} == want
+
+
+def test_minhash_signature_aggregate_once(spark, docs, monkeypatch):
+    """Both sides of the band self-join read one persisted (id, bkts)
+    frame: the executed plan holds one final signature aggregate, not
+    one per side (the cached plan prints under each scan with the same
+    attribute ids)."""
+    import re
+
+    seen = {}
+    finalize = D._finalize
+
+    def capture(out, *caches):
+        seen["out"] = out
+        return finalize(out, *caches)
+
+    monkeypatch.setattr(D, "_finalize", capture)
+    D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.5).collect()
+    plan = seen["out"]._jdf.queryExecution().executedPlan().toString()
+    final_aggs = set(
+        re.findall(r"HashAggregate\(keys=\[(id#\d+L?)\], functions=\[min\(xxhash64", plan)
+    )
+    assert len(final_aggs) == 1
 
 
 def test_dedup_releases_shingle_cache(spark):

@@ -52,7 +52,7 @@ QUERIES = [
     ("simhash_dedup", "one Arrow UDF for the signatures; max_hamming + 1 band buckets through banded_pairs (first agreeing band in the join condition, bit_count hamming filter in the same stage, no pair-dedup exchange); broadcast-arrays exact-Jaccard verify"),
     ("embedding_ann_lsh", "hyperplane signatures JVM-side; banded_pairs with the query side broadcast (first agreeing band in the join condition, no pair-dedup exchange); cosine re-rank + window top-k"),
     ("embedding_neardup", "LSH banded self-join through banded_pairs (no cross join; first agreeing band in the join condition, so no pair-dedup exchange); codegen'd cosine verify"),
-    ("ngram_jaccard_dedup", "cost-based plan selection: broadcast-CSR MapInArrow pair counting at this scale (shuffle equi-join past the broadcast ceiling, ppjoin prefix pruning past the candidate-volume threshold); codegen shingling, broadcast size joins, exact Jaccard filter in Catalyst"),
+    ("ngram_jaccard_dedup", "one ceiling probe picks the pair-count path: broadcast-CSR MapInArrow pair counting at this scale (past the broadcast ceilings, ppjoin: prefix self-join with length and positional filters, verified against the full capped sets); codegen shingling, broadcast size joins, exact Jaccard filter in Catalyst"),
     ("motif_two_hop", "pattern terms compiled to chained equi-joins (Cypher MATCH analogue)"),
     ("gopher_quality", "codegen'd splits + one (id, bigram) grouped count; no Python"),
     ("kg_pagerank", "size-dispatched: at or below RANK_LOCAL_MAX_EDGES the deduplicated edges come to the driver in one Arrow pull and iterate as np.bincount passes, so the dump is the createDataFrame scan of the ranks; above it inv_norm is pre-joined onto edges: ONE join + grouped sum per iteration"),
