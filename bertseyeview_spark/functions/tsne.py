@@ -35,7 +35,7 @@ def _p_conditional(d2_row: np.ndarray, beta: float, i: int) -> np.ndarray:
 
 def _binary_search_beta(
     d2_row: np.ndarray, i: int, perplexity: float, tol: float = 1e-5,
-    max_iter: int = 50,
+    max_steps: int = 50,
 ) -> np.ndarray:
     """Find the Gaussian precision beta whose conditional distribution
     has entropy log(perplexity) — the standard per-point bandwidth
@@ -43,7 +43,7 @@ def _binary_search_beta(
     target = np.log(perplexity)
     beta, beta_lo, beta_hi = 1.0, 0.0, np.inf
     p = _p_conditional(d2_row, beta, i)
-    for _ in range(max_iter):
+    for _ in range(max_steps):
         nz = p[p > 1e-12]
         h = -(nz * np.log(nz)).sum()
         diff = h - target

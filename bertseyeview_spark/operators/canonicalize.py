@@ -33,14 +33,15 @@ conjunct in (b).
 from __future__ import annotations
 
 import logging
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..dispatch import log_dispatch
+from ..dispatch import log_dispatch, pull_within
+from .graph import derived_shuffle_width
 from .similarity import _dot, ab_sides, banded_pairs
 
 log = logging.getLogger(__name__)
@@ -50,10 +51,6 @@ _N_BANDS = 4    # 4 bands x 4 bits
 # an alias mapped to more entity ids than this is too ambiguous to
 # justify a merge: both canonicalization paths skip it in source (b)
 MAX_ALIAS_FREQ = 64
-# fixed min-propagation rounds of the distributed CC in
-# build_canonical_map: curation and alias merge clusters are shallow,
-# so 8 rounds cover diameter <= 8 without a per-round convergence job
-CC_FIXED_ROUNDS = 8
 
 
 def curation_pairs(curation_rules: DataFrame) -> DataFrame:
@@ -165,46 +162,30 @@ def similarity_pairs(alias_dict: DataFrame, threshold: float = 0.90) -> DataFram
     return shared.unionByName(lsh).dropDuplicates()
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 25,
-    fixed_iterations: int | None = None,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Undirected pair rows (a, b) -> (entity_id, canonical_id).
 
     Iterative min-label propagation: comp(v) <- min(comp(v),
     min_{u ~ v} comp(u)) until fixpoint; converges in O(diameter)
     rounds (entity-duplicate clusters are tiny, so 2-4 rounds in
-    practice). Each round is one shuffle; ``localCheckpoint`` cuts the
-    lineage so round k doesn't replay rounds 1..k-1. Canonical = min
-    string id in the component — deterministic regardless of
-    partitioning, so local[8] == local[32].
-
-    ``fixed_iterations`` skips the per-round convergence-count job —
-    use when the caller knows the component diameter bound (e.g.
-    curation/alias merge clusters): fewer driver round-trips, same
-    result as long as fixed_iterations >= diameter.
+    practice). Labels only decrease, so the loop always reaches the
+    fixpoint; a one-row convergence probe after each round stops it
+    there, whatever the diameter. Each round is one shuffle;
+    ``localCheckpoint`` cuts the lineage so round k doesn't replay
+    rounds 1..k-1. Canonical = min string id in the component —
+    deterministic regardless of partitioning, so local[8] == local[32].
     """
-    if fixed_iterations is not None:
-        max_iter = fixed_iterations
     edges = (
         pairs.select("a", "b")
         .union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .dropDuplicates()
         .persist()
     )
-    # scale-adaptive width for the per-round exchanges (the article_rank
-    # pattern, rank.py): each round is its own tiny stage, so session-
-    # width shuffles of a small pair graph pay mostly scheduling; derive
-    # the width from the edge count (~50k rows/partition), cap at the
-    # session setting so cluster configs dominate at scale. The count is
-    # ~free on the just-persisted edges and doubles as materialization.
-    n_edges = edges.count()
-    conf = edges.sparkSession.conf
-    sess_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    p = max(1, min(sess_parts, -(-n_edges // 50_000)))
-    conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # each round is its own tiny stage, so the per-round exchanges run
+    # at an edge-count-derived width (graph.derived_shuffle_width). The
+    # count is ~free on the just-persisted edges and doubles as
+    # materialization.
+    with derived_shuffle_width(edges, edges.count()):
         comp = (
             edges.select(F.col("a").alias("id"))
             .union(edges.select(F.col("b").alias("id")))
@@ -212,7 +193,7 @@ def connected_components(
             .withColumn("comp", F.col("id"))
             .localCheckpoint()
         )
-        for _ in range(max_iter):
+        while True:
             nbr_min = (
                 edges.join(comp, edges["b"] == comp["id"])
                 .groupBy(F.col("a").alias("id"))
@@ -228,21 +209,16 @@ def connected_components(
                 )
                 .localCheckpoint()
             )
-            if fixed_iterations is None:
-                changed = (
-                    new_comp.alias("n")
-                    .join(comp.alias("o"), "id")
-                    .where(F.col("n.comp") != F.col("o.comp"))
-                    .limit(1)
-                    .count()
-                )
-                comp = new_comp
-                if changed == 0:
-                    break
-            else:
-                comp = new_comp
-    finally:
-        conf.set("spark.sql.shuffle.partitions", str(sess_parts))
+            changed = (
+                new_comp.alias("n")
+                .join(comp.alias("o"), "id")
+                .where(F.col("n.comp") != F.col("o.comp"))
+                .limit(1)
+                .count()
+            )
+            comp = new_comp
+            if changed == 0:
+                break
     edges.unpersist()
     return comp.select(
         F.col("id").alias("entity_id"), F.col("comp").alias("canonical_id")
@@ -257,12 +233,7 @@ def build_canonical_map(
 ) -> DataFrame:
     """Union all pair sources, run CC, keep only rows that actually
     remap (entity_id != canonical_id) so the downstream join stays small
-    and broadcastable.
-
-    Merge clusters from curation rules (depth-1 from->to maps) and
-    alias/embedding similarity are shallow; the distributed CC runs
-    ``CC_FIXED_ROUNDS`` min-propagation rounds with no per-round
-    convergence job."""
+    and broadcastable."""
     sources = []
     if curation_rules is not None:
         sources.append(curation_pairs(curation_rules))
@@ -273,15 +244,44 @@ def build_canonical_map(
     pairs = sources[0]
     for s in sources[1:]:
         pairs = pairs.unionByName(s)
-    cc = connected_components_auto(spark, pairs, fixed_iterations=CC_FIXED_ROUNDS)
+    cc = connected_components_auto(spark, pairs)
     return cc.where(F.col("entity_id") != F.col("canonical_id"))
 
 
-# dictionaries below this row count are canonicalized entirely on the
-# driver (one collect + numpy cosine + union-find) — the distributed
-# LSH/CC path costs several fixed seconds of stage latency that a
-# 10^4-entry dictionary never justifies
+# CEILING: dictionaries of at most this many rows are canonicalized
+# entirely on the driver (one Arrow pull + numpy cosine + union-find) —
+# the distributed LSH/CC path costs several fixed seconds of stage
+# latency that a 10^4-entry dictionary never justifies. Driver memory is
+# quadratic in the r distinct entity ids with an embedding: the r x r
+# float64 cosine matrix and its boolean mask, 9 bytes per id pair. Peak
+# driver Python memory (tracemalloc plus Arrow pool peak, CPython 3.11,
+# pyarrow 16, 64-d unit embeddings, one alias per id) measured 59 MB at
+# 2,500 rows, 225 MB at 5,000 and 878 MB at 10,000, so ~21 GB at the
+# ceiling when every row is its own id, far above a 2 GB driver. A
+# dictionary with a aliases per id needs about 1/a^2 of that.
 DRIVER_SIM_MAX_ROWS = 50_000
+
+
+def _union_find(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Every node of the undirected ``pairs`` -> the minimum node of its
+    connected component. Union by min id keeps the canonical id
+    deterministic, whatever the pair order."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
 
 
 def build_canonical_map_auto(
@@ -291,9 +291,11 @@ def build_canonical_map_auto(
     threshold: float = 0.90,
 ) -> DataFrame:
     """Size-dispatched :func:`build_canonical_map`: dictionaries of at
-    most ``DRIVER_SIM_MAX_ROWS`` rows run as one collect + numpy cosine
-    + union-find on the driver; larger ones take the distributed path.
-    The choice is logged as one JSON record on this module's logger.
+    most ``DRIVER_SIM_MAX_ROWS`` rows run as one Arrow pull + numpy
+    cosine + union-find on the driver; larger ones take the distributed
+    path. The pull is the probe (:func:`~..dispatch.pull_within`: at
+    most one row past the ceiling reaches the driver), and the choice is
+    logged as one JSON record on this module's logger.
 
     The two paths apply the same curation rules and the same
     shared-alias source (b), frequency cap included. They differ in
@@ -303,17 +305,16 @@ def build_canonical_map_auto(
     above the threshold and merge fewer ids."""
     if alias_dict is None:
         return build_canonical_map(spark, curation_rules, alias_dict, threshold)
-    # count-probe first (a few bytes to the driver); rows only travel
-    # after the dictionary has proven it fits the driver path
-    n = alias_dict.limit(DRIVER_SIM_MAX_ROWS + 1).count()
+    t, n = pull_within(
+        alias_dict.select("alias", "entity_id", "embedding"), DRIVER_SIM_MAX_ROWS
+    )
     path = log_dispatch(
         log, "canonicalize.build_canonical_map_auto",
-        "driver" if n <= DRIVER_SIM_MAX_ROWS else "distributed",
+        "driver" if t is not None else "distributed",
         rows=n, ceiling=DRIVER_SIM_MAX_ROWS,
     )
     if path == "distributed":
         return build_canonical_map(spark, curation_rules, alias_dict, threshold)
-    rows = alias_dict.select("alias", "entity_id", "embedding").collect()
 
     pairs: list[tuple[str, str]] = []
     if curation_rules is not None:
@@ -321,10 +322,12 @@ def build_canonical_map_auto(
             if r["method"] in ("merge", "rename"):
                 pairs.append((r["from_id"], r["to_id"]))
 
+    aliases, eids = t.column(0).to_pylist(), t.column(1).to_pylist()
+    embs = t.column(2).to_numpy(zero_copy_only=False)  # arrays, None when null
     ents = [
-        (r["alias"], r["entity_id"], np.asarray(r["embedding"] or [], dtype=float))
-        for r in rows
-        if r["entity_id"] != "Null"
+        (alias, eid, np.array([] if emb is None else emb, dtype=float))
+        for alias, eid, emb in zip(aliases, eids, embs)
+        if eid != "Null"
     ]
     # (b) shared alias + cosine, with the same frequency cap the
     # distributed path applies (dispatch-path parity)
@@ -354,82 +357,50 @@ def build_canonical_map_auto(
             if i < j:
                 pairs.append((ids[i], ids[j]))
 
-    # union-find, canonical = min id
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    out = [(n, find(n)) for n in parent if find(n) != n]
-    if not out:
-        return spark.createDataFrame([], "entity_id string, canonical_id string")
+    out = [(node, root) for node, root in _union_find(pairs).items() if root != node]
     return spark.createDataFrame(out, "entity_id string, canonical_id string")
 
 
-# merge-pair graphs below this size run as driver-side union-find: the
-# distributed loop costs ~1-2s of stage latency per round, while a
-# million-pair union-find is milliseconds in-process. Above it, the
-# iterative DataFrame CC takes over (the 10^12-doc path).
+# CEILING: merge-pair graphs of at most this many pairs run as
+# driver-side union-find: the distributed loop costs ~1-2s of stage
+# latency per round, while a million-pair union-find takes ~2 s
+# in-process. Above it, the iterative DataFrame CC takes over (the
+# 10^12-doc path). Peak driver Python memory at the ceiling (tracemalloc
+# plus Arrow pool peak, CPython 3.11, pyarrow 16, 20-character string
+# ids): 0.43 GB for 2,000,000 pairs over 1,000,000 nodes and 1.0 GB for
+# 2,000,000 disjoint pairs (4,000,000 nodes, the most a pair count
+# allows): the pulled table, its python strings, the parent map and the
+# (node, root) rows handed to createDataFrame.
 DRIVER_CC_MAX_PAIRS = 2_000_000
 
 
-def connected_components_auto(
-    spark: SparkSession,
-    pairs: DataFrame,
-    fixed_iterations: int | None = None,
-) -> DataFrame:
+def connected_components_auto(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Size-dispatched connected components: driver union-find for
-    small pair graphs, iterative min-label propagation otherwise.
-    Same output either way (canonical = min id in component) while
-    ``fixed_iterations``, if given, covers the component diameter. The
-    choice is logged as one JSON record on this module's logger.
+    small pair graphs, iterative min-label propagation otherwise. Same
+    output either way (canonical = min id in component). The choice is
+    logged as one JSON record on this module's logger.
 
-    The dispatch probe is a limit+count (a few bytes back to the
-    driver); the pairs only travel to the driver after the probe has
-    proven they fit — never pull O(data) rows just to decide."""
+    The probe is the pull (:func:`~..dispatch.pull_within`): at most
+    one pair past the ceiling reaches the driver, so deciding never
+    pulls O(data) rows, and the driver path reads the pairs it pulled.
+    The pairs are persisted first, so the distributed path re-reads the
+    probe's partitions instead of recomputing them."""
     pairs = pairs.persist()
-    n = pairs.limit(DRIVER_CC_MAX_PAIRS + 1).count()
+    t, n = pull_within(pairs.select("a", "b"), DRIVER_CC_MAX_PAIRS)
     path = log_dispatch(
         log, "canonicalize.connected_components_auto",
-        "driver" if n <= DRIVER_CC_MAX_PAIRS else "distributed",
+        "driver" if t is not None else "distributed",
         pairs=n, ceiling=DRIVER_CC_MAX_PAIRS,
     )
     if path == "distributed":
-        out = connected_components(pairs, fixed_iterations=fixed_iterations)
+        out = connected_components(pairs)
         pairs.unpersist()
         return out
-    sample = pairs.collect()
     pairs.unpersist()
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in sample:
-        ra, rb = find(r["a"]), find(r["b"])
-        if ra != rb:
-            # union by min id keeps the canonical deterministic
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    rows = [(n, find(n)) for n in parent]
-    if not rows:
-        return spark.createDataFrame([], "entity_id string, canonical_id string")
-    return spark.createDataFrame(rows, "entity_id string, canonical_id string")
+    roots = _union_find(zip(*(c.to_pylist() for c in t.columns)))
+    return spark.createDataFrame(
+        list(roots.items()), "entity_id string, canonical_id string"
+    )
 
 
 def component_min_ids(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -445,7 +416,6 @@ def component_min_ids(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
             F.col("id_a").cast("string").alias("a"),
             F.col("id_b").cast("string").alias("b"),
         ),
-        fixed_iterations=8,
     )
     comp = nodes.withColumn("_sid", F.col("id").cast("string")).join(
         cc.select(

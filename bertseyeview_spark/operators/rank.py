@@ -15,8 +15,9 @@ denominator:
 Scale notes:
 * **size dispatch.** Every operator deduplicates and persists its edge
   table, then pulls at most ``RANK_LOCAL_MAX_EDGES + 1`` of its rows to
-  the driver as one Arrow table (``DataFrame.toArrow``). At or below the
-  ceiling that pull is the whole graph: the ids are dictionary-encoded in
+  the driver as one Arrow table (``dispatch.pull_within``, the probe
+  every driver-side fast path shares). At or below the ceiling that
+  pull is the whole graph: the ids are dictionary-encoded in
   sorted order, and the iterations run in-process as ``np.bincount``
   passes; the result comes back through one ``createDataFrame``, which
   keeps the id column's type. Above the ceiling the iterations run as
@@ -49,7 +50,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dispatch import log_dispatch
+from ..dispatch import log_dispatch, pull_within
 from .graph import derived_shuffle_width
 
 log = logging.getLogger(__name__)
@@ -85,15 +86,16 @@ def _dispatch(
 ) -> tuple[pa.Table | None, int]:
     """Pick the local or distributed path for the persisted edge table
     ``e`` and log the choice as one JSON record. The probe is the pull
-    itself: at most ``RANK_LOCAL_MAX_EDGES + 1`` rows come back as one
-    Arrow table, so the local path costs no job beyond it and the probe
-    stays inside the ceiling's driver-memory bound. ``counts`` are other
+    itself (:func:`~..dispatch.pull_within`): at most
+    ``RANK_LOCAL_MAX_EDGES + 1`` rows come back as one Arrow table, so
+    the local path costs no job beyond it and the probe stays inside the
+    ceiling's driver-memory bound. ``counts`` are other
     driver-bound inputs, held to the same ceiling. Returns the edge
     table (``None`` on the distributed path) and the exact edge count,
     from which the distributed path sizes its shuffle width."""
     ceiling = RANK_LOCAL_MAX_EDGES
-    t = e.limit(ceiling + 1).toArrow()
-    n_edges = t.num_rows if t.num_rows <= ceiling else e.count()
+    t, n = pull_within(e, ceiling)
+    n_edges = n if t is not None else e.count()
     local = n_edges <= ceiling and all(v <= ceiling for v in counts.values())
     log_dispatch(
         log,

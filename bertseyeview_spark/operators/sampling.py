@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..dispatch import pull_within
+
 _BUCKETS = 1_000_000
 
 
@@ -126,19 +128,19 @@ def temperature_rates(
     deterministic hash filter. A NULL stratum is a real stratum here
     (missing source/language): it gets a computed rate under key
     ``None``, which stratified_sample matches null-safely. Guarded against accidentally passing a
-    high-cardinality column as the stratum (``max_strata``)."""
+    high-cardinality column as the stratum (``max_strata``): the counts
+    come to the driver in one pull of at most ``max_strata + 1`` rows
+    (:func:`~..dispatch.pull_within`), and it raises above the cap."""
     if not 0.0 < target_frac <= 1.0:
         raise ValueError("target_frac must be in (0, 1]")
     counts = df.groupBy(strata_col).agg(F.count("*").alias("n"))
-    if counts.limit(max_strata + 1).count() > max_strata:
+    t, _ = pull_within(counts, max_strata)
+    if t is None:
         raise ValueError(
             f"more than {max_strata} strata in '{strata_col}' — this is a "
             "per-domain/language operator; use a coarser stratum column"
         )
-    rows = sorted(
-        ((r[strata_col], r["n"]) for r in counts.collect()),
-        key=lambda t: str(t[0]),
-    )
+    rows = sorted(zip(*(c.to_pylist() for c in t.columns)), key=lambda r: str(r[0]))
     n_total = float(sum(n for _, n in rows))
     sw = sum(float(n) ** temperature for _, n in rows)
     return {

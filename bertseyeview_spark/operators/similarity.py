@@ -48,7 +48,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..dispatch import log_dispatch
+from ..dispatch import log_dispatch, pull_within
 
 log = logging.getLogger(__name__)
 
@@ -418,16 +418,13 @@ def _kmeans_pull(pairs: DataFrame) -> tuple[pa.Table | None, int]:
     probe = pairs.where(F.col("v").isNotNull()).select(F.size("v")).first()
     dim = probe[0] if probe else 0
     cap = ceiling // max(dim, 1)
-    t = (
-        pairs.select("id", F.when(F.size("v") == dim, F.col("v")).alias("v"))
-        .limit(cap + 1)
-        .toArrow()
+    t, rows = pull_within(
+        pairs.select("id", F.when(F.size("v") == dim, F.col("v")).alias("v")), cap
     )
-    vs = t.column("v")
-    rows, reason = t.num_rows, None
-    if rows > cap:
+    reason = None
+    if t is None:
         rows, reason = None, "ceiling"
-    elif vs.null_count or any(c.flatten().null_count for c in vs.chunks):
+    elif t["v"].null_count or any(c.flatten().null_count for c in t["v"].chunks):
         reason = "ragged_or_null"
     path = "distributed" if reason else "local"
     inputs = {"rows": rows, "dim": dim, "ceiling": ceiling}

@@ -42,6 +42,7 @@ from ..datagen import (
     build_curation_rules,
     token_embedding,
 )
+from ..dispatch import pull_within
 from ..operators import canonicalize as canon
 from ..operators import graph as G
 from ..operators.extract import extract_one
@@ -140,12 +141,12 @@ def _page_edges(
 
 
 # CEILING: the fused plan ships the alias dictionary to every Python
-# worker as one broadcast built from a driver collect. Peak driver Python
-# memory is ~4.8 KB per dictionary row (measured with tracemalloc on
-# CPython 3.11: the collected Row with its 64-float embedding list
-# ~2.6 KB, the numpy map entry ~0.8 KB, the pickled broadcast ~0.6 KB),
-# so the ceiling bounds the driver at ~1.2 GB and each worker's copy at
-# ~0.2 GB. Above it ``dictionary_broadcast`` raises, and KGPipeline runs
+# worker as one broadcast built from one Arrow pull. Peak driver Python
+# memory is ~2.2 KB per dictionary row: 534 MB for dictionary_broadcast
+# at 250,000 rows with 64-float embeddings (tracemalloc plus Arrow pool
+# peak, CPython 3.11, pyarrow 16), so the ceiling bounds the driver at
+# ~0.55 GB. Each worker's copy is the pickled map, 138 MB at 250,000
+# rows. Above it ``dictionary_broadcast`` raises, and KGPipeline runs
 # the modular plan (plans/kg.py) instead: its linking joins the
 # dictionary as a DataFrame, which scales to any dictionary size. Parity
 # between the two plans is pinned by tests/test_kg_fused.py.
@@ -159,20 +160,16 @@ def dictionary_broadcast(
     patterns: dict[str, str] | None = None,
     ner_scorer_layers: int = 0,
 ) -> Broadcast:
-    """Collect the alias dictionary and broadcast it, with the per-page
+    """Pull the alias dictionary and broadcast it, with the per-page
     config, as plain python (model-broadcast pattern, like shipping
     tokenizer/model weights to workers).
 
-    Raises ``ValueError`` above ``FUSED_ALIAS_CEILING`` rows; the collect
-    reads at most one row past the ceiling, so the guard itself stays
-    inside the driver-memory bound."""
+    Raises ``ValueError`` above ``FUSED_ALIAS_CEILING`` rows; the pull
+    (:func:`~..dispatch.pull_within`) reads at most one row past the
+    ceiling, so the guard itself stays inside the driver-memory bound."""
     ceiling = FUSED_ALIAS_CEILING
-    alias_rows = (
-        alias_df.select("alias", "entity_id", "embedding")
-        .limit(ceiling + 1)
-        .collect()
-    )
-    if len(alias_rows) > ceiling:
+    t, _ = pull_within(alias_df.select("alias", "entity_id", "embedding"), ceiling)
+    if t is None:
         raise ValueError(
             f"alias dictionary has more than {ceiling} rows, the fused "
             "plan's broadcast ceiling (FUSED_ALIAS_CEILING); use the "
@@ -180,9 +177,14 @@ def dictionary_broadcast(
             "which falls back to it above the ceiling)"
         )
     alias_map: dict[str, list[tuple[str, np.ndarray]]] = {}
-    for r in alias_rows:
-        emb = np.asarray(r["embedding"] or [0.0] * EMBED_DIM, dtype=np.float64)
-        alias_map.setdefault(r["alias"], []).append((r["entity_id"], emb))
+    # embeddings come out as numpy arrays (None when null); converting
+    # through a python float list per row takes ten times as long
+    aliases, eids = t.column(0).to_pylist(), t.column(1).to_pylist()
+    embs = t.column(2).to_numpy(zero_copy_only=False)
+    for alias, eid, emb in zip(aliases, eids, embs):
+        if emb is None or not len(emb):
+            emb = np.zeros(EMBED_DIM)
+        alias_map.setdefault(alias, []).append((eid, np.array(emb, np.float64)))
     for cands in alias_map.values():
         cands.sort(key=lambda c: c[0])
     return spark.sparkContext.broadcast(

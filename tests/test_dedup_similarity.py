@@ -655,24 +655,35 @@ def test_fingerprint_vs_python(spark, docs):
 def test_dedup_representatives_numeric_min(spark, monkeypatch):
     """The representative is the minimum id in the id's own type (9
     before 10, returned as a long), not the string minimum the
-    connected components label by, on both CC paths."""
+    connected components label by, on both CC paths. A 20-doc
+    near-dup chain keeps one doc on both paths: the distributed CC
+    runs to its fixpoint, not a fixed number of rounds."""
     from pyspark.sql.types import LongType
 
     import bertseyeview_spark.operators.canonicalize as C
 
-    docs = spark.createDataFrame(
-        [(i, "x") for i in (3, 9, 10, 11, 20)], "doc_id long, text string"
+    small = (
+        [3, 9, 10, 11, 20],
+        [(9, 10), (10, 11)],
+        {3: (3, True), 9: (9, True), 10: (9, False), 11: (9, False), 20: (20, True)},
     )
-    pairs = spark.createDataFrame([(9, 10), (10, 11)], "id_a long, id_b long")
-    want = {
-        3: (3, True), 9: (9, True), 10: (9, False), 11: (9, False), 20: (20, True)
-    }
-    for ceiling in (C.DRIVER_CC_MAX_PAIRS, 0):
-        monkeypatch.setattr(C, "DRIVER_CC_MAX_PAIRS", ceiling)
-        out = D.dedup_representatives(docs, pairs, "doc_id")
-        assert out.schema["id"].dataType == LongType()
-        assert out.schema["rep_id"].dataType == LongType()
-        assert {r["id"]: (r["rep_id"], r["is_rep"]) for r in out.collect()} == want
+    chain = (
+        list(range(20)),
+        [(i, i + 1) for i in range(19)],
+        {i: (0, i == 0) for i in range(20)},
+    )
+    for ids, edges, want in (small, chain):
+        docs = spark.createDataFrame(
+            [(i, "x") for i in ids], "doc_id long, text string"
+        )
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        for ceiling in (C.DRIVER_CC_MAX_PAIRS, 0):
+            monkeypatch.setattr(C, "DRIVER_CC_MAX_PAIRS", ceiling)
+            out = D.dedup_representatives(docs, pairs, "doc_id")
+            assert out.schema["id"].dataType == LongType()
+            assert out.schema["rep_id"].dataType == LongType()
+            got = {r["id"]: (r["rep_id"], r["is_rep"]) for r in out.collect()}
+            assert got == want, (len(ids), ceiling)
 
 
 def test_minhash_signature_aggregate_once(spark, docs, monkeypatch):

@@ -177,6 +177,21 @@ def test_ambiguous_alias_not_merged(spark):
     assert ("Gene:2671", "Disease:MESH:D000690") not in pairs
 
 
+def test_pull_within_boundary(spark):
+    """The shared driver pull returns the table only when it is the
+    whole input, and the rows it pulled: N at ceiling N, None and N at
+    ceiling N - 1, and an empty table that keeps its schema."""
+    from bertseyeview_spark.dispatch import pull_within
+
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(5)], "k long, v string")
+    t, n = pull_within(df, 5)
+    assert n == 5 and sorted(t.column("k").to_pylist()) == list(range(5))
+    assert pull_within(df, 4) == (None, 5)
+    t, n = pull_within(df.where("k < 0"), 5)
+    assert n == 0 and t.num_rows == 0 and t.column_names == ["k", "v"]
+    assert [str(f.type) for f in t.schema] == ["int64", "string"]
+
+
 def _canon_records(caplog):
     from bertseyeview_spark.operators import canonicalize
 
