@@ -1,11 +1,14 @@
-"""The probe and the decision record every size-dispatched operator uses.
+"""The probe and the decision record every size-dispatched operator
+uses, and the eager-result contract of every operator that caches an
+intermediate.
 
 A dispatcher probes its input, compares the probe with a driver or
 broadcast ceiling and picks a path. A driver-side path probes with
 :func:`pull_within`, which is also its pull. It logs that choice as one
 INFO record whose message is a JSON object: ``dispatcher`` (which
 choice), the inputs behind it (counts, ceilings, probe results), then
-``path``.
+``path``. An operator that persists an intermediate for several
+consumers returns through :func:`_finalize`.
 """
 
 from __future__ import annotations
@@ -37,3 +40,29 @@ def log_dispatch(
     ``logger`` and return ``path``."""
     logger.info(json.dumps({"dispatcher": dispatcher, **inputs, "path": path}))
     return path
+
+
+def _finalize(out: DataFrame, *caches: DataFrame) -> DataFrame:
+    """Return ``out`` as an eager result and release the caches that fed
+    it: ``out.localCheckpoint(eager=True)``, then
+    ``unpersist(blocking=True)`` of each of ``caches``.
+
+    This is the one contract of every operator that persists an
+    intermediate for several consumers (a shingle table read by the
+    probe, both join sides and the verify; an adjacency read by the
+    sizes, the hub probe and the self-join). Left in place, such a
+    cache outlives the call, and repeated calls in one long-lived
+    session accumulate storage memory. The checkpoint of the (small)
+    result truncates its lineage, so no cache is referenced any more
+    and each is dropped at once; the checkpoint blocks themselves are
+    ContextCleaner-managed and are reclaimed when the returned frame is
+    garbage collected.
+
+    Callers reach it as ``dispatch._finalize``, so one patch of this
+    attribute replaces it everywhere: ``tools/explain_plans.py`` swaps
+    it for identity to dump the lazy plan each operator would
+    checkpoint."""
+    out = out.localCheckpoint(eager=True)
+    for c in caches:
+        c.unpersist(blocking=True)
+    return out

@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import dispatch
 from ..dispatch import log_dispatch
 from .similarity import ab_sides, banded_pairs
 from .textquality import norm_tokens
@@ -63,24 +64,6 @@ BROADCAST_ROWS_CEILING = 32_000_000
 # sort-count blocks scan O(n_docs^2 / tasks) doc pairs.
 CSR_DOCS_CEILING = 150_000
 
-
-def _finalize(out: DataFrame, *caches: DataFrame) -> DataFrame:
-    """Materialize ``out`` (localCheckpoint, eager) and release the
-    intermediate caches that fed it.
-
-    Why not leave the persists in place: these builders cache the
-    shingle table for multi-consumer reuse (sizes + join sides +
-    verification), but the cache outlives the call — repeated dedup
-    calls in one long-lived session accumulate storage memory. A
-    localCheckpoint of the (small) pair/result set truncates lineage so
-    the shingle cache is no longer referenced and can be dropped
-    eagerly (``unpersist(blocking=True)``); the checkpoint blocks
-    themselves are ContextCleaner-managed and are reclaimed when the
-    returned frame is garbage collected, unlike a leaked persist."""
-    out = out.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist(blocking=True)
-    return out
 
 # ---------------------------------------------------------------------------
 # exact
@@ -679,7 +662,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with word-n-gram Jaccard >= threshold.
 
@@ -764,9 +746,7 @@ def ngram_jaccard_pairs(
     # class) are unchanged vs the historical shape.
     shsets = _shingle_sets(df, id_col, text_col, n).select(
         "id", F.transform("_za", lambda z: F.xxhash64(z)).alias("_ha")
-    )
-    if materialize:
-        shsets = shsets.persist()
+    ).persist()
     sh = shsets.select("id", F.explode("_ha").alias("shingle"))
     # set size is array length on the cached per-doc rows — no grouped
     # count over the exploded shingle rows (one exchange fewer)
@@ -818,7 +798,7 @@ def ngram_jaccard_pairs(
     else:
         common = _prefix_join_counts(joinable, freq, sizes, threshold)
     out = _jaccard(_with_sizes(common, sizes), threshold)
-    return _finalize(out, shsets) if materialize else out
+    return dispatch._finalize(out, shsets)
 
 
 # ---------------------------------------------------------------------------
@@ -833,7 +813,6 @@ def minhash_lsh_pairs(
     num_perm: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via banding: docs agreeing on all rows of any band
     become candidates (bucket equi-join on (band, band-slice-hash),
@@ -859,9 +838,7 @@ def minhash_lsh_pairs(
     this module's logger."""
     rows_per_band = num_perm // bands
     # one shingle pass feeds both signatures and candidate verification
-    shsets = _shingle_sets(df, id_col, text_col, n)
-    if materialize:
-        shsets = shsets.persist()
+    shsets = _shingle_sets(df, id_col, text_col, n).persist()
     sh = shsets.select("id", F.explode("_za").alias("_z")).select(
         "id", _shingle_text(n).alias("shingle")
     )
@@ -887,9 +864,7 @@ def minhash_lsh_pairs(
     )
     # (id, bkts) feeds both sides of the band self-join; persisted, the
     # signature aggregate runs once instead of once per side
-    bkts = sigs.select("id", bkts.alias("bkts"))
-    if materialize:
-        bkts = bkts.persist()
+    bkts = sigs.select("id", bkts.alias("bkts")).persist()
     candidates = banded_pairs(*ab_sides(bkts), F.col("id_a") < F.col("id_b"))
 
     # verify candidates with exact Jaccard (reuses the cached per-doc
@@ -900,7 +875,7 @@ def minhash_lsh_pairs(
     out = _verify_jaccard(
         "minhash_lsh_pairs.verify", candidates, harr, threshold
     )
-    return _finalize(out, shsets, bkts) if materialize else out
+    return dispatch._finalize(out, shsets, bkts)
 
 
 # ---------------------------------------------------------------------------
@@ -1031,7 +1006,6 @@ def simhash_verified_pairs(
     max_hamming: int = 10,
     n: int = 3,
     threshold: float = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash-bucketed near-dup pairs with an exact n-gram-Jaccard
     verify: candidates = :func:`simhash_pairs` (hamming banding prunes
@@ -1060,14 +1034,12 @@ def simhash_verified_pairs(
     cands = simhash_pairs(df, id_col, text_col, max_hamming).select(
         "id_a", "id_b"
     )
+    # one cache feeds the size probe and both verify sides
     harr = _shingle_sets(df, id_col, text_col, n).select(
         "id", F.transform("_za", lambda z: F.xxhash64(z)).alias("_ha")
-    )
-    if materialize:
-        # one materialization feeds the size probe and both verify sides
-        harr = harr.persist()
+    ).persist()
     out = _verify_jaccard("simhash_verified_pairs.verify", cands, harr, threshold)
-    return _finalize(out, harr) if materialize else out
+    return dispatch._finalize(out, harr)
 
 
 # ---------------------------------------------------------------------------
@@ -1175,7 +1147,6 @@ def exact_substring_spans(
     min_count: int = 2,
     exact: bool = True,
     pair_budget: int = 50_000_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Find maximal token spans that repeat across (or within)
     documents — the exact-substring family of the "Deduplicating
@@ -1246,13 +1217,6 @@ def exact_substring_spans(
     (keeping one canonical occurrence), exactly as the reference
     recipe does — this operator is the detection stage, which is the
     part that needs the cluster.
-
-    ``materialize=False`` is a PLAN-INSPECTION mode (tools/
-    explain_plans.py): it skips the window-table cache, the result
-    checkpoint, AND the (inherently eager) pair-budget validation —
-    the returned frame is fully lazy but UNGUARDED against
-    boilerplate-quadratic pair explosions. Production callers keep
-    the default.
     """
     if not exact:
         flagged = _flagged_windows(df, id_col, text_col, window, min_count)
@@ -1260,8 +1224,7 @@ def exact_substring_spans(
     from pyspark.sql import Window
 
     runs = _pair_runs(
-        df, id_col, text_col, window, min_count, pair_budget,
-        materialize=materialize,
+        df, id_col, text_col, window, min_count, pair_budget
     ).select("id", "start", "end").dropDuplicates()
     # containment prune: a preceding row in (start asc, end desc)
     # order has start' <= start (start' == start only with end' > end),
@@ -1291,7 +1254,6 @@ def _pair_runs(
     window: int,
     min_count: int,
     pair_budget: int,
-    materialize: bool = True,
 ) -> DataFrame:
     """One row per SIDE of each maximal pairwise-aligned duplicated
     token run: (id, start, end, key1, key2, run_len) where
@@ -1312,6 +1274,7 @@ def _pair_runs(
     enough corpus-wide, the natural generalization). Both sides of
     each island are emitted (B's interval is A's shifted by the
     diagonal)."""
+    # probe + occ join both consume wins: ONE cached corpus scan
     wins = _token_windows(
         df, id_col, text_col, window, out_col="_s", with_pos=True
     ).select(
@@ -1319,31 +1282,24 @@ def _pair_runs(
         "start",
         F.xxhash64("_s", F.lit(1)).alias("fp1"),
         F.xxhash64("_s", F.lit(2)).alias("fp2"),
-    )
-    if materialize:
-        # probe + occ join both consume wins: ONE cached corpus scan
-        # instead of two (r7 review); materialize=False (plan dumps)
-        # skips the cache AND the inherently-eager budget probe
-        wins = wins.persist()
+    ).persist()
     counts = wins.groupBy("fp1", "fp2").agg(F.count("*").alias("_n"))
-    hot = counts.where(F.col("_n") >= min_count)
-    if materialize:
-        hot = hot.persist()
-        # pair-volume probe BEFORE the quadratic join (see docstring);
-        # inherently eager — the validation must run before the join
-        # is even planned. The persist above makes the probe PAY FOR
-        # the scan the join then reuses, instead of doubling it.
-        est = hot.agg(
-            F.sum(F.col("_n") * (F.col("_n") - 1) / 2).alias("pairs")
-        ).collect()[0]["pairs"]
-        if est is not None and est > pair_budget:
-            wins.unpersist(blocking=True)
-            hot.unpersist(blocking=True)
-            raise ValueError(
-                f"exact substring pair join would materialize ~{int(est)} "
-                f"occurrence pairs (> pair_budget={pair_budget}); raise "
-                "min_count, pre-clean boilerplate, or use exact=False"
-            )
+    hot = counts.where(F.col("_n") >= min_count).persist()
+    # pair-volume probe BEFORE the quadratic join (see docstring);
+    # inherently eager — the validation must run before the join is
+    # even planned. The persist above makes the probe PAY FOR the scan
+    # the join then reuses, instead of doubling it.
+    est = hot.agg(
+        F.sum(F.col("_n") * (F.col("_n") - 1) / 2).alias("pairs")
+    ).collect()[0]["pairs"]
+    if est is not None and est > pair_budget:
+        wins.unpersist(blocking=True)
+        hot.unpersist(blocking=True)
+        raise ValueError(
+            f"exact substring pair join would materialize ~{int(est)} "
+            f"occurrence pairs (> pair_budget={pair_budget}); raise "
+            "min_count, pre-clean boilerplate, or use exact=False"
+        )
     occ = wins.join(hot.select("fp1", "fp2"), ["fp1", "fp2"])
     a = occ.select(
         F.col("fp1"), F.col("fp2"),
@@ -1407,12 +1363,8 @@ def _pair_runs(
         (F.col("_a1") - F.col("_diag") + window - 1).alias("end"),
         *keys,
     )
-    out = side_a.unionByName(side_b)
-    if not materialize:
-        return out
-    # run rows are small (one per duplicated-run side); checkpoint
-    # them and release the window cache — the _finalize discipline
-    return _finalize(out, wins, hot)
+    # run rows are small (one per duplicated-run side)
+    return dispatch._finalize(side_a.unionByName(side_b), wins, hot)
 
 
 def _flagged_windows(
@@ -1496,7 +1448,6 @@ def cut_repeated_spans(
     min_count: int = 2,
     exact: bool = True,
     pair_budget: int = 50_000_000,
-    materialize: bool = True,
 ) -> DataFrame:
     """The REMOVAL stage completing the exact-substring recipe: every
     repeated ``window``-token occurrence is cut from the corpus except
@@ -1542,17 +1493,12 @@ def cut_repeated_spans(
     array — linear, no corpus-wide state. The HOF runs interpreted,
     but this is the output-materialization stage, not a hot inner
     join; its cost is one pass over the kept tokens.
-    
-    ``materialize=False`` is the same plan-inspection mode as
-    :func:`exact_substring_spans` — lazy, uncached, and WITHOUT the
-    pair-budget validation; production callers keep the default.
     """
     from pyspark.sql import Window
 
     if exact:
         occ = _pair_runs(
-            df, id_col, text_col, window, min_count, pair_budget,
-            materialize=materialize,
+            df, id_col, text_col, window, min_count, pair_budget
         ).dropDuplicates(["id", "start", "end"])
         # canonical occurrence per run CONTENT = min (id, start); the
         # per-content partition is bounded by the duplication degree

@@ -23,6 +23,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import dispatch
+
 log = logging.getLogger(__name__)
 
 
@@ -184,8 +186,6 @@ def node_similarity(
     edges: DataFrame,
     threshold: float = 0.2,
     max_dst_freq: int | None = 1000,
-    log_dropped: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Neighborhood Jaccard between source nodes — the reference's
     ``gds.nodeSimilarity`` surface (the GDS family invoked from
@@ -213,32 +213,27 @@ def node_similarity(
     # release it after materializing the result.
     adj = edges.select("src", "dst").where(
         F.col("src").cast("string") != F.col("dst").cast("string")
-    ).dropDuplicates()
-    if materialize:
-        adj = adj.persist()
+    ).dropDuplicates().persist()
     sizes = adj.groupBy("src").agg(F.count("*").alias("deg"))
     joinable = adj
     if max_dst_freq is not None:
         freq = adj.groupBy("dst").agg(F.count("*").alias("f"))
-        if log_dropped:
-            # one probe job over the (small) frequency table — the
-            # aggregation the cap needs anyway, not an extra pass over
-            # the adjacency
-            n_dropped = freq.agg(
-                F.sum(
-                    F.when(F.col("f") > max_dst_freq, 1).otherwise(0)
-                ).alias("n")
-            ).first()["n"]
-            if n_dropped:
-                log.warning(
-                    json.dumps(
-                        {
-                            "event": "graph.node_similarity.hub_cap",
-                            "excluded_neighbors": int(n_dropped),
-                            "max_dst_freq": max_dst_freq,
-                        }
-                    )
+        # one probe job over the (small) frequency table — the
+        # aggregation the cap needs anyway, not an extra pass over the
+        # adjacency
+        n_dropped = freq.agg(
+            F.sum(F.when(F.col("f") > max_dst_freq, 1).otherwise(0)).alias("n")
+        ).first()["n"]
+        if n_dropped:
+            log.warning(
+                json.dumps(
+                    {
+                        "event": "graph.node_similarity.hub_cap",
+                        "excluded_neighbors": int(n_dropped),
+                        "max_dst_freq": max_dst_freq,
+                    }
                 )
+            )
         joinable = adj.join(
             freq.where(F.col("f") <= max_dst_freq).select("dst"),
             "dst",
@@ -269,11 +264,7 @@ def node_similarity(
         .where(F.col("similarity") >= threshold)
         .select("id_a", "id_b", F.round("similarity", 6).alias("similarity"))
     )
-    if not materialize:
-        return out
-    out = out.localCheckpoint(eager=True)
-    adj.unpersist(blocking=True)
-    return out
+    return dispatch._finalize(out, adj)
 
 
 def k_core(edges: DataFrame, k: int = 2, iterations: int = 6) -> DataFrame:
@@ -379,7 +370,6 @@ def adamic_adar(
     edges: DataFrame,
     threshold: float = 0.0,
     max_neighbor_deg: int | None = 1000,
-    log_dropped: bool = True,
 ) -> DataFrame:
     """Adamic-Adar link prediction over the symmetrized simple graph —
     the GDS link-prediction family companion
@@ -419,22 +409,19 @@ def adamic_adar(
     )
     joinable = und.select("a", F.col("b").alias("_z"))
     if max_neighbor_deg is not None:
-        if log_dropped:
-            n_dropped = w.agg(
-                F.sum(
-                    F.when(F.col("d") > max_neighbor_deg, 1).otherwise(0)
-                ).alias("n")
-            ).first()["n"]
-            if n_dropped:
-                log.warning(
-                    json.dumps(
-                        {
-                            "event": "graph.adamic_adar.hub_cap",
-                            "excluded_neighbors": int(n_dropped),
-                            "max_neighbor_deg": max_neighbor_deg,
-                        }
-                    )
+        n_dropped = w.agg(
+            F.sum(F.when(F.col("d") > max_neighbor_deg, 1).otherwise(0)).alias("n")
+        ).first()["n"]
+        if n_dropped:
+            log.warning(
+                json.dumps(
+                    {
+                        "event": "graph.adamic_adar.hub_cap",
+                        "excluded_neighbors": int(n_dropped),
+                        "max_neighbor_deg": max_neighbor_deg,
+                    }
                 )
+            )
         joinable = joinable.join(
             w.where(F.col("d") <= max_neighbor_deg).select("_z"), "_z", "semi"
         )
@@ -448,10 +435,8 @@ def adamic_adar(
         .agg(F.sum("w").alias("_s"))
         .where(F.col("_s") >= threshold)
         .select("id_a", "id_b", F.round("_s", 6).alias("score"))
-        .localCheckpoint(eager=True)
     )
-    und.unpersist(blocking=True)
-    return out
+    return dispatch._finalize(out, und)
 
 
 def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
@@ -506,11 +491,10 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
                 .where(F.col("_rn") == 1)
                 .select("id", "lbl")
             )
-            if it % 2 == 1 or it == iterations - 1:
+            if it % 2 == 1 and it < iterations - 1:
                 labels = labels.localCheckpoint(eager=True)
         out = labels.select("id", F.col("lbl").alias("community"))
-    und.unpersist(blocking=True)
-    return out
+        return dispatch._finalize(out, und)
 
 
 def bfs_distances(

@@ -50,6 +50,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import dispatch
 from ..dispatch import log_dispatch, pull_within
 from .graph import derived_shuffle_width
 
@@ -398,10 +399,7 @@ def hits_scores(edges: DataFrame, iterations: int = 5) -> DataFrame:
                 F.round(F.col("hub") / F.col("h_sum"), 6).alias("hub"),
             )
         )
-        out = out.localCheckpoint(eager=True)
-    e.unpersist(blocking=True)
-    vertices.unpersist(blocking=True)
-    return out
+        return dispatch._finalize(out, e, vertices)
 
 
 def attach_rank(nodes: DataFrame, ranks: DataFrame) -> DataFrame:

@@ -48,6 +48,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import dispatch
 from ..dispatch import log_dispatch, pull_within
 
 log = logging.getLogger(__name__)
@@ -560,11 +561,8 @@ def _kmeans_distributed(
             else centroids[ci]  # emptied cluster keeps its centroid
             for ci in range(len(centroids))
         ]
-    out = base.select("id", assign_expr(centroids)).localCheckpoint(
-        eager=True
-    )
-    base.unpersist(blocking=True)
-    return out, centroids
+    out = base.select("id", assign_expr(centroids))
+    return dispatch._finalize(out, base), centroids
 
 
 def ivf_candidates(
@@ -731,9 +729,7 @@ def _split_oversized(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        out = out.localCheckpoint(eager=True)
-        vecs.unpersist(blocking=True)
-        vecs = out
+        vecs = dispatch._finalize(out, vecs)
         if not made_progress:
             break
     leftover = [

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import dispatch
+
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "with"],
     "de": ["der", "und", "nicht", "ist"],
@@ -630,7 +632,6 @@ def repetition_signals(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    materialize: bool = True,
 ) -> DataFrame:
     """The full Gopher repetition-filter table per document — the
     signals the published quality pipeline thresholds to drop
@@ -680,9 +681,7 @@ def repetition_signals(
     checkpointed eagerly so the token cache can be released.
     """
     toks = norm_tokens(text_col)
-    base = df.select(F.col(id_col).alias("id"), toks.alias("_t"))
-    if materialize:
-        base = base.persist()
+    base = df.select(F.col(id_col).alias("id"), toks.alias("_t")).persist()
 
     def gram_rows(n: int) -> DataFrame:
         m = F.size("_t") - F.lit(n - 1)
@@ -765,11 +764,7 @@ def repetition_signals(
     out = out.select(
         "id", *[F.coalesce(c, F.lit(0.0)).alias(c) for c in cols]
     )
-    if not materialize:
-        return out
-    out = out.localCheckpoint(eager=True)
-    base.unpersist(blocking=True)
-    return out
+    return dispatch._finalize(out, base)
 
 
 # ---------------------------------------------------------------------------

@@ -245,11 +245,18 @@ class KGPipeline:
     def run_link_and_stage_edges(self, fail_after_chunks: int | None = None) -> None:
         """E3+E4: triples from mention pairs; link mentions; emit the
         page-local edge staging table (citing, contains,
-        has_named_entity, relation triples), bucketed."""
+        has_named_entity, relation triples), bucketed. Each chunk's
+        linked mentions are cached for their two consumers and released
+        once the chunk's write has landed, when the next chunk is built
+        or the stage ends."""
         ext = self._read("extract")
         men = self._read("mentions")
+        linked = None
 
         def build(chunk: list[int]) -> DataFrame:
+            nonlocal linked
+            if linked is not None:
+                linked.unpersist()
             e = ext.where(F.col("bucket").isin(chunk))
             m = men.where(F.col("bucket").isin(chunk)).drop("bucket")
             linked = link_mentions(m, self.alias_dict).persist()
@@ -279,7 +286,11 @@ class KGPipeline:
                 bucket_expr("origin_url", self.n_buckets),
             )
 
-        self._run_bucketed_stage("edges_staging", build, fail_after_chunks)
+        try:
+            self._run_bucketed_stage("edges_staging", build, fail_after_chunks)
+        finally:
+            if linked is not None:
+                linked.unpersist()
 
     def run_fused_stage_edges(
         self, pages: DataFrame, fail_after_chunks: int | None = None

@@ -26,6 +26,21 @@ def sf_dir():
 
 
 @pytest.fixture
+def cached_rdds(spark):
+    """``cached_rdds()`` counts the session's persisted RDDs that back a
+    DataFrame cache. Spark names each after its plan; the unnamed
+    localCheckpoint blocks are left out, because the ContextCleaner
+    drops them at its own pace once their frame is garbage."""
+    jsc = spark.sparkContext._jsc
+
+    def count():
+        rdds = jsc.getPersistentRDDs()
+        return sum(1 for k in rdds if rdds[k].name() is not None)
+
+    return count
+
+
+@pytest.fixture
 def rank_paths(monkeypatch):
     """Run a rank test on both sides of the ``RANK_LOCAL_MAX_EDGES``
     dispatch: ``for path in rank_paths(): ...`` yields ``"local"`` at the

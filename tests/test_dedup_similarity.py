@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from bertseyeview_spark import dispatch
 from bertseyeview_spark.operators import dedup as D
 from bertseyeview_spark.operators import similarity as SIM
 from bertseyeview_spark.operators.textquality import rolling_fingerprint
@@ -232,10 +233,11 @@ def test_exact_substring_pair_budget_probe(spark):
     from the hot-fingerprint counts BEFORE any pair materializes."""
     rows = [(i, "dup " * 12) for i in range(30)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    with pytest.raises(ValueError, match="pair_budget"):
-        D.exact_substring_spans(
-            df, "doc_id", "text", window=4, min_count=2, pair_budget=10
-        ).collect()
+    for builder in (D.exact_substring_spans, D.cut_repeated_spans):
+        with pytest.raises(ValueError, match="pair_budget"):
+            builder(
+                df, "doc_id", "text", window=4, min_count=2, pair_budget=10
+            ).collect()
 
 
 def test_ngram_jaccard_vs_python(spark, docs):
@@ -446,15 +448,16 @@ def test_dedup_dispatch_records(spark, docs, monkeypatch, caplog):
     # probe runs, so the doc count is unknown
     assert ng["docs"] is None and ng["rows"] > 0 and ng["path"] == "join"
     # the join path is ppjoin: the prefix ranks come from a row_number
-    # window
-    out = D.ngram_jaccard_pairs(
+    # window in the plan the operator checkpoints
+    seen = _capture_finalized(monkeypatch)
+    D.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, max_shingle_freq=None,
-        materialize=False,
     )
     (ng,) = records()
     assert ng["dispatcher"] == "ngram_jaccard_pairs.pair_count"
     assert ng["path"] == "join"
-    assert "row_number" in out._jdf.queryExecution().optimizedPlan().toString()
+    plan = seen["out"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "row_number" in plan
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):
@@ -686,6 +689,20 @@ def test_dedup_representatives_numeric_min(spark, monkeypatch):
             assert got == want, (len(ids), ceiling)
 
 
+def _capture_finalized(monkeypatch):
+    """Patch ``dispatch._finalize`` so each call records the frame it
+    checkpoints under ``"out"`` before running the real helper."""
+    seen = {}
+    finalize = dispatch._finalize
+
+    def capture(out, *caches):
+        seen["out"] = out
+        return finalize(out, *caches)
+
+    monkeypatch.setattr(dispatch, "_finalize", capture)
+    return seen
+
+
 def test_minhash_signature_aggregate_once(spark, docs, monkeypatch):
     """Both sides of the band self-join read one persisted (id, bkts)
     frame: the executed plan holds one final signature aggregate, not
@@ -693,14 +710,7 @@ def test_minhash_signature_aggregate_once(spark, docs, monkeypatch):
     attribute ids)."""
     import re
 
-    seen = {}
-    finalize = D._finalize
-
-    def capture(out, *caches):
-        seen["out"] = out
-        return finalize(out, *caches)
-
-    monkeypatch.setattr(D, "_finalize", capture)
+    seen = _capture_finalized(monkeypatch)
     D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.5).collect()
     plan = seen["out"]._jdf.queryExecution().executedPlan().toString()
     final_aggs = set(
@@ -709,31 +719,49 @@ def test_minhash_signature_aggregate_once(spark, docs, monkeypatch):
     assert len(final_aggs) == 1
 
 
-def test_dedup_releases_shingle_cache(spark):
-    """The persisted shingle table must be unpersisted once the result
-    is materialized — repeated dedup calls in one session may not
-    accumulate cached RDDs (ADVICE r2: storage-memory leak)."""
-    import bertseyeview_spark.operators.dedup as D
+def test_dedup_releases_shingle_cache(spark, cached_rdds):
+    """Every builder that persists an intermediate returns through
+    ``dispatch._finalize``, which releases it once the result is
+    checkpointed: repeated calls in one session may not accumulate
+    cached RDDs (a storage-memory leak). Each call gets a different
+    input, since a second persist of the same plan reuses its cache."""
+    from bertseyeview_spark.operators.graph import adamic_adar, node_similarity
 
-    sc = spark.sparkContext
-    docs = spark.createDataFrame(
+    corpus = spark.createDataFrame(
         [(i, f"w{i} w{i + 1} w{i + 2} w{i + 3}") for i in range(20)],
         "doc_id long, text string",
     )
-    before = sc._jsc.getPersistentRDDs().size()
-    for _ in range(3):
-        D.ngram_jaccard_pairs(
+    builders = {
+        "ngram_jaccard_pairs": lambda docs, _: D.ngram_jaccard_pairs(
             docs, "doc_id", "text", n=2, threshold=0.5
-        ).collect()
-        D.minhash_lsh_pairs(
+        ),
+        "minhash_lsh_pairs": lambda docs, _: D.minhash_lsh_pairs(
             docs, "doc_id", "text", n=2, num_perm=8, bands=4, threshold=0.5
-        ).collect()
-    after = sc._jsc.getPersistentRDDs().size()
-    # localCheckpoint blocks of the returned (tiny) results may linger
-    # until GC; the shingle caches themselves are released with
-    # blocking=True, so growth is bounded by the 6 checkpoints — not
-    # 6 checkpoints + 6 shingle caches
-    assert after - before <= 6
+        ),
+        "simhash_verified_pairs": lambda docs, _: D.simhash_verified_pairs(
+            docs, "doc_id", "text", n=2, threshold=0.5
+        ),
+        "exact_substring_spans": lambda docs, _: D.exact_substring_spans(
+            docs, "doc_id", "text", window=2
+        ),
+        "cut_repeated_spans": lambda docs, _: D.cut_repeated_spans(
+            docs, "doc_id", "text", window=2
+        ),
+        "repetition_signals": lambda docs, _: TQ.repetition_signals(
+            docs, "doc_id", "text"
+        ),
+        "node_similarity": lambda _, edges: node_similarity(edges, threshold=0.0),
+        "adamic_adar": lambda _, edges: adamic_adar(edges),
+    }
+    for name, build in builders.items():
+        before = cached_rdds()
+        for k in range(3):
+            docs = corpus.where(F.col("doc_id") != k)
+            edges = docs.select(
+                F.col("doc_id").alias("src"), (F.col("doc_id") % 5).alias("dst")
+            )
+            build(docs, edges).collect()
+        assert cached_rdds() == before, name
 
 
 def test_simhash_banding_pigeonhole(spark):

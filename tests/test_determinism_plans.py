@@ -210,3 +210,29 @@ def test_anchor_paragraph_plans_no_cartesian(spark, sf_dir):
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "CartesianProduct" not in plan, q
+
+
+def test_explain_plans_dumps_lazy_operator_plans(spark, sf_dir, cached_rdds):
+    """tools/explain_plans.py builds every query with
+    ``dispatch._finalize`` swapped for identity: node_similarity's dump
+    is the plan it would checkpoint (the neighbour equi-join and the
+    hub-cap semi-join), not a scan of the checkpoint. The helper is
+    restored afterwards and no cache is left behind."""
+    import re
+
+    import __spark_entry__ as E
+    from bertseyeview_spark import dispatch
+    from tools.explain_plans import plan_of
+
+    finalize = dispatch._finalize
+    before = cached_rdds()
+    plan = plan_of(E.queries()["node_similarity"], spark, sf_dir)
+    assert dispatch._finalize is finalize
+    assert cached_rdds() == before
+    assert "Scan ExistingRDD" not in plan
+    assert re.search(
+        r"Left keys \[1\]: \[dst#\d+L?\]\nRight keys \[1\]: \[dst#\d+L?\]\n"
+        r"Join type: Inner",
+        plan,
+    )
+    assert "Join type: LeftSemi" in plan

@@ -193,7 +193,7 @@ def test_personalized_pagerank_empty_sources_raises(spark, rank_paths):
             personalized_pagerank(df, spark.createDataFrame([], "id string"))
 
 
-def test_adamic_adar_vs_python(spark):
+def test_adamic_adar_vs_python(spark, caplog):
     """AA scores on a crafted graph match the textbook formula, incl.
     the hub cap's under-estimate bias."""
     import math
@@ -217,12 +217,24 @@ def test_adamic_adar_vs_python(spark):
     assert len([p for p in got if "z1" not in p]) >= 6
     # hub cap 3 removes h from the join: a-b keeps only z1's term,
     # c-d disappears (under-estimate bias, never over)
-    capped = {
-        (r["id_a"], r["id_b"]): r["score"]
-        for r in adamic_adar(df, threshold=0.0, max_neighbor_deg=3).collect()
-    }
+    log_name = "bertseyeview_spark.operators.graph"
+    with caplog.at_level(logging.WARNING, logger=log_name):
+        capped = {
+            (r["id_a"], r["id_b"]): r["score"]
+            for r in adamic_adar(df, threshold=0.0, max_neighbor_deg=3).collect()
+        }
     assert capped[("a", "b")] == pytest.approx(round(w_z1, 6))
     assert ("c", "d") not in capped
+    # the cap is never silent: one WARNING record names the one hub
+    assert [
+        json.loads(r.getMessage()) for r in caplog.records if r.name == log_name
+    ] == [
+        {
+            "event": "graph.adamic_adar.hub_cap",
+            "excluded_neighbors": 1,
+            "max_neighbor_deg": 3,
+        }
+    ]
 
 
 def test_label_propagation_two_cliques(spark):

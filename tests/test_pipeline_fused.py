@@ -124,3 +124,19 @@ def test_above_ceiling_dispatch_matches_fused(
     assert [r["path"] for r in _plan_records(caplog)] == ["modular"]
     assert os.path.isdir(modular._path("mentions"))
     assert _triples(modular) == _triples(fused)
+
+
+def test_modular_stage_releases_linked_cache(spark, tmp_path, cached_rdds):
+    """The modular plan caches each chunk's linked mentions for their
+    two consumers and releases every one of them: E2 then E3+E4 over
+    three chunks leave no cached RDD behind."""
+    pages = pages_to_spark(spark, generate_corpus(30, seed=31))
+    pipe = KGPipeline(
+        spark, str(tmp_path), n_buckets=3, chunk_size=1, rank_iterations=2
+    )
+    pipe.run_extract(pages)
+    before = cached_rdds()
+    pipe.run_mentions()
+    pipe.run_link_and_stage_edges()
+    assert len(pipe.lineage.done_buckets("edges_staging")) == 3
+    assert cached_rdds() == before

@@ -24,6 +24,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
+from bertseyeview_spark import dispatch  # noqa: E402
 from bertseyeview_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -91,70 +92,31 @@ QUERIES = [
 ]
 
 
-def _plan_only_overrides():
-    """The dedup builders materialize eagerly by default (so their
-    shingle caches can be released); for plan dumps use
-    materialize=False so the dump shows the real join plan instead of
-    a Scan ExistingRDD of the checkpoint."""
-    from bertseyeview_spark.operators import dedup as D
+def plan_of(query, spark, sf_dir: str) -> str:
+    """The formatted physical plan of ``query(spark, sf_dir)``.
 
-    def ngram(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return D.ngram_jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.5,
-            max_shingle_freq=None, materialize=False,
-        )
+    ``dispatch._finalize`` is swapped for identity while the query is
+    built, so an operator that returns an eager result hands back the
+    lazy plan it would checkpoint, and the dump shows its real joins
+    instead of a ``Scan ExistingRDD`` of the checkpoint. The caches
+    the operator persisted are released once the plan is formatted."""
+    finalize = dispatch._finalize
+    caches = []
 
-    def minhash(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return D.minhash_lsh_pairs(
-            docs, "doc_id", "text", n=3, num_perm=32, bands=8,
-            threshold=0.8, materialize=False,
-        )
+    def lazy(out, *cs):
+        caches.extend(cs)
+        return out
 
-    def simhash(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return D.simhash_verified_pairs(
-            docs, "doc_id", "text", max_hamming=10, n=3, threshold=0.8,
-            materialize=False,
-        )
-
-    def substr_spans(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return D.exact_substring_spans(
-            docs, "doc_id", "text", window=8, min_count=2,
-            materialize=False,
-        )
-
-    def substr_cut(spark, sf_dir):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return D.cut_repeated_spans(
-            docs, "doc_id", "text", window=8, min_count=2,
-            materialize=False,
-        )
-
-    def repetition(spark, sf_dir):
-        from bertseyeview_spark.operators.textquality import (
-            repetition_signals,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return repetition_signals(docs, "doc_id", "text", materialize=False)
-
-    return {
-        "ngram_jaccard_dedup": ngram,
-        "minhash_lsh_dedup": minhash,
-        "simhash_dedup": simhash,
-        "exact_substring_dedup": substr_spans,
-        "substring_cut": substr_cut,
-        "repetition_signals": repetition,
-    }
-
-
-def _plan(df) -> str:
+    dispatch._finalize = lazy
+    try:
+        df = query(spark, sf_dir)
+    finally:
+        dispatch._finalize = finalize
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
+    for c in caches:
+        c.unpersist()
     return buf.getvalue()
 
 
@@ -174,11 +136,10 @@ def main() -> None:
     spark = get_spark("explain", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
-    qs.update(_plan_only_overrides())
     if args.label:
         os.makedirs(args.out, exist_ok=True)
         for name in args.queries or HEADLINE:
-            plan = _plan(qs[name](spark, args.sf))
+            plan = plan_of(qs[name], spark, args.sf)
             _write(os.path.join(args.out, f"{name}_{args.label}.txt"), plan)
     else:
         out = [
@@ -187,7 +148,7 @@ def main() -> None:
             "Annotations state the property each plan is expected to show.\n",
         ]
         for name, expectation in QUERIES:
-            plan = _plan(qs[name](spark, args.sf))
+            plan = plan_of(qs[name], spark, args.sf)
             out.append(f"\n## {name}\n\nExpected: {expectation}\n\n```\n{plan}```\n")
         _write(os.path.join(REPO, "EXPLAIN.md"), "\n".join(out))
     spark.stop()
