@@ -40,8 +40,7 @@ from bertseyeview_spark.operators.node2vec import generate_walks  # noqa: E402
 from bertseyeview_spark.operators.rank import article_rank, hits_scores  # noqa: E402
 from bertseyeview_spark.operators.citations import compose_citation_rows  # noqa: E402
 from bertseyeview_spark.functions.codecs import epubdate_iso_udf  # noqa: E402
-from bertseyeview_spark.plans.kg import documents_as_pages  # noqa: E402
-from bertseyeview_spark.plans.kg_fused import construct_triples_fused  # noqa: E402
+from bertseyeview_spark.plans.kg import construct_triples, documents_as_pages  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # shared constants (documents-table dictionary; vocabulary is the
@@ -141,10 +140,11 @@ def q_kg_construct_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: documents -> pages shape -> extract -> NER -> link ->
     canonicalize -> (subj, pred, obj). Oracle-checkable because the
     dictionary is unambiguous and no merges apply on this corpus.
-    Uses the fused single-Arrow-pass plan (plans/kg_fused.py); parity
-    with the modular operator chain is pinned by tests/test_kg_fused.py."""
+    construct_triples picks the fused single-Arrow-pass plan at this
+    dictionary size; parity with the modular operator chain is pinned
+    by tests/test_kg_fused.py."""
     pages = documents_as_pages(spark, _t(spark, sf_dir, "documents"))
-    return construct_triples_fused(
+    return construct_triples(
         spark,
         pages,
         alias_dict=_doc_alias_dict(spark),

@@ -40,7 +40,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as E  # noqa: E402
 from bertseyeview_spark.datagen import generate_corpus, pages_to_spark  # noqa: E402
 from bertseyeview_spark.plans.kg import construct_triples  # noqa: E402
-from bertseyeview_spark.plans.kg_fused import construct_triples_fused  # noqa: E402
 from bertseyeview_spark.session import get_spark  # noqa: E402
 
 HEADLINE = [
@@ -165,13 +164,6 @@ def main() -> None:
     )
     pages = pages_to_spark(spark, corpus, num_partitions=cpus * 2).persist()
     pages.count()  # materialize input outside the timed window
-    # fused page-local plan by default (3 shuffles end-to-end);
-    # BENCH_KG_FUSED=0 benches the modular operator chain instead
-    build = (
-        construct_triples_fused
-        if os.environ.get("BENCH_KG_FUSED", "1") == "1"
-        else construct_triples
-    )
     # untimed warmup of the KG path: the first build pays whole-stage-
     # codegen JIT and Python/Arrow worker startup (~6s on this host —
     # 3x the actual 20k-page work), which a long-running production job
@@ -181,9 +173,9 @@ def main() -> None:
             spark, generate_corpus(500, seed=1), num_partitions=cpus
         )
         for depth, _ in kg_depths:
-            build(spark, warm_pages, ner_scorer_layers=depth).write.format(
-                "noop"
-            ).mode("overwrite").save()
+            construct_triples(
+                spark, warm_pages, ner_scorer_layers=depth
+            ).write.format("noop").mode("overwrite").save()
 
     from pyspark.sql import functions as F
 
@@ -195,7 +187,9 @@ def main() -> None:
     # pipeline-overhead companion, labeled separately in extras
     for depth, label in kg_depths:
         t0 = time.time()
-        triples = build(spark, pages, ner_scorer_layers=depth).persist()
+        triples = construct_triples(
+            spark, pages, ner_scorer_layers=depth
+        ).persist()
         n = triples.count()
         sec = time.time() - t0
         kg_extras[f"kg_sec_{label}"] = round(sec, 3)

@@ -25,7 +25,6 @@ E5-E7 are global graph passes that run once after all buckets land.
 from __future__ import annotations
 
 import json
-import logging
 import os
 import time
 from dataclasses import dataclass, field
@@ -33,20 +32,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .datagen import build_alias_dict, build_curation_rules, alias_dict_to_spark
-from .dispatch import log_dispatch
-from .operators import canonicalize as canon
 from .operators import graph as G
 from .operators import rank as R
-from .operators.extract import citing_edges, extract_text
-from .operators.linking import link_mentions, link_triples, mention_edges
-from .operators.mentions import detect_mentions, keyword_matches
-from .operators.triples import extract_triples
-from .plans import kg_fused
-
-log = logging.getLogger(__name__)
-
-_KEYWORDS_DEFAULT = ["therapy", "biomarker", "clinical trial", "prognosis"]
+from .operators.extract import extract_text
+from .operators.mentions import detect_mentions
+from .plans import kg, kg_fused
 
 
 def bucket_expr(col: str, n_buckets: int):
@@ -139,23 +129,15 @@ class KGPipeline:
         os.makedirs(work_dir, exist_ok=True)
         self.n_buckets = n_buckets
         self.chunk_size = chunk_size
-        self.keywords = keywords or _KEYWORDS_DEFAULT
-        self.alias_dict = (
-            alias_dict
-            if alias_dict is not None
-            else alias_dict_to_spark(spark, build_alias_dict())
-        )
-        self.curation_rules = (
-            curation_rules
-            if curation_rules is not None
-            else spark.createDataFrame(build_curation_rules())
+        self.alias_dict, self.curation_rules, self.keywords = kg.kg_inputs(
+            spark, alias_dict, curation_rules, keywords
         )
         self.rank_iterations = rank_iterations
         self.lineage = Lineage(os.path.join(work_dir, "lineage.jsonl"))
-        alias_counts = self.alias_dict.groupBy("alias").count().collect()
-        self._alias_list = [r["alias"] for r in alias_counts]
-        # the page-local plan dispatch reads the row count off this collect
-        self._alias_rows = sum(r["count"] for r in alias_counts)
+        # the page-local plan, picked once per pipeline from the
+        # dictionary pull (plans/kg.page_local_plan); the pulled table
+        # waits for run_fused_stage_edges to broadcast it
+        self._plan, self._dictionary = kg.page_local_plan(self.alias_dict)
 
     # ---------------- storage helpers ----------------
 
@@ -234,17 +216,20 @@ class KGPipeline:
     def run_mentions(self, fail_after_chunks: int | None = None) -> None:
         """E2: dictionary NER over extracted text, bucketed."""
         ext = self._read("extract")
+        alias_list = [
+            r["alias"] for r in self.alias_dict.select("alias").distinct().collect()
+        ]
 
         def build(chunk: list[int]) -> DataFrame:
             subset = ext.where(F.col("bucket").isin(chunk))
-            m = detect_mentions(subset, self._alias_list, self.spark)
+            m = detect_mentions(subset, alias_list, self.spark)
             return m.withColumn("bucket", bucket_expr("url", self.n_buckets))
 
         self._run_bucketed_stage("mentions", build, fail_after_chunks)
 
     def run_link_and_stage_edges(self, fail_after_chunks: int | None = None) -> None:
-        """E3+E4: triples from mention pairs; link mentions; emit the
-        page-local edge staging table (citing, contains,
+        """E3+E4 (``plans/kg.modular_page_edges``): link mentions and
+        emit the page-local edge staging table (citing, contains,
         has_named_entity, relation triples), bucketed. Each chunk's
         linked mentions are cached for their two consumers and released
         once the chunk's write has landed, when the next chunk is built
@@ -257,33 +242,18 @@ class KGPipeline:
             nonlocal linked
             if linked is not None:
                 linked.unpersist()
-            e = ext.where(F.col("bucket").isin(chunk))
-            m = men.where(F.col("bucket").isin(chunk)).drop("bucket")
-            linked = link_mentions(m, self.alias_dict).persist()
-            raw_triples = extract_triples(m)
-            rel_edges = link_triples(raw_triples, linked, keep_url=True)
-            ment = mention_edges(linked).withColumn("origin_url", F.col("src"))
-            cit = citing_edges(e).withColumn("origin_url", F.col("src"))
-            kws = keyword_matches(e, self.keywords).withColumn(
-                "origin_url", F.col("src")
-            )
-            sel = ["src", "rel", "dst", "origin_url"]
-            staged = (
-                ment.select(*sel)
-                .unionByName(cit.select(*sel))
-                .unionByName(kws.select(*sel))
-                .unionByName(rel_edges.select(*sel))
-                # dedup per (edge, origin): origin must stay deterministic
-                # so an idempotent rerun re-buckets rows identically; the
-                # global pass collapses cross-page duplicates
-                .dropDuplicates(["src", "rel", "dst", "origin_url"])
+            staged, linked = kg.modular_page_edges(
+                ext.where(F.col("bucket").isin(chunk)),
+                men.where(F.col("bucket").isin(chunk)).drop("bucket"),
+                self.alias_dict,
+                self.keywords,
+                with_origin=True,
             )
             # bucket by originating page: the chunk owns exactly the
             # input buckets it processed (idempotent overwrite + exact
             # per-bucket lineage counts)
             return staged.withColumn(
-                "bucket",
-                bucket_expr("origin_url", self.n_buckets),
+                "bucket", bucket_expr("origin_url", self.n_buckets)
             )
 
         try:
@@ -301,18 +271,24 @@ class KGPipeline:
         run_all and run_incremental take this path while the alias
         dictionary fits the fused plan's broadcast ceiling. The
         dictionary is broadcast once per stage run, on its first pending
-        chunk, and released when the stage ends. The extract stage still
-        runs separately — its checkpointed text is the byte-identity
-        oracle and the corpus-url set; canonicalization and corpus
-        filtering happen in run_global."""
+        chunk, from the table the constructor's plan probe pulled (a
+        later stage run pulls it again), and released when the stage
+        ends.
+        The extract stage still runs separately — its checkpointed text
+        is the byte-identity oracle and the corpus-url set;
+        canonicalization and corpus filtering happen in run_global."""
         src = pages.withColumn("bucket", bucket_expr("url", self.n_buckets))
         dictionary = None
 
         def build(chunk: list[int]) -> DataFrame:
             nonlocal dictionary
             if dictionary is None:
+                pulled = self._dictionary
+                self._dictionary = None
                 dictionary = kg_fused.dictionary_broadcast(
-                    self.spark, self.alias_dict, self.keywords
+                    self.spark,
+                    self.alias_dict if pulled is None else pulled,
+                    self.keywords,
                 )
             subset = src.where(F.col("bucket").isin(chunk)).drop("bucket")
             staged = kg_fused.fused_page_edges(subset, dictionary, with_origin=True)
@@ -328,32 +304,16 @@ class KGPipeline:
                 dictionary.destroy()
 
     def run_global(self) -> dict[str, DataFrame]:
-        """E5-E7: canonicalize, materialize nodes/edges, rank. Global
-        single-shot stages (stage-level lineage via directory presence)."""
-        staged = self._read("edges_staging").select("src", "rel", "dst")
-
-        cmap = canon.build_canonical_map_auto(
+        """E5-E7: the global pass (``plans/kg.global_edges``),
+        materialize nodes/edges, rank. Global single-shot stages
+        (stage-level lineage via directory presence)."""
+        edges = kg.global_edges(
             self.spark,
-            curation_rules=self.curation_rules,
-            alias_dict=self.alias_dict,
+            self._read("edges_staging"),
+            self._read("extract"),
+            self.alias_dict,
+            self.curation_rules,
         )
-        edges = canon.apply_canonical_map(G.cleanup_null_nodes(staged), cmap)
-
-        # drop citing edges whose target page is not in the corpus
-        # (reference only MERGEs articles it has metadata for) —
-        # single-pass left-join filter, not a union of branches
-        pages_urls = (
-            self._read("extract")
-            .select(F.col("url").alias("dst"))
-            .distinct()
-            .withColumn("_in_corpus", F.lit(True))
-        )
-        edges = (
-            edges.join(pages_urls, "dst", "left")
-            .where((F.col("rel") != "citing") | F.col("_in_corpus").isNotNull())
-            .select("src", "rel", "dst")
-        )
-
         edges.write.mode("overwrite").parquet(self._path("edges"))
         edges = self._read("edges")
 
@@ -376,24 +336,8 @@ class KGPipeline:
         )
         return {"edges": edges, "nodes": self._read("nodes")}
 
-    def _page_local_plan(self) -> str:
-        """Pick the E2-E4 plan from the alias dictionary's row count:
-        ``"fused"`` (run_fused_stage_edges) while the dictionary fits
-        the fused plan's driver broadcast (``FUSED_ALIAS_CEILING``),
-        else ``"modular"`` (run_mentions + run_link_and_stage_edges),
-        which joins the dictionary as a DataFrame. Logs the choice as
-        one JSON record."""
-        ceiling = kg_fused.FUSED_ALIAS_CEILING
-        return log_dispatch(
-            log,
-            "KGPipeline.page_local_plan",
-            "fused" if self._alias_rows <= ceiling else "modular",
-            alias_rows=self._alias_rows,
-            ceiling=ceiling,
-        )
-
-    def _run_page_local(self, pages: DataFrame, plan: str) -> None:
-        if plan == "fused":
+    def _run_page_local(self, pages: DataFrame) -> None:
+        if self._plan == "fused":
             self.run_fused_stage_edges(pages)
         else:
             self.run_mentions()
@@ -405,7 +349,7 @@ class KGPipeline:
         fits its broadcast ceiling, and as the modular mentions ->
         link/stage chain (3 bucketed stages) above it."""
         self.run_extract(pages)
-        self._run_page_local(pages, self._page_local_plan())
+        self._run_page_local(pages)
         return self.run_global()
 
     def run_incremental(
@@ -452,10 +396,9 @@ class KGPipeline:
         )
         if not affected:
             return {"edges": self._read("edges"), "nodes": self._read("nodes")}
-        plan = self._page_local_plan()
         stages = (
             ["extract", "edges_staging"]
-            if plan == "fused"
+            if self._plan == "fused"
             else ["extract", "mentions", "edges_staging"]
         )
         for stage in stages:
@@ -465,7 +408,7 @@ class KGPipeline:
                 if os.path.isdir(pdir):
                     shutil.rmtree(pdir)
         self.run_extract(pages)
-        self._run_page_local(pages, plan)
+        self._run_page_local(pages)
         return self.run_global()
 
     # ---------------- outputs ----------------

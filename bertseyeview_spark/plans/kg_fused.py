@@ -19,6 +19,8 @@ Only three shuffles remain end-to-end (dedup, remap is broadcast,
 semi-join). The per-page logic is THE SAME pure functions the modular
 operators use (extract_one, tag_text, NeuralTypeScorer, the token-hash
 embedding) — a parity test asserts fused == modular output.
+``plans/kg.py`` composes this module's page-local edges with the global
+pass, and picks this plan while the dictionary fits its broadcast.
 
 At 10^12 docs this fusion is exactly what you want anyway: the
 page-local hot path is embarrassingly parallel, and stage fusion keeps
@@ -31,25 +33,16 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..datagen import (
-    EMBED_DIM,
-    alias_dict_to_spark,
-    build_alias_dict,
-    build_curation_rules,
-    token_embedding,
-)
+from ..datagen import EMBED_DIM, token_embedding
 from ..dispatch import pull_within
-from ..operators import canonicalize as canon
 from ..operators import graph as G
 from ..operators.extract import extract_one
 from ..operators.mentions import _compile_matcher, get_scorer, tag_text
 from ..operators.triples import DEFAULT_PATTERNS, normalize_patterns
-
-_KEYWORDS_DEFAULT = ["therapy", "biomarker", "clinical trial", "prognosis"]
 
 
 def _embed(text: str, cache: dict[str, np.ndarray]) -> np.ndarray:
@@ -146,35 +139,50 @@ def _page_edges(
 # at 250,000 rows with 64-float embeddings (tracemalloc plus Arrow pool
 # peak, CPython 3.11, pyarrow 16), so the ceiling bounds the driver at
 # ~0.55 GB. Each worker's copy is the pickled map, 138 MB at 250,000
-# rows. Above it ``dictionary_broadcast`` raises, and KGPipeline runs
-# the modular plan (plans/kg.py) instead: its linking joins the
-# dictionary as a DataFrame, which scales to any dictionary size. Parity
-# between the two plans is pinned by tests/test_kg_fused.py.
+# rows. Above it ``plans/kg.page_local_plan`` picks the modular plan
+# (``plans/kg.modular_page_edges``) on its own, in ``construct_triples``
+# and in ``KGPipeline`` alike: its linking joins the dictionary as a
+# DataFrame, which scales to any dictionary size. Parity between the two
+# plans is pinned by tests/test_kg_fused.py.
 FUSED_ALIAS_CEILING = 250_000
+
+
+def pull_dictionary(alias_df: DataFrame) -> tuple[pa.Table | None, int]:
+    """The alias dictionary's ``(alias, entity_id, embedding)`` as one
+    Arrow table, pulled by :func:`~..dispatch.pull_within` at
+    ``FUSED_ALIAS_CEILING``: the table (``None`` above the ceiling) and
+    the rows pulled. The pull reads at most one row past the ceiling,
+    so it stays inside the driver-memory bound."""
+    return pull_within(
+        alias_df.select("alias", "entity_id", "embedding"), FUSED_ALIAS_CEILING
+    )
 
 
 def dictionary_broadcast(
     spark: SparkSession,
-    alias_df: DataFrame,
-    keywords: list[str] | None = None,
-    patterns: dict[str, str] | None = None,
+    alias_dict: DataFrame | pa.Table | None,
+    keywords: list[str],
     ner_scorer_layers: int = 0,
 ) -> Broadcast:
-    """Pull the alias dictionary and broadcast it, with the per-page
-    config, as plain python (model-broadcast pattern, like shipping
-    tokenizer/model weights to workers).
+    """Broadcast the alias dictionary, with the per-page config, as
+    plain python (model-broadcast pattern, like shipping tokenizer/model
+    weights to workers).
 
-    Raises ``ValueError`` above ``FUSED_ALIAS_CEILING`` rows; the pull
-    (:func:`~..dispatch.pull_within`) reads at most one row past the
-    ceiling, so the guard itself stays inside the driver-memory bound."""
-    ceiling = FUSED_ALIAS_CEILING
-    t, _ = pull_within(alias_df.select("alias", "entity_id", "embedding"), ceiling)
+    ``alias_dict`` is the alias dictionary, or the table
+    :func:`pull_dictionary` already pulled of it. Raises ``ValueError``
+    when the dictionary is above ``FUSED_ALIAS_CEILING`` rows (a pulled
+    table of ``None``)."""
+    t = (
+        pull_dictionary(alias_dict)[0]
+        if isinstance(alias_dict, DataFrame)
+        else alias_dict
+    )
     if t is None:
         raise ValueError(
-            f"alias dictionary has more than {ceiling} rows, the fused "
-            "plan's broadcast ceiling (FUSED_ALIAS_CEILING); use the "
-            "modular plan (plans/kg.py construct_triples, or KGPipeline, "
-            "which falls back to it above the ceiling)"
+            f"alias dictionary has more than {FUSED_ALIAS_CEILING} rows, "
+            "the fused plan's broadcast ceiling (FUSED_ALIAS_CEILING); use "
+            "the modular plan (plans/kg.modular_page_edges), which "
+            "construct_triples and KGPipeline fall back to on their own"
         )
     alias_map: dict[str, list[tuple[str, np.ndarray]]] = {}
     # embeddings come out as numpy arrays (None when null); converting
@@ -190,8 +198,8 @@ def dictionary_broadcast(
     return spark.sparkContext.broadcast(
         {
             "alias_map": alias_map,
-            "keywords": list(keywords or _KEYWORDS_DEFAULT),
-            "patterns": dict(normalize_patterns(patterns or DEFAULT_PATTERNS)),
+            "keywords": list(keywords),
+            "patterns": dict(normalize_patterns(DEFAULT_PATTERNS)),
             "aliases": sorted(alias_map),
             "ner_layers": ner_scorer_layers,
         }
@@ -259,80 +267,3 @@ def fused_page_edges(
         ["origin_url"] if with_origin else []
     )
     return G.cleanup_null_nodes(staged).dropDuplicates(dedup_cols)
-
-
-def construct_triples_fused(
-    spark: SparkSession,
-    pages: DataFrame,
-    alias_dict: DataFrame | None = None,
-    curation_rules: DataFrame | None = None,
-    keywords: list[str] | None = None,
-    patterns: dict[str, str] | None = None,
-    drop_dangling_citations: bool = True,
-    ner_scorer_layers: int = 0,
-    canonicalize: bool = True,
-    with_origin: bool = False,
-) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) -> (subj, pred, obj).
-
-    Raises ``ValueError`` when the alias dictionary is above
-    ``FUSED_ALIAS_CEILING`` rows (see ``dictionary_broadcast``).
-
-    ``canonicalize=False`` skips the canonical-map build/apply — used
-    when a caller (e.g. a sharded run) canonicalizes once globally
-    instead of per shard.
-
-    ``with_origin=True`` adds ``origin_url`` and dedups per (edge,
-    origin) (see ``fused_page_edges``). Requires ``canonicalize=False``
-    and ``drop_dangling_citations=False`` (the caller's global pass does
-    both once)."""
-    if with_origin and (canonicalize or drop_dangling_citations):
-        raise ValueError(
-            "with_origin=True requires canonicalize=False and "
-            "drop_dangling_citations=False"
-        )
-    alias_df = (
-        alias_dict
-        if alias_dict is not None
-        else alias_dict_to_spark(spark, build_alias_dict())
-    )
-    curation_rules = (
-        curation_rules
-        if curation_rules is not None
-        else spark.createDataFrame(build_curation_rules())
-    )
-    staged = fused_page_edges(
-        pages,
-        dictionary_broadcast(
-            spark, alias_df, keywords, patterns, ner_scorer_layers
-        ),
-        with_origin,
-    )
-
-    if canonicalize:
-        cmap = canon.build_canonical_map_auto(
-            spark, curation_rules=curation_rules, alias_dict=alias_df
-        )
-        edges = canon.apply_canonical_map(staged, cmap)
-    else:
-        edges = staged
-    if drop_dangling_citations:
-        # single-pass filter (rel != citing OR dst in corpus) via one
-        # left join — a union of two branches over the same subtree
-        # would execute the expensive UDF stage twice (measured 2x)
-        urls = pages.select(F.col("url").alias("dst")).distinct().withColumn(
-            "_in_corpus", F.lit(True)
-        )
-        edges = (
-            edges.join(urls, "dst", "left")
-            .where((F.col("rel") != "citing") | F.col("_in_corpus").isNotNull())
-            .select("src", "rel", "dst")
-        )
-    out = [
-        F.col("src").alias("subj"),
-        F.col("rel").alias("pred"),
-        F.col("dst").alias("obj"),
-    ]
-    if with_origin:
-        out.append(F.col("origin_url"))
-    return edges.select(*out)

@@ -66,11 +66,15 @@ def incremental_kg_ingest(
     so each micro-batch overwrites its own ``epoch=<id>`` partition —
     a replayed batch (crash after write, before checkpoint commit)
     rewrites the same directory instead of appending duplicates.
+
+    Each micro-batch stages the edges of the batch's pages through the
+    modular page-local builder (``plans/kg.modular_page_edges``), so
+    the staged ``(src, rel, dst)`` set over all batches equals the batch
+    builder's over the same pages, relation triples included.
     """
-    from ..operators.extract import citing_edges, extract_text
-    from ..operators.linking import link_mentions, mention_edges
-    from ..operators.mentions import detect_mentions, keyword_matches
-    from ..operators import graph as G
+    from ..operators.extract import extract_text
+    from ..operators.mentions import detect_mentions
+    from ..plans.kg import modular_page_edges
 
     alias_list = [r["alias"] for r in alias_dict.select("alias").distinct().collect()]
     edges_path = os.path.join(out_dir, "edges_staging")
@@ -79,18 +83,21 @@ def incremental_kg_ingest(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        ext = extract_text(batch_df)
-        ments = detect_mentions(ext, alias_list, spark)
-        linked = link_mentions(ments, alias_dict)
-        staged = G.union_edges(
-            mention_edges(linked),
-            citing_edges(ext),
-            keyword_matches(ext, keywords),
+        # extraction and NER feed several edge sources each: cached, or
+        # their Python UDFs re-run once per consumer
+        ext = extract_text(batch_df).persist()
+        ments = detect_mentions(ext, alias_list, spark).persist()
+        staged, linked = modular_page_edges(
+            ext, ments, alias_dict, keywords, with_origin=False
         )
         # idempotent per-epoch commit: replays overwrite, never duplicate
-        staged.write.mode("overwrite").parquet(
-            os.path.join(edges_path, f"epoch={int(epoch_id)}")
-        )
+        try:
+            staged.write.mode("overwrite").parquet(
+                os.path.join(edges_path, f"epoch={int(epoch_id)}")
+            )
+        finally:
+            for c in (ext, ments, linked):
+                c.unpersist()
 
     q = (
         spark.readStream.schema(PAGES_SCHEMA)

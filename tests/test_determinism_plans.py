@@ -12,7 +12,8 @@ dictionary joins as BroadcastHashJoin, and scans prune columns.
 
 from pyspark.sql import functions as F
 
-from bertseyeview_spark.datagen import generate_corpus, pages_to_spark
+from bertseyeview_spark.datagen import build_alias_dict, generate_corpus, pages_to_spark
+from bertseyeview_spark.plans import kg_fused
 from bertseyeview_spark.plans.kg import construct_triples
 
 
@@ -27,12 +28,19 @@ def _triple_set(spark, corpus, num_partitions, shuffle_partitions):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_triples_invariant_to_parallelism(spark):
+def test_triples_invariant_to_parallelism(spark, monkeypatch):
+    """Both page-local plans: the fused one at the default ceiling, the
+    modular one with the ceiling one row below the dictionary."""
     corpus = generate_corpus(150, seed=11)
-    a = _triple_set(spark, corpus, num_partitions=2, shuffle_partitions=2)
-    b = _triple_set(spark, corpus, num_partitions=16, shuffle_partitions=32)
-    assert a == b
-    assert len(a) > 0
+    sides = []
+    for ceiling in (kg_fused.FUSED_ALIAS_CEILING, len(build_alias_dict()) - 1):
+        monkeypatch.setattr(kg_fused, "FUSED_ALIAS_CEILING", ceiling)
+        a = _triple_set(spark, corpus, num_partitions=2, shuffle_partitions=2)
+        b = _triple_set(spark, corpus, num_partitions=16, shuffle_partitions=32)
+        assert a == b
+        assert len(a) > 0
+        sides.append(a)
+    assert sides[0] == sides[1]
 
 
 def test_parquet_filter_pushdown_and_pruning(spark, sf_dir):

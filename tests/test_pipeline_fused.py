@@ -32,7 +32,7 @@ def _plan_records(caplog):
     return [
         json.loads(r.getMessage())
         for r in caplog.records
-        if r.name == "bertseyeview_spark.pipeline"
+        if r.name == "bertseyeview_spark.plans.kg"
     ]
 
 
@@ -81,7 +81,7 @@ def test_fused_pipeline_resume(spark, corpus, tmp_path_factory):
 
 
 def test_default_run_all_picks_fused(spark, tmp_path, caplog):
-    caplog.set_level(logging.INFO, logger="bertseyeview_spark.pipeline")
+    caplog.set_level(logging.INFO, logger="bertseyeview_spark.plans.kg")
     pages = pages_to_spark(spark, generate_corpus(30, seed=23))
     pipe = KGPipeline(
         spark, str(tmp_path), n_buckets=2, chunk_size=2, rank_iterations=2
@@ -89,7 +89,7 @@ def test_default_run_all_picks_fused(spark, tmp_path, caplog):
     pipe.run_all(pages)
     assert _plan_records(caplog) == [
         {
-            "dispatcher": "KGPipeline.page_local_plan",
+            "dispatcher": "kg.page_local_plan",
             "alias_rows": len(build_alias_dict()),
             "ceiling": kg_fused.FUSED_ALIAS_CEILING,
             "path": "fused",
@@ -112,11 +112,11 @@ def test_above_ceiling_dispatch_matches_fused(
     fused.run_all(pages)
 
     # one row below the default dictionary: the same boundary the
-    # construct_triples_fused guard raises at
+    # dictionary_broadcast guard raises at
     monkeypatch.setattr(
         kg_fused, "FUSED_ALIAS_CEILING", len(build_alias_dict()) - 1
     )
-    caplog.set_level(logging.INFO, logger="bertseyeview_spark.pipeline")
+    caplog.set_level(logging.INFO, logger="bertseyeview_spark.plans.kg")
     modular = KGPipeline(
         spark, str(tmp_path / "mod"), n_buckets=2, chunk_size=2, rank_iterations=2
     )

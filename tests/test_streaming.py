@@ -12,6 +12,9 @@ from bertseyeview_spark.datagen import (
     generate_corpus,
     pages_to_spark,
 )
+from bertseyeview_spark.operators.extract import extract_text
+from bertseyeview_spark.operators.mentions import detect_mentions
+from bertseyeview_spark.plans.kg import modular_page_edges
 from bertseyeview_spark.streaming import incremental as S
 
 
@@ -28,7 +31,9 @@ def test_incremental_ingest_exactly_once(spark, tmp_path):
     S.incremental_kg_ingest(spark, pages_dir, out_dir, alias, kw)
     edges1 = spark.read.parquet(os.path.join(out_dir, "edges_staging"))
     n1 = edges1.count()
-    urls1 = {r["src"] for r in edges1.select("src").distinct().collect()}
+    # the first drop's page urls (relation triples have entity ids as
+    # src, and one triple can come from a page in each drop)
+    urls1 = sorted(pdf.iloc[:30]["url"])
     assert n1 > 0
 
     # rerun with no new data: nothing reprocessed (checkpoint = ledger)
@@ -41,10 +46,26 @@ def test_incremental_ingest_exactly_once(spark, tmp_path):
     edges2 = spark.read.parquet(os.path.join(out_dir, "edges_staging"))
     assert edges2.count() > n1
     # no duplicated first-batch edges
-    first_batch_again = edges2.where(F.col("src").isin(list(urls1)[:5])).groupBy(
+    first_batch_again = edges2.where(F.col("src").isin(urls1[:5])).groupBy(
         "src", "rel", "dst"
     ).count().where(F.col("count") > 1)
     assert first_batch_again.count() == 0
+
+    # the staged edges are the batch page-local builder's over all 60
+    # pages, relation triples included
+    ext = extract_text(pages_to_spark(spark, pdf))
+    batch, linked = modular_page_edges(
+        ext,
+        detect_mentions(ext, list(corpus.alias_dict["alias"]), spark),
+        alias,
+        kw,
+        with_origin=False,
+    )
+    want = {tuple(r) for r in batch.collect()}
+    linked.unpersist()
+    assert {rel for _, rel, _ in want} - {"citing", "contains", "has_named_entity"}
+    got = {tuple(r) for r in edges2.select("src", "rel", "dst").collect()}
+    assert got == want
 
 
 def test_windowed_counts_stream_equals_batch(spark, sf_dir, tmp_path):

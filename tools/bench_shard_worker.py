@@ -41,7 +41,8 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from bertseyeview_spark.plans.kg_fused import construct_triples_fused
+    from bertseyeview_spark.plans.kg import kg_inputs
+    from bertseyeview_spark.plans.kg_fused import dictionary_broadcast, fused_page_edges
 
     spark = (
         SparkSession.builder.master("local[1]")
@@ -69,28 +70,22 @@ def main() -> int:
     # processing (the same reason launch_wall is excluded).
     from bertseyeview_spark.datagen import generate_corpus, pages_to_spark
 
+    alias_dict, _, keywords = kg_inputs(spark)
+    dictionary = dictionary_broadcast(
+        spark, alias_dict, keywords, ner_scorer_layers=ner_layers
+    )
     warm = pages_to_spark(spark, generate_corpus(200, seed=1))
-    construct_triples_fused(
-        spark,
-        warm,
-        drop_dangling_citations=False,
-        canonicalize=False,
-        ner_scorer_layers=ner_layers,
-        with_origin=True,
-    ).write.format("noop").mode("overwrite").save()
+    fused_page_edges(warm, dictionary, with_origin=True).write.format(
+        "noop"
+    ).mode("overwrite").save()
 
     pages = spark.read.parquet(corpus_path).where(
         F.col("bucket").isin(shard_ids)
     )
     # page-local output (with_origin) so the triple multiset is
     # sharding-invariant: dedup scope is one page, not one shard
-    triples = construct_triples_fused(
-        spark,
-        pages,
-        drop_dangling_citations=False,
-        canonicalize=False,
-        ner_scorer_layers=ner_layers,
-        with_origin=True,
+    triples = fused_page_edges(pages, dictionary, with_origin=True).toDF(
+        "subj", "pred", "obj", "origin_url"
     )
     hash_agg = [
         F.count("*").alias("n"),

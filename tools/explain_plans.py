@@ -89,6 +89,7 @@ QUERIES = [
     ("scc", "ColorSCC peel: per prop round ONE color-edge equi-join + grouped min (monotone label relaxation); backward membership = bfs-style frontier joins filtered to the root's color class; state O(V), never reachability sets"),
     ("text_chunking_bpe", "one batched Arrow encode stage (merges broadcast via closure) feeding the same zero-shuffle closed-form chunk grid as text_chunking"),
     ("crawl_discovery", "canonicalization fused into each scan; union dedup = ONE groupBy on the canonical url; robots gate = one host equi-join (rules broadcast); naming = salted two-phase top-k joined back"),
+    ("kg_construct_triples", "construct_triples picks the fused page-local plan at this dictionary size, from the same Arrow pull of the dictionary it broadcasts (no extra job): ONE MapInPandas over the pages emits the page-local edges, Null filter + one (src, rel, dst) dedup; the canonical remap is two broadcast left joins + dedup; the dangling-citation filter is ONE left join against the distinct page urls"),
 ]
 
 
